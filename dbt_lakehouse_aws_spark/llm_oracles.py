@@ -1,8 +1,8 @@
 """Shared DuckDB oracle-SQL builders for the LLM query family.
 
 LEAF module (depends only on ``llmops.dedup``, itself leaf-safe):
-``standard_queries``, ``queries_llm``, and the staged files all
-import these, and a leaf is the only import topology that survives
+``standard_queries``, ``queries_llm`` and the ``queries_r*`` modules
+all import these, and a leaf is the only import topology that survives
 every entry order — a builder living in ``queries_llm`` deadlocks
 any entry path that touches ``queries_llm`` before
 ``standard_queries`` finishes executing (observed: staged_r8's

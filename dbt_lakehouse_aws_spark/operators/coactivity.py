@@ -11,10 +11,10 @@ where wedge enumeration costs 67M (triangles, even oriented) / 400M
 (common-neighbor) row scans for no extra signal; at ≥3 the graph is
 sparse at every SF and stays non-empty at sf0.001 (measured,
 PERF.md). Orientation still guards the HUB case — probed separately
-at a 100k-degree hub (scale_probe9).
+at a 100k-degree hub (PERF.md, probe #9).
 
-Lives in a leaf module so query modules (queries_r5/r6/r7, staged_
-r8) can all share it without circular imports through
+Lives in a leaf module so query modules (queries_r5 .. queries_r10)
+can all share it without circular imports through
 ``standard_queries``.
 """
 
@@ -82,20 +82,23 @@ def _packed_user_slots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (user_id, slot) rows with the (event_type, hour) slot
     packed into ONE long join key (guide §2.3 "narrower types" /
     "shuffle keys and metadata"): ``slot = eid * 2^32 +
-    unix_seconds(hour)`` where ``eid`` is a dense 1-based rank of the
-    handful of distinct event types (a row_number over ≤ tens of
-    rows — the single-partition window is metadata-sized). The
-    packing is an exact bijection from (event_type, hr): eid < 2^20
-    and hour-truncated epoch seconds < 2^31 for any in-range
-    timestamp, so distinct counts, slot partitions, and slot
-    equi-join matches are IDENTICAL to the two-column form — while
-    the distinct and the self-join shuffle 16-byte rows instead of
-    string+timestamp and probe one long key. Measured (sf0.1, warm):
+    unix_seconds(hour)`` where ``eid`` is the 1-based position of the
+    event type in the sorted set of distinct types. The ids come from
+    one scalar aggregate (``sort_array(collect_set)``) and a
+    ``posexplode``. Do not use a global ``row_number`` window here: it
+    is a single-partition exchange, and the registry plan lint misses
+    it in queries that checkpoint downstream. The packing is an exact
+    bijection from (event_type, hr): eid < 2^20 and hour-truncated
+    epoch seconds < 2^31 for any in-range timestamp, so distinct
+    counts, slot partitions, and slot equi-join matches are IDENTICAL
+    to the two-column form — while the distinct and the self-join
+    shuffle 16-byte rows instead of string+timestamp and probe one
+    long key. Measured (sf0.1, warm):
     the shared>=3 edge build 4.0 s → 2.3 s, same 137,910 edges."""
     ev = T(spark, sf_dir, "events")
-    et = ev.select("event_type").distinct().withColumn(
-        "_eid", F.row_number().over(Window.orderBy("event_type"))
-    )
+    et = ev.agg(F.sort_array(F.collect_set("event_type")).alias("_types")).select(
+        F.posexplode("_types").alias("_pos", "event_type")
+    ).select("event_type", (F.col("_pos") + 1).alias("_eid"))
     return (
         ev.select("user_id", "event_type", F.date_trunc("hour", F.col("ts")).alias("hr"))
         .join(F.broadcast(et), "event_type")

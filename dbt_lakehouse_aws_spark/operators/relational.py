@@ -210,7 +210,7 @@ def zorder_key(*cols: Column | str, bits: int = 16) -> Column:
     interleaved columns at once, and multi-dimensional predicates
     prune storage the way one-dimensional sort only lets the leading
     column prune (Delta/Iceberg OPTIMIZE ZORDER semantics; measured
-    in scripts/scale_probe24_zorder.py).
+    in PERF.md, probe #24).
 
     Inputs must be non-negative integers < 2**bits (bucket/rank/
     quantize upstream — ntile_scalable or a fixed grid both work);

@@ -54,9 +54,14 @@ def grid_proximity_pairs(
     pairs by the unique direction that maps cell(a) to cell(b), then
     least/greatest), so the 9× left replication drops to 5× and the
     de-duplicating ``distinct`` — a full shuffle of every candidate
-    pair — disappears. Output is bit-identical to the 3×3 form
-    (measured symdiff 0 at sf0.1; 0.86 s → 0.44 s on the 544k-pair
-    DBSCAN feed)."""
+    pair — disappears. For unique ids the output is bit-identical to
+    the 3×3 form (measured symdiff 0 at sf0.1; 0.86 s → 0.44 s on the
+    544k-pair DBSCAN feed).
+
+    Precondition: ``id_col`` is unique. It is not checked (that would
+    cost a Spark job per call), and nothing de-duplicates: a repeated
+    row yields one pair row per copy, and an id whose copies sit in
+    neighboring cells pairs with itself (``id_a == id_b``)."""
     cell_x = F.floor(F.col(x_col) / radius).cast("long")
     cell_y = F.floor(F.col(y_col) / radius).cast("long")
     home = df.select(

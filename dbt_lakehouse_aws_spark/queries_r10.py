@@ -76,7 +76,18 @@ def closeness_sketch_users_events(
     luck. The oracle pins the EXACT side (node count + integer
     harmonic mass from the 3-shell unroll) and the bound booleans;
     the estimates themselves are engine-specific, exactly like the
-    HLL/KMV error-bound rows."""
+    HLL/KMV error-bound rows.
+
+    The per-node bound has only ~5 points of headroom (worst node
+    10.2% vs the 15% bound at sf1.0, raw-estimator regime at m=512).
+    The estimates are deterministic per dataset, so a new scale factor
+    can cross the bound without any run-to-run flake. Before gating a
+    new scale factor, re-measure on it: run this query with the
+    ``node_ok`` share and the worst per-node relative error
+    ``|est3 - n_reached| / n_reached`` selected alongside, and gate it
+    only if every node error stays under 15% (so ``_share_ok`` is 1.0)
+    and the total error under 10%. Record the measurement in PERF.md.
+    Never widen the bound to pass."""
     from dbt_lakehouse_aws_spark.operators.graph import (
         bounded_closeness,
         hyperball_closeness,

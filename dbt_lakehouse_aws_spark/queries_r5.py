@@ -436,7 +436,7 @@ def containment_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (common-neighbor) row scans for no extra signal; at ≥3 the graph
 #: is sparse at every SF and stays non-empty at sf0.001 (measured,
 #: PERF.md). Orientation still guards the HUB case — that claim is
-#: probed separately at a 100k-degree hub (scale_probe9).
+#: probed separately at a 100k-degree hub (PERF.md, probe #9).
 from dbt_lakehouse_aws_spark.operators.coactivity import (  # noqa: E402
     coactivity_edges as _coactivity_edges,
     coactivity_edges_sql as _coactivity_edges_sql,

@@ -9,7 +9,7 @@ participate in ``queries()`` / ``oracle_sql()`` and the
 entry-contract / plan-lint suites like any other query. Every query
 was oracle-verified at sf0.001 AND sf0.01, plan-linted, perf-audited
 at sf0.1, and checked under a vanilla ANSI session during round 5
-BEFORE promotion (scripts/check_staged.py, check_staged_vanilla.py).
+BEFORE promotion.
 """
 
 from __future__ import annotations

@@ -13,9 +13,8 @@ registration carries its final oracle. ``standard_queries`` imports
 this module before it builds the driver window, exactly like
 queries_r5/r6. Every entry was oracle-verified at sf0.001 AND
 sf0.01, vanilla-ANSI checked, plan-linted, sf0.1-timed, and
-sf1.0-audited under the 240 s watchdog while in staging
-(scripts/check_staged.py, check_staged_vanilla.py,
-bench_sf1_staged.py) BEFORE this promotion.
+sf1.0-audited under the 240 s watchdog while in staging BEFORE
+this promotion.
 """
 
 from __future__ import annotations

@@ -12,8 +12,7 @@ decorator and are appended to ``standard_queries._REGISTRY`` by the
 loop at the END of this file, exactly like queries_r5/r6/r7. Every
 entry was oracle-verified at sf0.001 AND sf0.01, vanilla-ANSI
 checked, plan-linted, sf0.1-timed, and sf1.0-audited under the 240 s
-watchdog while in staging (scripts/check_staged.py,
-check_staged_vanilla.py, bench_sf1_staged.py) BEFORE this promotion;
+watchdog while in staging BEFORE this promotion;
 the four moved-up rows passed the same four gates this round.
 """
 

@@ -5607,41 +5607,13 @@ def seasonal_weekday_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The driver's CORRECTNESS gate verifies the FIRST 50 entries of
-# queries() each round (row-count + schema + value-hash vs DuckDB at
-# sf0.01). Rounds 1+2 cumulatively checked 97 of the registered
-# queries; round 3's window = the two round-2 red rows (oracle-side
-# HUGEINT cast, now fixed — re-verify to green) + every value-oracled
-# query that has never had a driver row (45, including everything
-# registered this round) + 3 of the 7 never-checked rows-only entries.
-# The 4 deferred rows-only entries each have a value-oracled sibling
-# exercising the same code path *inside* this window
-# (pca_project_embeddings→pca_orders_features,
-# kmeans_cluster_sizes→kmeans_orders_wellsep,
-# approx_distinct_users→hll_user_rollup HLL-sketch family,
-# bpe_tokenize_docs→bpe_merge_table) and lead round 4's queue.
-# Everything else keeps registration order behind them and stays
-# covered by the in-repo sf0.001 oracle replica
-# (tests/test_entry_contract.py, which runs ALL queries every pytest
-# session regardless of this ordering).
-
-# Driver-window rotation ledger (ROUND* lists, DRIVER_WINDOW) — moved
-# to rotation.py at the round-7 monolith split; re-exported here so
-# callers keep reading standard_queries.DRIVER_WINDOW.
-from dbt_lakehouse_aws_spark.rotation import (  # noqa: E402,F401
-    DRIVER_WINDOW,
-    ROUND3_NEVER_CHECKED,
-    ROUND3_REVERIFY_RED,
-    ROUND3_ROWS_ONLY,
-    ROUND4_NEW,
-    ROUND4_QUEUE,
-    ROUND5_BACKFILL,
-    ROUND5_NEW,
-    ROUND5_QUEUE,
-    ROUND6_BACKFILL_PLAN,
-    ROUND6_WINDOW,
-    ROUND7_WINDOW,
-    ROUND8_WINDOW,
-)
+# queries() (row-count + schema + value-hash vs DuckDB at sf0.01);
+# DRIVER_WINDOW names them. Everything else keeps registration order
+# behind them and stays covered by the in-repo sf0.001 oracle replica
+# (tests/test_entry_contract.py, which runs ALL queries).
+# The driver window lives in rotation.py; re-exported here so callers
+# keep reading standard_queries.DRIVER_WINDOW.
+from dbt_lakehouse_aws_spark.rotation import DRIVER_WINDOW  # noqa: E402
 
 # round-5 promotions registered via their own module (they lived in
 # staging while the round-4 window was frozen) — imported here, before

@@ -872,6 +872,22 @@ def test_grid_proximity_pairs_hand_points(spark):
     }
     assert got == {(1, 2): 100, (2, 3): 1, (2, 4): 82, (3, 4): 85, (5, 6): 25}
 
+    # Ids must be unique; nothing de-duplicates. A repeated row yields
+    # one pair row per copy, and one id on both sides of a cell border
+    # pairs with itself.
+    dup = [
+        (7, 2000, 2000),
+        (7, 2000, 2000),
+        (8, 2001, 2000),
+        (9, 3008, 3000),
+        (9, 3012, 3000),
+    ]
+    rows = grid_proximity_pairs(
+        spark.createDataFrame(dup, "id long, x long, y long"),
+        id_col="id", x_col="x", y_col="y", radius=10,
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [(7, 8, 1), (7, 8, 1), (9, 9, 16)]
+
 
 def test_cusum_numeric_key(spark):
     """CUSUM works with a non-string key column (output schema

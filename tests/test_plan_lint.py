@@ -118,3 +118,13 @@ def test_every_registered_query_plan_is_scalable(spark, sf_dir):
         if rep.errors:
             failures[name] = rep.errors
     assert not failures, failures
+
+
+def test_coactivity_slot_ids_have_no_single_partition_window(spark, sf_dir):
+    """The capped co-activity constructor numbers event types with a
+    scalar aggregate, not a global ``row_number`` window. The capped
+    graph queries checkpoint downstream of it, which hides such a
+    funnel from the registry sweep above, so lint the constructor."""
+    from dbt_lakehouse_aws_spark.operators.coactivity import coactivity_weighted_capped
+
+    assert_scalable(coactivity_weighted_capped(spark, sf_dir))

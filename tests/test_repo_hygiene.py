@@ -1,8 +1,12 @@
 """Repo-hygiene gates (VERDICT r5 item 6): source files must stay
 below the monolith threshold so promotion rounds keep dissolving the
-query registry into domain modules instead of re-growing one file.
+query registry into domain modules instead of re-growing one file,
+and no caller may import a package module that no longer exists.
 """
 
+import ast
+import importlib
+import importlib.util
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "dbt_lakehouse_aws_spark"
@@ -22,3 +26,49 @@ def test_no_source_monoliths():
         f"files above {MAX_SOURCE_LINES} lines — split into domain "
         f"modules (see queries_r6.py / queries_llm.py): {offenders}"
     )
+
+
+def _package_imports(path: pathlib.Path) -> list[tuple[str, str | None]]:
+    """``(module, name)`` for every package import in ``path`` at any
+    depth: ``import pkg.mod`` gives ``(pkg.mod, None)`` and ``from
+    pkg.mod import x`` gives ``(pkg.mod, x)``."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            found += [(a.name, None) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+            found += [(node.module, a.name) for a in node.names]
+    return [(m, n) for m, n in found if m.split(".")[0] == PKG.name]
+
+
+def _resolves(module: str, name: str | None) -> bool:
+    try:
+        spec = importlib.util.find_spec(module)
+    except ModuleNotFoundError:  # a parent package is missing
+        return False
+    if spec is None:
+        return False
+    if name is None or name == "*" or spec.submodule_search_locations is None:
+        return True
+    # ``from package import x``: x is a submodule or a package attribute
+    return importlib.util.find_spec(f"{module}.{name}") is not None or hasattr(
+        importlib.import_module(module), name
+    )
+
+
+def test_no_dangling_package_imports():
+    """Entry points, scripts, the benchmark and the tests import only
+    package modules that exist, so deleting a module cannot leave a
+    caller behind (e.g. a script still importing a removed query
+    module). Static: no Spark session, no query built."""
+    root = PKG.parent
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in ("scripts", "perfbench", "tests"):
+        files += sorted((root / d).glob("*.py"))
+    missing = {}
+    for f in files:
+        bad = [f"{m}:{n}" if n else m for m, n in _package_imports(f) if not _resolves(m, n)]
+        if bad:
+            missing[str(f.relative_to(root))] = bad
+    assert not missing, f"imports of missing package modules: {missing}"
