@@ -5,9 +5,10 @@
 
 reads the raw CSV/TSV ingest tree (the reference's S3 layout:
 ``<table>/year=YYYY/month=M/day=D/<file>``), applies each source's
-snapshot semantics, runs the full SGP DAG, and writes the marts as
-parquet — the equivalent of the reference's ``dbt build``
-(SURVEY §3.1).
+snapshot semantics, runs the full SGP DAG under its one lineage
+policy (shared models localCheckpointed, the rest lazy; see
+``plans/graph.py``), and writes the marts as parquet — the
+equivalent of the reference's ``dbt build`` (SURVEY §3.1).
 
     python -m dbt_lakehouse_aws_spark serve \
         --marts-dir /lake/marts --league oc --limit 20 --search trout
@@ -67,7 +68,7 @@ def cmd_run(args) -> int:
     spark = get_spark("sgp-run")
     cfg = LEAGUES[args.league]
     sources = load_raw_sources(spark, args.raw_dir)
-    out = run_pipeline(cfg, sources, materialize=args.materialize or "checkpoint")
+    out = run_pipeline(cfg, sources)
     for mart in MART_OUTPUTS:
         path = f"{args.out_dir}/{args.league}/{mart}"
         out[mart].write.mode("overwrite").parquet(path)
@@ -129,9 +130,6 @@ def main(argv: list[str] | None = None) -> int:
     runp.add_argument("--raw-dir", required=True)
     runp.add_argument("--out-dir", required=True)
     runp.add_argument("--league", choices=("oc", "50s"), default="oc")
-    runp.add_argument(
-        "--materialize", choices=("checkpoint", "cache", "table"), default=None
-    )
     runp.set_defaults(fn=cmd_run)
 
     servep = sub.add_parser("serve", help="query the rankings mart")

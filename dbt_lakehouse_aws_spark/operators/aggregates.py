@@ -122,22 +122,16 @@ def percentiles(
     value_col: str | Column,
     ps: Sequence[float],
     *,
-    exact: bool = True,
     prefix: str = "p",
 ) -> DataFrame:
-    """Per-group percentiles (A8, mart_sgp_percentiles.sql:20-34).
+    """Per-group exact percentiles (A8, mart_sgp_percentiles.sql:20-34).
 
-    ``exact=False`` uses the approx sketch (mergeable, single-pass,
-    the 100 TB path); ``exact=True`` matches the DuckDB oracle's
-    ``quantile_cont`` interpolation for correctness checks —
-    Trino's qdigest vs Spark's Greenwald-Khanna would otherwise
-    differ within sketch error (SURVEY.md §4 item 4).
+    Exact ``percentile`` matches the DuckDB oracle's ``quantile_cont``
+    interpolation; a sketch (Trino's qdigest, Spark's Greenwald-Khanna)
+    would differ from it within sketch error (SURVEY.md §4 item 4).
     """
     vc = F.col(value_col) if isinstance(value_col, str) else value_col
-    aggs = []
-    for p in ps:
-        fn = F.percentile(vc, F.lit(p)) if exact else F.percentile_approx(vc, F.lit(p))
-        aggs.append(fn.alias(f"{prefix}{int(p * 100)}"))
+    aggs = [F.percentile(vc, F.lit(p)).alias(f"{prefix}{int(p * 100)}") for p in ps]
     return df.groupBy(*group_cols).agg(*aggs)
 
 

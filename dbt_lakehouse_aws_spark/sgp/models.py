@@ -159,7 +159,7 @@ def mart_sgp_factors(factors: DataFrame) -> DataFrame:
     )
 
 
-def mart_sgp_percentiles(standings: DataFrame, *, exact: bool = True) -> DataFrame:
+def mart_sgp_percentiles(standings: DataFrame) -> DataFrame:
     """p80/p90 per (file, category) with lower-is-better sign flip
     (A8; mart_sgp_percentiles.sql:7-34)."""
     stack_args = []
@@ -171,7 +171,7 @@ def mart_sgp_percentiles(standings: DataFrame, *, exact: bool = True) -> DataFra
         "_filename",
         F.expr(f"stack({len(CATEGORIES)}, {', '.join(stack_args)}) as (category, val)"),
     )
-    pct = percentiles(long, ["_filename", "category"], "val", [0.8, 0.9], exact=exact)
+    pct = percentiles(long, ["_filename", "category"], "val", [0.8, 0.9])
     unflip = F.col("category").isin([c.upper() for c in ASC_CATEGORIES])
     return pct.select(
         "_filename",

@@ -120,13 +120,7 @@ def build_pipeline(cfg: LeagueConfig, sources: dict[str, DataFrame]) -> ModelGra
     return g
 
 
-def run_pipeline(
-    cfg: LeagueConfig,
-    sources: dict[str, DataFrame],
-    *,
-    materialize: str | None = "checkpoint",
-) -> dict[str, DataFrame]:
-    """Default materialization is ``checkpoint``: on this 20-model DAG
-    the flat plans it keeps are 2-3× faster end-to-end than ``cache``
-    (PERF.md) while computing identical results."""
-    return build_pipeline(cfg, sources).run(materialize=materialize)
+def run_pipeline(cfg: LeagueConfig, sources: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """Build and run the SGP DAG; shared models are localCheckpointed
+    and the rest stay lazy (the one policy of :meth:`ModelGraph.run`)."""
+    return build_pipeline(cfg, sources).run()

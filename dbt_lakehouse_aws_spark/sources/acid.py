@@ -635,14 +635,11 @@ class AcidTable:
             return scan(vectored, True)
         return scan(clean, False).unionByName(scan(vectored, True))
 
-    # a posix/local footer read is ~1-2 ms, so a serial driver loop
-    # beats one Spark job's scheduling overhead (~0.5-0.7 s measured)
-    # well past 100 files; on object stores each footer is a
-    # ~50-100 ms RTT, so keep the crossover tunable — the distributed
-    # path takes over for bulk commits either way
-    _DRIVER_STATS_MAX_FILES = int(
-        os.environ.get("SPARK_GRAFT_DRIVER_STATS_MAX_FILES", "128")
-    )
+    # commits rely on os.link, so tables are POSIX-local: a footer read
+    # is ~1-2 ms, and a serial driver loop beats one Spark job's
+    # scheduling overhead (~0.5-0.7 s measured) well past 100 files;
+    # the distributed path takes over for bulk commits
+    _DRIVER_STATS_MAX_FILES = 128
 
     def _stats_for(self, files: Sequence[str], schema: StructType) -> dict[str, dict[str, list]]:
         cols = [f.name for f in schema.fields if f.dataType.simpleString() in _STATS_TYPES]

@@ -311,10 +311,9 @@ def a7_pivot_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a8_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (A8; reference mart_sgp_percentiles.sql:20-34
-    uses approx_percentile — exact here for cross-engine parity,
-    percentile_approx offered for the 100 TB path)."""
+    uses approx_percentile — exact here for cross-engine parity)."""
     ev = T(spark, sf_dir, "events")
-    out = percentiles(ev, ["event_type"], "value", [0.8, 0.9], exact=True)
+    out = percentiles(ev, ["event_type"], "value", [0.8, 0.9])
     return out.select(
         "event_type", F.round("p80", 6).alias("p80"), F.round("p90", 6).alias("p90")
     )

@@ -1,8 +1,7 @@
 """ACID table layer (sources/acid.py): transactional semantics the
 reference gets from Iceberg (reference dbt_project.yml:38-51) —
 atomic commits, snapshot isolation, time travel, copy-on-write
-MERGE/DELETE with file-level pruning, vacuum, and the ModelGraph
-incremental materialization built on top."""
+MERGE/DELETE with file-level pruning and vacuum."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_lakehouse_aws_spark.plans.graph import ModelGraph
 from dbt_lakehouse_aws_spark.sources.acid import (
     AcidTable,
     CommitConflict,
@@ -174,37 +172,6 @@ def test_empty_table_read(spark, tmp_path):
     t.delete("id = 1")
     assert t.read().count() == 0
     assert t.read().columns == ["id", "grp", "value"]
-
-
-def test_modelgraph_incremental_materialization(spark, tmp_path):
-    """Two DAG runs: full refresh, then a delta run that MERGEs into
-    the existing table instead of rewriting it (dbt incremental)."""
-    wh = str(tmp_path / "wh")
-
-    def build(source_rows):
-        g = ModelGraph()
-        g.add_source("raw", _mkdf(spark, source_rows))
-
-        @g.model
-        def scored(raw):
-            return raw.withColumn("value", F.col("value") * 10)
-
-        return g
-
-    first = [(i, "g", float(i)) for i in range(10)]
-    g1 = build(first)
-    out1 = g1.run(materialize="incremental", warehouse_dir=wh, unique_keys={"scored": ["id"]})
-    assert out1["scored"].count() == 10
-
-    delta = [(5, "g", 5.0), (100, "new", 1.0)]  # one update, one insert
-    g2 = build(delta)
-    out2 = g2.run(materialize="incremental", warehouse_dir=wh, unique_keys={"scored": ["id"]})
-    got = {r["id"]: r["value"] for r in out2["scored"].collect()}
-    assert len(got) == 11 and got[5] == 50.0 and got[100] == 10.0 and got[9] == 90.0
-
-    table = AcidTable(spark, os.path.join(wh, "scored"))
-    assert [s.version for s in table.history()] == [0, 1]
-    assert table.snapshot().operation.startswith("MERGE")
 
 
 def test_read_time_file_pruning(spark, tmp_path):

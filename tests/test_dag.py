@@ -21,7 +21,7 @@ def _graph(spark):
     def mart(stage):
         return stage.agg(F.sum("v2").alias("total"))
 
-    # a second consumer of `stage` → fan_out=2 → cache candidate
+    # a second consumer of `stage` → fan_out=2 → lineage cut
     @g.model(name="mart2")
     def mart2(stage):
         return stage.agg(F.max("v2").alias("mx"))
@@ -42,12 +42,25 @@ def test_run_lazy(spark):
     assert out["mart2"].collect()[0]["mx"] == 8.0
 
 
-def test_run_materialize_table(spark, tmp_path):
-    out = _graph(spark).run(materialize="table", warehouse_dir=str(tmp_path))
-    assert out["mart"].collect()[0]["total"] == 12.0
-    # intermediate models exist as parquet artifacts (every-model-a-table)
-    assert (tmp_path / "stage").exists()
-    assert (tmp_path / "mart").exists()
+def _logical(df):
+    return df._jdf.queryExecution().logical()
+
+
+def test_run_cuts_lineage_at_shared_models_only(spark):
+    """The one lineage policy: the shared ``stage`` comes back as a
+    bare checkpoint relation, its consumers aggregate straight over
+    it, and the source is returned untouched."""
+    g = _graph(spark)
+    raw = g._models["raw"]()
+    out = g.run()
+    stage = _logical(out["stage"])
+    assert stage.getClass().getSimpleName() == "LogicalRDD"
+    assert stage.children().isEmpty()  # no Project over raw
+    for mart in ("mart", "mart2"):
+        plan = _logical(out[mart])
+        assert plan.getClass().getSimpleName() == "Aggregate"
+        assert plan.children().size() == 1 and plan.children().head().equals(stage)
+    assert out["raw"] is raw
 
 
 def test_unresolved_ref_raises(spark):

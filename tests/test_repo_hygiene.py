@@ -72,3 +72,61 @@ def test_no_dangling_package_imports():
         if bad:
             missing[str(f.relative_to(root))] = bad
     assert not missing, f"imports of missing package modules: {missing}"
+
+
+#: the deployment settings ``session.py`` reads; every other tunable is
+#: a constant in code, so a run's behaviour never hangs on a stray
+#: environment variable
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_MASTER",
+    "SPARK_GRAFT_WAREHOUSE",
+    "SPARK_GRAFT_DRIVER_MEM",
+}
+
+
+def _env_reads(path: pathlib.Path) -> list[str]:
+    """Keys read through ``os.environ.get(k)``, ``os.environ[k]`` or
+    ``os.getenv(k)``; a key that is not a string literal reads as
+    ``<dynamic>``."""
+
+    def is_os_environ(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    def key(node) -> str:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return "<dynamic>"
+
+    keys = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.args:
+            f = node.func
+            env_get = f.attr == "get" and is_os_environ(f.value)
+            getenv = f.attr == "getenv" and isinstance(f.value, ast.Name) and f.value.id == "os"
+            if env_get or getenv:
+                keys.append(key(node.args[0]))
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and is_os_environ(node.value)
+        ):
+            keys.append(key(node.slice))
+    return keys
+
+
+def test_package_reads_only_deployment_env_vars():
+    """The package reads no environment variable beyond the deployment
+    settings in ``session.py``: an env knob is an untested option.
+    Static: no Spark session."""
+    extra = {}
+    for p in sorted(PKG.rglob("*.py")):
+        bad = sorted(set(_env_reads(p)) - DEPLOYMENT_ENV)
+        if bad:
+            extra[str(p.relative_to(PKG))] = bad
+    assert not extra, f"environment reads outside {sorted(DEPLOYMENT_ENV)}: {extra}"

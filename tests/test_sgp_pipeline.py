@@ -172,7 +172,7 @@ def test_fifties_league_parameterization(spark, fixture_root, expected):
         ),
         "rosters": latest_snapshot(read_csv_source(spark, f"{r}/fangraphs_rosters")),
     }
-    out = run_pipeline(FIFTIES, sources, materialize="cache")
+    out = run_pipeline(FIFTIES, sources)
     mart = out["overall_rankings"].toPandas()
 
     src = sgp_oracle.load_sources(fixture_root)
