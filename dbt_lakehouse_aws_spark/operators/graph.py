@@ -24,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: keys per frame that hyperball_closeness's register reduce yields, so
+#: its final yield adds one chunk of state beside the accumulator
+#: (4096 keys x 512 B = 2 MB at lg_k=9), never a copy of the whole
+#: partition's registers
+_HLL_CHUNK_KEYS = 4096
+
 
 def pagerank(
     edges: DataFrame,
@@ -940,11 +946,14 @@ def hyperball_closeness(
                 for k, r in zip(keys_s[bounds], red):
                     prev = acc.get(int(k))
                     acc[int(k)] = r if prev is None else np.maximum(prev, r)
-            if acc:
-                regmat = np.stack(list(acc.values()))
+            # each chunk leaves the accumulator as it is yielded
+            ks = list(acc)
+            for i in range(0, len(ks), _HLL_CHUNK_KEYS):
+                part = ks[i : i + _HLL_CHUNK_KEYS]
+                regmat = np.stack([acc.pop(k) for k in part])
                 yield pd.DataFrame(
                     {
-                        "_ix": list(acc.keys()),
+                        "_ix": part,
                         "_m": [r.tobytes() for r in regmat],
                         "_est": _estimate(regmat, np),
                     }

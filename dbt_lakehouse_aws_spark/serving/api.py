@@ -16,6 +16,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_lakehouse_aws_spark.localframe import local_frame
+
 #: the 26-column serving projection (app/app.py:419-426)
 RANKINGS_COLUMNS = (
     "id", "rank", "name", "team", "pos", "position", "value", "adp",
@@ -215,6 +217,7 @@ class DurableDraftBoard:
         "player_id string, drafted boolean, drafted_at string, "
         "player_name string, drafted_to_my_team boolean"
     )
+    _COLUMNS = tuple(c.split()[0] for c in _SCHEMA.split(", "))
 
     def __init__(self, spark, path: str):
         from dbt_lakehouse_aws_spark.sources.acid import AcidTable
@@ -223,7 +226,12 @@ class DurableDraftBoard:
         self.table = AcidTable(spark, path)
 
     def _item_df(self, item: dict) -> DataFrame:
-        return self.spark.createDataFrame([item], schema=self._SCHEMA)
+        # an Arrow-backed LocalRelation, not a pickled-row RDD: the
+        # MERGE's bounds check and rewrite read it without a Python
+        # worker (localframe.py)
+        return local_frame(
+            self.spark, [tuple(item[c] for c in self._COLUMNS)], self._SCHEMA
+        )
 
     def put(self, player_id: str, player_name: str, *, my_team: bool = False) -> None:
         item = {

@@ -34,10 +34,12 @@ first principles:
   to rewrite. At 100 TB with date- or key-clustered files, a daily
   delta touches a sliver of the table — the whole point of the
   format. Untouched files carry into the new manifest by reference.
+  DELETE and ``replace_where`` rewrite the files holding matching
+  rows the same way; there is no merge-on-read delete.
 
-The statistics are harvested from parquet footers via pyarrow (no
-Spark job), mirroring how Iceberg manifests carry per-file column
-bounds.
+The statistics are harvested from parquet footers via pyarrow in a
+driver loop (no Spark job), mirroring how Iceberg manifests carry
+per-file column bounds.
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ import os
 import re
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -63,15 +65,22 @@ _DATA_DIR = "data"
 # totally ordered the same way in parquet stats and in Spark
 _STATS_TYPES = ("int", "bigint", "smallint", "tinyint", "double", "float", "string", "date")
 
+# Log keys of table features this format no longer implements. Older
+# writers recorded the full map on every delta and checkpoint; a table
+# whose replayed map is non-empty would be served wrong (vectored rows
+# come back, writes skip the table's rules), so snapshot() refuses it.
+# Per-file ``__bloom__<col>`` stats entries those writers left are
+# harmless and stay: min/max pruning looks stats up by column name.
+_REMOVED_FEATURES = {
+    "dvs": "deletion vectors",
+    "constraints": "CHECK constraints",
+    "generated": "generated columns",
+    "identity": "identity columns",
+}
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same version first — rebase and retry."""
-
-
-class ConstraintViolation(ValueError):
-    """A write contained rows for which a CHECK constraint evaluated
-    to FALSE (SQL three-valued semantics: NULL passes, as in Delta
-    Lake CHECK constraints)."""
 
 
 @dataclass(frozen=True)
@@ -82,11 +91,7 @@ class Snapshot:
     schema_json: str
     stats: dict[str, dict[str, list]]  # file -> col -> [min, max]
     parent: int | None
-    constraints: dict[str, str] = field(default_factory=dict)  # name -> CHECK expr
     renames: dict[str, str] = field(default_factory=dict)  # physical col -> logical col
-    generated: dict[str, str] = field(default_factory=dict)  # logical col -> expr
-    dvs: dict[str, str] = field(default_factory=dict)  # data file -> deletion-vector ref
-    identity: dict[str, int] = field(default_factory=dict)  # identity col -> next value
 
 
 def _file_stats(path: str, cols: Sequence[str]) -> dict[str, list]:
@@ -127,57 +132,14 @@ def _json_safe(v) -> bool:
     return isinstance(v, (int, str, bool))
 
 
-_BLOOM_BITS = 1 << 15  # 32768 bits = 4 KB per (file, column)
-_BLOOM_K = 5
-
-
-def _bloom_hashes(value) -> tuple[int, int]:
-    import hashlib
-
-    digest = hashlib.blake2b(repr(value).encode(), digest_size=16).digest()
-    return int.from_bytes(digest[:8], "little"), int.from_bytes(digest[8:], "little") | 1
-
-
-def _bloom_build(values) -> str:
-    """Base64 Bloom bitmap over ``values`` (double hashing, k probes)."""
-    import base64
-
-    bits = 0
-    for v in values:
-        h1, h2 = _bloom_hashes(v)
-        for i in range(_BLOOM_K):
-            bits |= 1 << ((h1 + i * h2) % _BLOOM_BITS)
-    return base64.b64encode(bits.to_bytes(_BLOOM_BITS // 8, "little")).decode()
-
-
-def _bloom_might_contain(encoded: str, value) -> bool:
-    import base64
-
-    bits = int.from_bytes(base64.b64decode(encoded), "little")
-    h1, h2 = _bloom_hashes(value)
-    return all(bits >> ((h1 + i * h2) % _BLOOM_BITS) & 1 for i in range(_BLOOM_K))
-
-
 class AcidTable:
-    """One transactional table rooted at ``path`` (see module doc).
+    """One transactional table rooted at ``path`` (see module doc)."""
 
-    ``bloom_cols`` opts files written by THIS handle into per-file
-    Bloom filters on the listed columns (4 KB per file·column in the
-    manifest). They close the pruning gap min/max stats leave on
-    tables that are NOT clustered by the merge key: every file's
-    [min, max] spans the whole domain, but each file holds only its
-    shard of keys — the blooms identify the files that can possibly
-    hold a delta's keys without scanning anything.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, *, bloom_cols: Sequence[str] = ()):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.bloom_cols = tuple(bloom_cols)
         self._log = os.path.join(path, _LOG_DIR)
         self._data = os.path.join(path, _DATA_DIR)
-        self._dvdir = os.path.join(path, "dv")
-        self._dv_cache: dict[str, list[list[int]]] = {}
 
     # -- log primitives ---------------------------------------------------
     #
@@ -194,6 +156,11 @@ class AcidTable:
     # file's os.link is the commit point.
 
     CHECKPOINT_EVERY = 10
+
+    #: total attempts of an operation that loses the optimistic commit
+    #: race: the first COMMIT_ATTEMPTS - 1 rebase on CommitConflict,
+    #: the last one propagates it
+    COMMIT_ATTEMPTS = 3
 
     def exists(self) -> bool:
         return os.path.isdir(self._log) and bool(self._versions())
@@ -251,22 +218,16 @@ class AcidTable:
         files: dict[str, dict] = {}
         schema_json = ""
         operation, parent = "", None
-        constraints: dict[str, str] = {}
         renames: dict[str, str] = {}
-        generated: dict[str, str] = {}
-        dvs: dict[str, str] = {}
-        identity: dict[str, int] = {}
+        removed: dict[str, dict] = {k: {} for k in _REMOVED_FEATURES}
         start = 0
         if base:
             cp = self._read_json(f"{base[-1]:020d}.checkpoint.json")
             files = dict(cp["files"])  # file -> stats
             schema_json = cp["schema"]
             operation, parent = cp["operation"], cp.get("parent")
-            constraints = dict(cp.get("constraints", {}))
             renames = dict(cp.get("renames", {}))
-            generated = dict(cp.get("generated", {}))
-            dvs = dict(cp.get("dvs", {}))
-            identity = dict(cp.get("identity", {}))
+            removed = {k: cp.get(k, {}) for k in _REMOVED_FEATURES}
             start = base[-1] + 1
         for i in range(start, v + 1):
             m = self._read_json(f"{i:020d}.json")
@@ -275,12 +236,17 @@ class AcidTable:
             files.update(m.get("add", {}))
             schema_json = m["schema"]
             operation, parent = m["operation"], m.get("parent")
-            # pre-constraint/-rename deltas carry no key: inherit
-            constraints = dict(m.get("constraints", constraints))
+            # pre-rename deltas carry no key: inherit
             renames = dict(m.get("renames", renames))
-            generated = dict(m.get("generated", generated))
-            dvs = dict(m.get("dvs", dvs))
-            identity = dict(m.get("identity", identity))
+            removed = {k: m.get(k, removed[k]) for k in _REMOVED_FEATURES}
+        # a vector annotated one data file; it died with its file
+        removed["dvs"] = {f: r for f, r in removed["dvs"].items() if f in files}
+        used = [name for k, name in _REMOVED_FEATURES.items() if removed[k]]
+        if used:
+            raise ValueError(
+                f"{self.path} version {v} uses {', '.join(used)}, which "
+                "this table format no longer supports"
+            )
         return Snapshot(
             version=v,
             operation=operation,
@@ -288,15 +254,7 @@ class AcidTable:
             schema_json=schema_json,
             stats=files,
             parent=parent,
-            constraints=constraints,
             renames=renames,
-            generated=generated,
-            # a DV is only meaningful for a file the snapshot holds
-            # (`files` is the file->stats DICT here — hashed O(1)
-            # membership, not a list scan, so manifest replay stays
-            # O(n_files + n_dvs) at 100 TB manifest sizes)
-            dvs={f: r for f, r in dvs.items() if f in files},
-            identity=identity,
         )
 
     def history(self) -> list[Snapshot]:
@@ -357,36 +315,19 @@ class AcidTable:
         stats: dict[str, dict[str, list]],
         base_version: int | None,
         txn: tuple[str, int] | None = None,
-        constraints: dict[str, str] | None = None,
         renames: dict[str, str] | None = None,
-        generated: dict[str, str] | None = None,
-        dvs: dict[str, str] | None = None,
-        identity: dict[str, int] | None = None,
     ) -> Snapshot:
         os.makedirs(self._log, exist_ok=True)
         new_version = 0 if base_version is None else base_version + 1
         if base_version is None:
             prev_files: set[str] = set()
             prev_stats: dict[str, dict] = {}
-            prev_constraints: dict[str, str] = {}
             prev_renames: dict[str, str] = {}
-            prev_generated: dict[str, str] = {}
-            prev_dvs: dict[str, str] = {}
-            prev_identity: dict[str, int] = {}
         else:
             prev = self.snapshot(base_version)
             prev_files, prev_stats = set(prev.files), prev.stats
-            prev_constraints = prev.constraints
             prev_renames = prev.renames
-            prev_generated = prev.generated
-            prev_dvs = prev.dvs
-            prev_identity = prev.identity
         new_set = set(files)
-        # DV carry rule: an unchanged file keeps its vector; a removed
-        # file's vector dies with it; new files start clean. Callers
-        # that attach/consume vectors pass the full map explicitly.
-        eff_dvs = dict(prev_dvs if dvs is None else dvs)
-        eff_dvs = {f: r for f, r in eff_dvs.items() if f in new_set}
         delta = {
             "version": new_version,
             "operation": operation,
@@ -397,12 +338,8 @@ class AcidTable:
             "schema": schema_json,
             "parent": base_version,
             # every delta records the FULL map (None = carry forward),
-            # so replay needs no constraint history
-            "constraints": dict(prev_constraints if constraints is None else constraints),
+            # so replay needs no rename history
             "renames": dict(prev_renames if renames is None else renames),
-            "generated": dict(prev_generated if generated is None else generated),
-            "dvs": eff_dvs,
-            "identity": dict(prev_identity if identity is None else identity),
         }
         tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
@@ -431,11 +368,7 @@ class AcidTable:
             "files": snap.stats,  # file -> stats (the full reconstructed map)
             "schema": snap.schema_json,
             "parent": snap.parent,
-            "constraints": snap.constraints,
             "renames": snap.renames,
-            "generated": snap.generated,
-            "dvs": snap.dvs,
-            "identity": snap.identity,
         }
         tmp = os.path.join(self._log, f".cptmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
@@ -443,6 +376,18 @@ class AcidTable:
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, os.path.join(self._log, f"{snap.version:020d}.checkpoint.json"))
+
+    def _with_rebase(self, attempt: Callable[[], Snapshot]) -> Snapshot:
+        """Run ``attempt`` — which reads the latest snapshot and
+        commits on top of it — until it wins the version race, at
+        most COMMIT_ATTEMPTS times; the last CommitConflict
+        propagates (abort, never a stale commit)."""
+        for _ in range(self.COMMIT_ATTEMPTS - 1):
+            try:
+                return attempt()
+            except CommitConflict:
+                continue
+        return attempt()
 
     # -- data-file primitives ---------------------------------------------
 
@@ -473,9 +418,9 @@ class AcidTable:
         """``_write_data_files`` that contributes NO files when the
         frame holds zero rows. Replaces the
         ``keep.limit(1).count() > 0`` pre-probe at the rewrite sites
-        (replace_where / delete / DV delete), which evaluated the
-        rewrite frame TWICE — once for the emptiness check, once for
-        the write (guide §1.2). The row count now comes from the
+        (replace_where / delete), which evaluated the rewrite frame
+        TWICE — once for the emptiness check, once for the write
+        (guide §1.2). The row count now comes from the
         already-written footers (driver metadata reads over a
         bounded, coalesced file set), so the frame is evaluated ONCE;
         the commit outcome is identical — a non-empty write keeps
@@ -493,69 +438,6 @@ class AcidTable:
             os.unlink(os.path.join(self._data, f))
         return []
 
-    # -- deletion vectors ---------------------------------------------------
-    #
-    # Row-level soft deletes (Delta Lake deletion-vector / Iceberg v2
-    # position-delete semantics): DELETE can attach an immutable
-    # sidecar listing deleted ROW POSITIONS instead of rewriting the
-    # data file — O(deleted rows) write IO instead of O(file bytes).
-    # Vectors are stored run-length-encoded ([start, end) ranges) in
-    # ``dv/``, referenced from the manifest per data file, applied on
-    # every read via ``_metadata.row_index`` anti-join, and CONSUMED
-    # by any copy-on-write rewrite of their file (merge, rewrite
-    # deletes, OPTIMIZE) — rewrites always run through the DV-applying
-    # scan, so a vectored row can never resurrect.
-
-    #: above this per-commit deleted-row count the positions no longer
-    #: belong on the driver — the caller should use rewrite mode
-    DV_MAX_POSITIONS = 5_000_000
-
-    def _resolve_dv(self, ref: str) -> str:
-        return ref if os.path.isabs(ref) else os.path.join(self._dvdir, ref)
-
-    @staticmethod
-    def _positions_to_ranges(positions: Sequence[int]) -> list[list[int]]:
-        ranges: list[list[int]] = []
-        for p in sorted(positions):
-            if ranges and p == ranges[-1][1]:
-                ranges[-1][1] = p + 1
-            elif not ranges or p > ranges[-1][1]:
-                ranges.append([p, p + 1])
-        return ranges
-
-    def _write_dv(self, ranges: Sequence[Sequence[int]], version_hint: int) -> str:
-        os.makedirs(self._dvdir, exist_ok=True)
-        name = f"{version_hint:010d}-{uuid.uuid4().hex}.dv.json"
-        tmp = os.path.join(self._dvdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump({"count": int(sum(e - s for s, e in ranges)), "ranges": ranges}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(self._dvdir, name))
-        return name
-
-    def _read_dv(self, ref: str) -> list[list[int]]:
-        """[start, end) deleted-position ranges of one vector.
-        Vectors are immutable once written, so caching by ref is safe."""
-        if ref not in self._dv_cache:
-            with open(self._resolve_dv(ref)) as fh:
-                self._dv_cache[ref] = json.load(fh)["ranges"]
-        return self._dv_cache[ref]
-
-    @staticmethod
-    def _merge_ranges(
-        old: Sequence[Sequence[int]], new: Sequence[Sequence[int]]
-    ) -> list[list[int]]:
-        """Union of two [start, end) range lists (both sorted,
-        internally disjoint) — linear merge, no expansion."""
-        merged: list[list[int]] = []
-        for s, e in sorted([list(r) for r in old] + [list(r) for r in new]):
-            if merged and s <= merged[-1][1]:
-                merged[-1][1] = max(merged[-1][1], e)
-            else:
-                merged.append([s, e])
-        return merged
-
     def _scan_physical(
         self,
         snap: Snapshot,
@@ -563,202 +445,38 @@ class AcidTable:
         schema: StructType | None = None,
         *,
         keep_file_col: str | None = None,
-        keep_pos_col: str | None = None,
     ) -> DataFrame:
         """Physical-name scan of ``files`` (default: all of ``snap``)
-        with the snapshot's deletion vectors applied — the ONE routine
-        every read-side and copy-on-write path goes through, so a
-        vectored row can neither be served nor survive a rewrite.
-
-        Vectors are applied as an anti-join on (file, row position):
-        the position sets are exploded JVM-side from broadcast range
-        literals — O(deleted rows) in the join's build side, never a
-        per-row Python trip. With no vectors on the scanned files the
-        plan is the plain parquet scan, zero overhead."""
+        with the snapshot's explicit schema — the ONE routine every
+        read-side and copy-on-write path goes through.
+        ``keep_file_col`` adds each row's data-file basename, which
+        the rewrite paths map back to manifest entries."""
         if schema is None:
             schema = StructType.fromJson(json.loads(snap.schema_json))
         files = list(snap.files if files is None else files)
-        # copy the field list: StructType.add mutates in place, and
-        # sharing the caller's list would pollute its schema object
-        extra_schema = StructType(list(schema.fields))
-        if keep_file_col:
-            extra_schema = extra_schema.add(keep_file_col, "string")
-        if keep_pos_col:
-            extra_schema = extra_schema.add(keep_pos_col, "long")
         if not files:
-            return self.spark.createDataFrame([], extra_schema)
-
-        fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-
-        def scan(batch: list[str], apply_dv: bool) -> DataFrame:
-            df = self.spark.read.schema(schema).parquet(
-                *[self._resolve(f) for f in batch]
-            )
-            cols = list(df.columns)
+            # copy the field list: StructType.add mutates in place, and
+            # sharing the caller's list would pollute its schema object
+            empty = StructType(list(schema.fields))
             if keep_file_col:
-                df = df.withColumn(keep_file_col, fname)
-                cols.append(keep_file_col)
-            if keep_pos_col:
-                df = df.withColumn(keep_pos_col, F.col("_metadata.row_index"))
-                cols.append(keep_pos_col)
-            if not apply_dv:
-                return df.select(*cols)
-            range_rows = []
-            for f in batch:
-                base = os.path.basename(self._resolve(f))
-                for s, e in self._read_dv(snap.dvs[f]):
-                    range_rows.append((base, int(s), int(e)))
-            deleted = local_frame(
-                self.spark, range_rows, "_dv_file STRING, _dv_s BIGINT, _dv_e BIGINT"
-            ).select(
-                "_dv_file",
-                F.explode(
-                    F.sequence(F.col("_dv_s"), F.col("_dv_e") - 1)
-                ).alias("_dv_pos"),
+                empty = empty.add(keep_file_col, "string")
+            return local_frame(self.spark, [], empty)
+        df = self.spark.read.schema(schema).parquet(*[self._resolve(f) for f in files])
+        if keep_file_col:
+            df = df.withColumn(
+                keep_file_col,
+                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
             )
-            return (
-                df.withColumn("_dv_file", fname)
-                .withColumn("_dv_pos", F.col("_metadata.row_index"))
-                .join(F.broadcast(deleted), ["_dv_file", "_dv_pos"], "left_anti")
-                .select(*cols)
-            )
-
-        # files WITHOUT vectors take the plain scan — the anti-join
-        # (and its per-row file/position columns) prices only the
-        # vectored files, so read overhead is proportional to the
-        # vectored fraction, not the table
-        vectored = [f for f in files if f in snap.dvs]
-        clean = [f for f in files if f not in snap.dvs]
-        if not vectored:
-            return scan(clean, False)
-        if not clean:
-            return scan(vectored, True)
-        return scan(clean, False).unionByName(scan(vectored, True))
-
-    # commits rely on os.link, so tables are POSIX-local: a footer read
-    # is ~1-2 ms, and a serial driver loop beats one Spark job's
-    # scheduling overhead (~0.5-0.7 s measured) well past 100 files;
-    # the distributed path takes over for bulk commits
-    _DRIVER_STATS_MAX_FILES = 128
+        return df
 
     def _stats_for(self, files: Sequence[str], schema: StructType) -> dict[str, dict[str, list]]:
+        """Per-file [min, max] footer stats of newly written ``files``.
+        Commits rely on os.link, so tables are POSIX-local: a footer
+        read is ~1-2 ms, and a serial driver loop beats one Spark
+        job's scheduling overhead (~0.5-0.7 s measured) well past 100
+        files."""
         cols = [f.name for f in schema.fields if f.dataType.simpleString() in _STATS_TYPES]
-        if len(files) <= self._DRIVER_STATS_MAX_FILES:
-            # footer reads are metadata-sized (see crossover note on
-            # _DRIVER_STATS_MAX_FILES above)
-            out = {f: _file_stats(os.path.join(self._data, f), cols) for f in files}
-        else:
-            out = self._footer_stats_distributed(files, cols)
-        bloom_cols = [c for c in self.bloom_cols if c in {f.name for f in schema.fields}]
-        if bloom_cols:
-            for f, c, bits in self._bloom_bitmaps(files, bloom_cols):
-                out[f][f"__bloom__{c}"] = bits
-        return out
-
-    def _footer_stats_distributed(
-        self, files: Sequence[str], cols: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Per-file footer [min, max] stats, read by executor tasks.
-
-        Same driver-cost bound as the bloom build: at a large commit
-        (OPTIMIZE of thousands of files, bulk load) a driver-side
-        loop over every footer is O(files) serial metadata RTTs; here
-        one Spark job fans the footer reads across the cluster and
-        collects back one small JSON blob per file. Results are
-        byte-identical to :func:`_file_stats` (asserted in
-        test_acid.py)."""
-        import pyarrow as pa
-
-        data_dir = self._data
-
-        def read_footers(batches):
-            for batch in batches:
-                rows = [
-                    {
-                        "f": f,
-                        "stats": json.dumps(
-                            _file_stats(os.path.join(data_dir, f), cols)
-                        ),
-                    }
-                    for f in batch.column("f").to_pylist()
-                ]
-                yield pa.RecordBatch.from_pylist(
-                    rows, schema=pa.schema([("f", pa.string()), ("stats", pa.string())])
-                )
-
-        df = local_frame(
-            self.spark, [(f,) for f in files], "f string"
-        ).repartition(min(len(files), 64))
-        return {
-            r["f"]: json.loads(r["stats"])
-            for r in df.mapInArrow(
-                read_footers, StructType.fromDDL("f string, stats string")
-            ).collect()
-        }
-
-    def _bloom_bitmaps(
-        self, files: Sequence[str], bloom_cols: list[str]
-    ) -> list[tuple[str, str, str]]:
-        """Per-(file, column) Bloom bitmaps, built DISTRIBUTED.
-
-        The scan tasks hash their own rows (``mapInArrow`` so integer
-        columns keep exact Python values — a pandas int→float null
-        promotion would change ``repr`` and silently break probe
-        equality with :func:`_bloom_hashes` at merge time); each task
-        emits one 4 KB partial bitmap per (file, column) per Arrow
-        batch and the driver ORs them — collected metadata is
-        O(files · row-groups), never O(rows). The previous
-        implementation read every key of every new file on the
-        driver, a pure-Python O(rows) pass that was the slowest part
-        of an 8M-row write in scale probe #4.
-        """
-        import base64
-        import urllib.parse
-
-        import pyarrow as pa
-
-        paths = [self._resolve(f) for f in files]
-        scan = self.spark.read.parquet(*paths).select(
-            F.input_file_name().alias("_file"), *bloom_cols
-        )
-        n_bytes = _BLOOM_BITS // 8
-        out_schema = StructType.fromDDL("_file string, _col string, _bits binary")
-
-        def partials(batches):
-            for batch in batches:
-                fnames = batch.column("_file").to_pylist()
-                for c in bloom_cols:
-                    vals = batch.column(c).to_pylist()
-                    per_file: dict[str, int] = {}
-                    for fname, v in zip(fnames, vals):
-                        if v is None:
-                            continue
-                        h1, h2 = _bloom_hashes(v)
-                        acc = per_file.get(fname, 0)
-                        for i in range(_BLOOM_K):
-                            acc |= 1 << ((h1 + i * h2) % _BLOOM_BITS)
-                        per_file[fname] = acc
-                    if per_file:
-                        yield pa.RecordBatch.from_pylist(
-                            [
-                                {"_file": f, "_col": c, "_bits": b.to_bytes(n_bytes, "little")}
-                                for f, b in per_file.items()
-                            ]
-                        )
-
-        # empty bitmap default: a file whose column is all-NULL must
-        # still carry a bloom (it can never match any probe key) —
-        # matching the semantics of building from an empty value list
-        merged: dict[tuple[str, str], int] = {
-            (f, c): 0 for f in files for c in bloom_cols
-        }
-        for row in scan.mapInArrow(partials, out_schema).collect():
-            base = os.path.basename(urllib.parse.unquote(urllib.parse.urlparse(row["_file"]).path))
-            merged[(base, row["_col"])] |= int.from_bytes(row["_bits"], "little")
-        return [
-            (f, c, base64.b64encode(bits.to_bytes(n_bytes, "little")).decode())
-            for (f, c), bits in merged.items()
-        ]
+        return {f: _file_stats(os.path.join(self._data, f), cols) for f in files}
 
     # -- public API -------------------------------------------------------
 
@@ -794,72 +512,22 @@ class AcidTable:
         ``append`` extends it (with union-by-name schema evolution).
         Both are single atomic commits.
 
-        ``collect_stats=False`` skips per-file min/max (and bloom)
-        harvesting for this write — for append-heavy tables whose
-        reads never range-prune (e.g. the LSH band index, joined on
-        hashed keys), the footer-stats job per append is pure cost.
-        Reads treat a file with no stats entry as unprunable, so the
-        trade is always safe; MERGE on such files simply rewrites
-        conservatively."""
-        base = self.latest_version() if self.exists() else None
-        new_identity: dict[str, int] | None = None
-        if base is not None:
-            snap0 = self.snapshot(base)
-            # generated columns: compute when absent, reject disagreement
-            df = self._apply_generated(df, snap0)
-            # constraints bind to logical names (what callers see)
-            self._enforce(df, snap0.constraints)
-            # identity columns (GENERATED BY DEFAULT): a batch that
-            # omits the column gets ids from the manifest high-water
-            # mark; one that carries it passes through (merge
-            # survivors keep theirs)
-            missing_ids = [c for c in snap0.identity if c not in df.columns]
-            carried_ids = [c for c in snap0.identity if c in df.columns]
-            if carried_ids:
-                # Delta SYNC IDENTITY behavior (ADVICE r6 #2): a
-                # pass-through batch that explicitly writes ids above
-                # the high-water mark must ADVANCE the mark, else a
-                # later column-omitting append would auto-assign
-                # colliding ids. One bounded agg per identity write.
-                maxes = df.agg(
-                    *[F.max(F.col(c)).alias(c) for c in carried_ids]
-                ).first()
-                ident_c = dict(snap0.identity)
-                moved = False
-                for c in carried_ids:
-                    m = maxes[c]
-                    if m is not None and int(m) + 1 > ident_c[c]:
-                        ident_c[c] = int(m) + 1
-                        moved = True
-                if moved:
-                    new_identity = ident_c
-            if missing_ids:
-                from dbt_lakehouse_aws_spark.operators.windows import (
-                    global_row_number,
-                )
-
-                ident = dict(new_identity or snap0.identity)
-                df = global_row_number(
-                    df.withColumn("_idmid", F.monotonically_increasing_id()),
-                    [F.col("_idmid").asc()],
-                    name="_idrn",
-                )
-                n = df.count()
-                for c in missing_ids:
-                    df = df.withColumn(
-                        c, (F.col("_idrn") + F.lit(ident[c] - 1)).cast("long")
-                    )
-                    ident[c] = ident[c] + int(n)
-                df = df.drop("_idmid", "_idrn")
-                new_identity = ident
+        ``collect_stats=False`` skips per-file min/max harvesting for
+        this write — for append-heavy tables whose reads never
+        range-prune (e.g. the LSH band index, joined on hashed keys),
+        the footer reads per append are pure cost. Reads treat a file
+        with no stats entry as unprunable, so the trade is always
+        safe; MERGE on such files simply rewrites conservatively."""
+        snap = self.snapshot() if self.exists() else None
+        base = None if snap is None else snap.version
+        if snap is not None:
             # data files always carry PHYSICAL names
-            df = self._to_physical(df, snap0.renames)
+            df = self._to_physical(df, snap.renames)
         hint = 0 if base is None else base + 1
         new_files = self._write_data_files(df, hint)
         stats = self._stats_for(new_files, df.schema) if collect_stats else {}
         schema_json = df.schema.json()
-        if mode == "append" and base is not None:
-            snap = self.snapshot(base)
+        if mode == "append" and snap is not None:
             old_schema = StructType.fromJson(json.loads(snap.schema_json))
             schema_json = self._evolved_schema(old_schema, df).json()
             files = list(snap.files) + new_files
@@ -875,88 +543,6 @@ class AcidTable:
             stats=stats,
             base_version=base,
             txn=txn,
-            identity=new_identity,
-        )
-
-    def add_identity_column(self, name: str, *, start: int = 1) -> Snapshot:
-        """Delta-style IDENTITY column (GENERATED BY DEFAULT AS
-        IDENTITY): a metadata-only commit that adds a BIGINT column
-        whose values subsequent writes assign from a manifest-tracked
-        high-water mark — monotone and collision-free across commits
-        without any table-wide max() scan at write time. Attach
-        BEFORE data lands (empty table): backfilling ids onto
-        existing rows would impose an ordering the format does not
-        define. Batches that already carry the column pass through
-        (merge survivors keep their ids; the merge delta must carry
-        every target column, so an upsert can never silently re-id
-        a row), and a pass-through write ADVANCES the high-water
-        mark past the batch's max id (Delta's SYNC IDENTITY
-        behavior), so explicit id injection followed by a
-        column-omitting append cannot collide — the collision-free
-        guarantee holds across mixed explicit/auto writers."""
-        snap = self.snapshot()
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        if name in [f.name for f in schema.fields]:
-            raise ValueError(f"column {name!r} already exists")
-        if name in snap.identity:
-            raise ValueError(f"identity column {name!r} already declared")
-        if snap.files and self.read(snap.version).limit(1).count() > 0:
-            raise ValueError(
-                "identity columns attach before data lands (table not empty)"
-            )
-        evolved = StructType(list(schema.fields)).add(name, "long")
-        return self._commit(
-            operation=f"ADD IDENTITY {name} start={start}",
-            files=[],
-            schema_json=evolved.json(),
-            stats={},
-            base_version=snap.version,
-            identity={**snap.identity, name: int(start)},
-        )
-
-    # -- CHECK constraints -------------------------------------------------
-    #
-    # Delta Lake's table-constraint model (public `delta.constraints.*`
-    # semantics): a named SQL predicate every row must satisfy;
-    # NULL passes (SQL three-valued logic), FALSE rejects the WHOLE
-    # write atomically. The map lives in the log like the schema —
-    # every delta records the full current map, so readers get it
-    # from the snapshot with no extra I/O.
-
-    def check_constraints(self) -> dict[str, str]:
-        """Current name → CHECK-expression map ({} for a new table)."""
-        return dict(self.snapshot().constraints) if self.exists() else {}
-
-    def add_check_constraint(self, name: str, expr: str) -> Snapshot:
-        """ALTER TABLE ADD CONSTRAINT name CHECK (expr): validates the
-        EXISTING data first (one aggregate scan — Delta's rule: you
-        cannot add a constraint the table already violates), then
-        commits a metadata-only delta carrying the new map."""
-        snap = self.snapshot()
-        if name in snap.constraints:
-            raise ValueError(f"constraint {name!r} already exists")
-        self._enforce(self.read(snap.version), {name: expr})
-        return self._commit(
-            operation=f"ADD CONSTRAINT {name}",
-            files=snap.files,
-            schema_json=snap.schema_json,
-            stats=snap.stats,
-            base_version=snap.version,
-            constraints={**snap.constraints, name: expr},
-        )
-
-    def drop_check_constraint(self, name: str) -> Snapshot:
-        snap = self.snapshot()
-        if name not in snap.constraints:
-            raise ValueError(f"no constraint {name!r} on {self.path}")
-        remaining = {k: v for k, v in snap.constraints.items() if k != name}
-        return self._commit(
-            operation=f"DROP CONSTRAINT {name}",
-            files=snap.files,
-            schema_json=snap.schema_json,
-            stats=snap.stats,
-            base_version=snap.version,
-            constraints=remaining,
         )
 
     # -- column renames (metadata-only, Delta column-mapping style) -------
@@ -978,11 +564,7 @@ class AcidTable:
 
     def rename_column(self, old: str, new: str) -> Snapshot:
         """ALTER TABLE RENAME COLUMN old TO new — metadata-only.
-
-        Renaming a column a CHECK constraint references is rejected
-        (the stored expression would silently stop binding — same
-        guard Delta applies without column-mapping-aware rewrite).
-        """
+        Renaming back to the physical (file) name clears the mapping."""
         snap = self.snapshot()
         schema = StructType.fromJson(json.loads(snap.schema_json))
         logical = {f.name: snap.renames.get(f.name, f.name) for f in schema.fields}
@@ -990,23 +572,6 @@ class AcidTable:
             raise ValueError(f"no column {old!r} on {self.path}")
         if new in logical.values():
             raise ValueError(f"column {new!r} already exists on {self.path}")
-        pat = re.compile(rf"\b{re.escape(old)}\b")
-        offending = [n for n, e in snap.constraints.items() if pat.search(e)]
-        if offending:
-            raise ValueError(
-                f"cannot rename {old!r}: referenced by CHECK "
-                f"constraint(s) {offending} — drop them first"
-            )
-        gen_off = [
-            n
-            for n, e in snap.generated.items()
-            if n == old or pat.search(e)
-        ]
-        if gen_off:
-            raise ValueError(
-                f"cannot rename {old!r}: generated column(s) {gen_off} "
-                "declare or reference it"
-            )
         phys = next(p for p, log in logical.items() if log == old)
         renames = dict(snap.renames)
         if phys == new:
@@ -1029,9 +594,7 @@ class AcidTable:
         the data files keep their bytes — parquet readers project by
         the stored schema, so the dropped column is simply never
         read (the same reason Delta's drop is O(1); the bytes age
-        out through OPTIMIZE rewrites). Dropping a column a CHECK
-        constraint or generated column references is rejected, same
-        guard as rename."""
+        out through OPTIMIZE rewrites)."""
         snap = self.snapshot()
         schema = StructType.fromJson(json.loads(snap.schema_json))
         logical = {f.name: snap.renames.get(f.name, f.name) for f in schema.fields}
@@ -1039,21 +602,6 @@ class AcidTable:
             raise ValueError(f"no column {name!r} on {self.path}")
         if len(schema.fields) == 1:
             raise ValueError("cannot drop the only column")
-        pat = re.compile(rf"\b{re.escape(name)}\b")
-        offending = [n for n, e in snap.constraints.items() if pat.search(e)]
-        if offending:
-            raise ValueError(
-                f"cannot drop {name!r}: referenced by CHECK "
-                f"constraint(s) {offending} — drop them first"
-            )
-        gen_off = [
-            n for n, e in snap.generated.items() if n == name or pat.search(e)
-        ]
-        if gen_off:
-            raise ValueError(
-                f"cannot drop {name!r}: generated column(s) {gen_off} "
-                "declare or reference it"
-            )
         phys = next(p for p, log in logical.items() if log == name)
         new_schema = StructType([f for f in schema.fields if f.name != phys])
         renames = {p: l for p, l in snap.renames.items() if p != phys}
@@ -1069,96 +617,6 @@ class AcidTable:
             base_version=snap.version,
             renames=renames,
         )
-
-    # -- generated columns (Delta GENERATED ALWAYS AS semantics) ----------
-
-    def add_generated_column(self, name: str, expr: str) -> Snapshot:
-        """ALTER TABLE ADD COLUMN name GENERATED ALWAYS AS (expr):
-        one COW rewrite materializes the column for existing rows
-        (O(table), documented — the only non-metadata ALTER here);
-        every later write computes it when absent and REJECTS rows
-        where a caller-supplied value disagrees with the expression.
-        ``expr`` binds to LOGICAL column names, like CHECK exprs."""
-        snap = self.snapshot()
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        logical = [snap.renames.get(f.name, f.name) for f in schema.fields]
-        if name in logical:
-            raise ValueError(f"column {name!r} already exists on {self.path}")
-        if name in snap.generated:
-            raise ValueError(f"generated column {name!r} already declared")
-        materialized = self._to_physical(
-            self.read(snap.version).withColumn(name, F.expr(expr)),
-            snap.renames,
-        )
-        new_files = self._write_data_files(materialized, snap.version + 1)
-        return self._commit(
-            operation=f"ADD GENERATED COLUMN {name}",
-            files=new_files,
-            schema_json=materialized.schema.json(),
-            stats=self._stats_for(new_files, materialized.schema),
-            base_version=snap.version,
-            generated={**snap.generated, name: expr},
-        )
-
-    def _apply_generated(self, df: DataFrame, snap: Snapshot) -> DataFrame:
-        """Compute absent generated columns; reject rows whose
-        supplied values disagree with the declared expression (all
-        declared columns checked in the SAME aggregate pass as a
-        null-safe inequality count)."""
-        if not snap.generated:
-            return df
-        disagree = {}
-        for name, expr in snap.generated.items():
-            if name not in df.columns:
-                df = df.withColumn(name, F.expr(expr))
-            else:
-                disagree[f"_gen_{name}"] = (
-                    f"NOT ({name} <=> ({expr}))"
-                )
-        if disagree:
-            row = df.agg(
-                *[
-                    F.sum(
-                        F.when(F.expr(cond), 1).otherwise(0)
-                    ).alias(alias)
-                    for alias, cond in disagree.items()
-                ]
-            ).collect()[0]
-            bad = {a[5:]: int(row[a]) for a in disagree if row[a]}
-            if bad:
-                raise ConstraintViolation(
-                    f"write to {self.path} rejected: supplied values "
-                    f"disagree with GENERATED ALWAYS AS for {bad} "
-                    "(rows counted per column)"
-                )
-        return df
-
-    def _enforce(self, df: DataFrame, constraints: dict[str, str]) -> None:
-        """Reject ``df`` if any constraint evaluates FALSE on any row.
-        ALL constraints are counted in ONE aggregate pass (not one
-        scan each); NULL results pass, mirroring Delta CHECK."""
-        if not constraints:
-            return
-        names = sorted(constraints)
-        row = df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.expr(constraints[n]).eqNullSafe(F.lit(False)), 1
-                    ).otherwise(0)
-                ).alias(n)
-                for n in names
-            ]
-        ).collect()[0]
-        bad = {n: int(row[n]) for n in names if row[n]}
-        if bad:
-            raise ConstraintViolation(
-                f"write to {self.path} rejected: rows violating CHECK "
-                + ", ".join(
-                    f"{n} ({c} rows, expr: {constraints[n]})"
-                    for n, c in bad.items()
-                )
-            )
 
     def read(
         self,
@@ -1223,49 +681,11 @@ class AcidTable:
                 out.append(f)
         return out
 
-    _BLOOM_PRUNE_MAX_KEYS = 100_000
-
-    def _bloom_prune(
-        self, snap: Snapshot, candidates: list[str], updates: DataFrame, key: str
-    ) -> list[str]:
-        """Drop candidate files whose Bloom filter rules out every
-        delta key. Only fires when (a) candidates carry blooms for
-        ``key`` and (b) the delta's distinct key set is small enough
-        to collect (bounded driver cost) — otherwise the exact
-        semi-join pin handles it as before."""
-        with_blooms = [
-            f for f in candidates if f"__bloom__{key}" in snap.stats.get(f, {})
-        ]
-        if not with_blooms:
-            return candidates
-        key_rows = (
-            updates.select(key).distinct().limit(self._BLOOM_PRUNE_MAX_KEYS + 1).collect()
-        )
-        if len(key_rows) > self._BLOOM_PRUNE_MAX_KEYS:
-            return candidates
-        import base64
-
-        hashes = [_bloom_hashes(r[key]) for r in key_rows if r[key] is not None]
-        kept = []
-        for f in candidates:
-            enc = snap.stats.get(f, {}).get(f"__bloom__{key}")
-            if enc is None:
-                kept.append(f)
-                continue
-            bits = int.from_bytes(base64.b64decode(enc), "little")
-            if any(
-                all(bits >> ((h1 + i * h2) % _BLOOM_BITS) & 1 for i in range(_BLOOM_K))
-                for h1, h2 in hashes
-            ):
-                kept.append(f)
-        return kept
-
     def merge(
         self,
         updates: DataFrame,
         keys: Sequence[str],
         *,
-        max_retries: int = 3,
         txn: tuple[str, int] | None = None,
         not_matched_by_source_delete: str | None = None,
     ) -> Snapshot:
@@ -1284,8 +704,9 @@ class AcidTable:
         3. *Rewrite*: (touched-file rows ⟕̸ update keys) ∪ updates → new
            files; untouched files carry over by reference.
 
-        Retries automatically on :class:`CommitConflict` by rebasing on
-        the new snapshot (optimistic concurrency, Delta-style).
+        On :class:`CommitConflict` the whole merge rebases on the new
+        snapshot (optimistic concurrency, Delta-style), up to
+        ``COMMIT_ATTEMPTS`` attempts in total.
 
         ``not_matched_by_source_delete`` adds Delta's ``WHEN NOT
         MATCHED BY SOURCE THEN DELETE`` clause: target rows whose key
@@ -1297,19 +718,11 @@ class AcidTable:
         not O(table).
         """
         keys = list(keys)
-        for _ in range(max_retries):
-            snap = self.snapshot()
-            try:
-                return self._merge_once(
-                    snap, updates, keys, txn=txn,
-                    nmbs_delete=not_matched_by_source_delete,
-                )
-            except CommitConflict:
-                continue
-        # final attempt propagates the conflict
-        return self._merge_once(
-            self.snapshot(), updates, keys, txn=txn,
-            nmbs_delete=not_matched_by_source_delete,
+        return self._with_rebase(
+            lambda: self._merge_once(
+                self.snapshot(), updates, keys, txn=txn,
+                nmbs_delete=not_matched_by_source_delete,
+            )
         )
 
     def _merge_once(
@@ -1321,11 +734,8 @@ class AcidTable:
         nmbs_delete: str | None = None,
     ) -> Snapshot:
         schema = StructType.fromJson(json.loads(snap.schema_json))
-        # generated columns and constraints are written against
-        # logical names — compute/check the incoming (logical) delta,
-        # then drop to physical names for every file-level step below
-        updates = self._apply_generated(updates, snap)
-        self._enforce(updates, snap.constraints)
+        # the incoming delta is written against logical names; every
+        # file-level step below runs in physical names
         updates = self._to_physical(updates, snap.renames)
         inv = {log: phys for phys, log in snap.renames.items()}
         keys_log = list(keys)
@@ -1351,7 +761,6 @@ class AcidTable:
                 "dedupe the source (e.g. latest-per-key) before merging"
             )
         candidates = self._prune_files(snap, keys[0], bounds["lo"], bounds["hi"])
-        candidates = self._bloom_prune(snap, candidates, updates, keys[0])
         touched: list[str] = []
         if candidates:
             cand_df = self._scan_physical(snap, candidates, keep_file_col="_file")
@@ -1436,35 +845,14 @@ class AcidTable:
             txn=txn,
         )
 
-    def delete(self, predicate: str, *, mode: str = "rewrite") -> Snapshot:
-        """``DELETE WHERE predicate``.
-
-        ``mode="rewrite"`` (copy-on-write, the default): rewrite only
-        files that contain matching rows; files with no matches carry
-        over untouched. Any deletion vector on a touched file is
-        consumed by the rewrite.
-
-        ``mode="vector"`` (merge-on-read): attach a DELETION VECTOR —
-        an immutable run-length sidecar of deleted row positions —
-        instead of rewriting data. Write IO is O(deleted rows), not
-        O(touched file bytes): the sparse-delete shape (GDPR erasure,
-        late-event retraction) where copy-on-write would rewrite a
-        terabyte to drop a row. Per file, the hybrid rule Delta ships:
-        a file whose LIVE rows all match is simply dropped from the
-        manifest (pure metadata); a file with more than half its live
-        rows matching is rewritten (a vector bigger than the survivor
-        set is false economy, and read-side anti-join cost tracks
-        vector size); otherwise the new positions merge into the
-        file's existing vector. Guarded by ``DV_MAX_POSITIONS`` —
-        beyond that the positions no longer belong on the driver and
-        the caller should rewrite."""
-        if mode not in ("rewrite", "vector"):
-            raise ValueError(f"delete mode must be rewrite|vector, got {mode!r}")
-        snap = self.snapshot()
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        cond = F.expr(predicate)  # written in LOGICAL column names
-        if mode == "vector":
-            return self._delete_vector(snap, schema, cond, predicate)
+    def _rewrite_matching(
+        self, snap: Snapshot, cond
+    ) -> tuple[list[str], list[str]]:
+        """Copy-on-write removal of the rows matching ``cond`` (a
+        logical-name Column): returns (touched, rewritten) — the
+        manifest entries holding matching rows and the new files
+        holding their surviving remainder. Rows whose predicate is
+        NULL survive (SQL semantics)."""
         touched: list[str] = []
         if snap.files:
             all_df = self._to_logical(
@@ -1473,15 +861,21 @@ class AcidTable:
             rows = all_df.filter(cond).select("_file").distinct().collect()
             by_base = {os.path.basename(self._resolve(f)): f for f in snap.files}
             touched = [by_base[r["_file"]] for r in rows]
-        new_files: list[str] = []
-        if touched:
-            touched_df = self._to_logical(
-                self._scan_physical(snap, touched), snap.renames
-            )
-            keep = self._to_physical(
-                touched_df.filter(~cond | cond.isNull()), snap.renames
-            ).coalesce(max(1, len(touched)))
-            new_files = self._write_nonempty(keep, snap.version + 1)
+        if not touched:
+            return [], []
+        touched_df = self._to_logical(self._scan_physical(snap, touched), snap.renames)
+        keep = self._to_physical(
+            touched_df.filter(~cond | cond.isNull()), snap.renames
+        ).coalesce(max(1, len(touched)))
+        return touched, self._write_nonempty(keep, snap.version + 1)
+
+    def delete(self, predicate: str) -> Snapshot:
+        """``DELETE WHERE predicate`` (copy-on-write): rewrite only
+        files that contain matching rows; files with no matches carry
+        over untouched. ``predicate`` is SQL over logical names."""
+        snap = self.snapshot()
+        schema = StructType.fromJson(json.loads(snap.schema_json))
+        touched, new_files = self._rewrite_matching(snap, F.expr(predicate))
         untouched = [f for f in snap.files if f not in set(touched)]
         stats = {f: s for f, s in snap.stats.items() if f in set(untouched)}
         stats.update(self._stats_for(new_files, schema))
@@ -1491,97 +885,6 @@ class AcidTable:
             schema_json=snap.schema_json,
             stats=stats,
             base_version=snap.version,
-        )
-
-    def _delete_vector(
-        self, snap: Snapshot, schema: StructType, cond, predicate: str
-    ) -> Snapshot:
-        if not snap.files:
-            return self._commit(
-                operation=f"DELETE (dv) matched=0/0 {predicate}",
-                files=[],
-                schema_json=snap.schema_json,
-                stats={},
-                base_version=snap.version,
-            )
-        live = self._to_logical(
-            self._scan_physical(snap, keep_file_col="_file", keep_pos_col="_pos"),
-            snap.renames,
-        )
-        per_file = (
-            live.groupBy("_file")
-            .agg(
-                F.count(F.lit(1)).alias("live"),
-                F.count(F.when(cond, 1)).alias("matched"),
-            )
-            .filter(F.col("matched") > 0)
-            .collect()
-        )
-        by_base = {os.path.basename(self._resolve(f)): f for f in snap.files}
-        n_matched = sum(r["matched"] for r in per_file)
-        if n_matched > self.DV_MAX_POSITIONS:
-            raise ValueError(
-                f"DELETE mode='vector' matched {n_matched} rows "
-                f"(> DV_MAX_POSITIONS={self.DV_MAX_POSITIONS}); use "
-                "mode='rewrite' — a vector that size costs more than "
-                "the rewrite it avoids"
-            )
-        dropped: list[str] = []  # every live row matched -> pure metadata
-        rewrite: list[str] = []  # dense match -> copy-on-write
-        vector: list[str] = []  # sparse match -> attach/merge DV
-        for r in per_file:
-            entry = by_base[r["_file"]]
-            if r["matched"] == r["live"]:
-                dropped.append(entry)
-            elif r["matched"] * 2 > r["live"]:
-                rewrite.append(entry)
-            else:
-                vector.append(entry)
-        new_dvs = dict(snap.dvs)
-        if vector:
-            vec_set = {os.path.basename(self._resolve(f)) for f in vector}
-            pos_rows = (
-                live.filter(cond)
-                .filter(F.col("_file").isin(list(vec_set)))
-                .select("_file", "_pos")
-                .collect()
-            )
-            by_file: dict[str, list[int]] = {}
-            for r in pos_rows:
-                by_file.setdefault(r["_file"], []).append(r["_pos"])
-            for base, positions in by_file.items():
-                entry = by_base[base]
-                new_ranges = self._positions_to_ranges(positions)
-                if entry in new_dvs:
-                    new_ranges = self._merge_ranges(
-                        self._read_dv(new_dvs[entry]), new_ranges
-                    )
-                new_dvs[entry] = self._write_dv(new_ranges, snap.version + 1)
-        new_files: list[str] = []
-        if rewrite:
-            touched_df = self._to_logical(
-                self._scan_physical(snap, rewrite), snap.renames
-            )
-            keep = self._to_physical(
-                touched_df.filter(~cond | cond.isNull()), snap.renames
-            ).coalesce(max(1, len(rewrite)))
-            new_files = self._write_nonempty(keep, snap.version + 1)
-        gone = set(dropped) | set(rewrite)
-        kept = [f for f in snap.files if f not in gone]
-        stats = {f: s for f, s in snap.stats.items() if f not in gone}
-        stats.update(self._stats_for(new_files, schema))
-        new_dvs = {f: r for f, r in new_dvs.items() if f not in gone}
-        return self._commit(
-            operation=(
-                f"DELETE (dv) matched={n_matched} vectored={len(vector)} "
-                f"rewritten={len(rewrite)} dropped={len(dropped)}"
-                f"/{len(snap.files)}"
-            ),
-            files=kept + new_files,
-            schema_json=snap.schema_json,
-            stats=stats,
-            base_version=snap.version,
-            dvs=new_dvs,
         )
 
     def replace_where(
@@ -1608,30 +911,12 @@ class AcidTable:
         schema = StructType.fromJson(json.loads(snap.schema_json))
         cond = F.expr(predicate)  # LOGICAL column names
 
-        df = self._apply_generated(df, snap)
-        self._enforce(df, snap.constraints)
         if df.filter(~cond | cond.isNull()).limit(1).count() > 0:
             raise ValueError(
                 f"replace_where batch contains rows violating {predicate!r}"
             )
 
-        touched: list[str] = []
-        if snap.files:
-            all_df = self._to_logical(
-                self._scan_physical(snap, keep_file_col="_file"), snap.renames
-            )
-            rows = all_df.filter(cond).select("_file").distinct().collect()
-            by_base = {os.path.basename(self._resolve(f)): f for f in snap.files}
-            touched = [by_base[r["_file"]] for r in rows]
-        rewritten: list[str] = []
-        if touched:
-            touched_df = self._to_logical(
-                self._scan_physical(snap, touched), snap.renames
-            )
-            keep = self._to_physical(
-                touched_df.filter(~cond | cond.isNull()), snap.renames
-            ).coalesce(max(1, len(touched)))
-            rewritten = self._write_nonempty(keep, snap.version + 1)
+        touched, rewritten = self._rewrite_matching(snap, cond)
         new_files = self._write_data_files(
             self._to_physical(df, snap.renames), snap.version + 1
         )
@@ -1681,21 +966,13 @@ class AcidTable:
             raise ValueError(f"clone destination already exists: {dest_path}")
         abs_files = [self._resolve(f) for f in snap.files]
         stats = {self._resolve(f): snap.stats[f] for f in snap.files if f in snap.stats}
-        # vectors ride along by absolute reference, like the data
-        # files they annotate — immutable, so sharing is safe; a
-        # clone-side rewrite consumes its (absolute) vector entry
-        # without touching the source's sidecar
-        dvs = {self._resolve(f): self._resolve_dv(r) for f, r in snap.dvs.items()}
         dest._commit(
             operation=f"CLONE {self.path}@v{snap.version}",
             files=abs_files,
             schema_json=snap.schema_json,
             stats=stats,
             base_version=None,
-            constraints=snap.constraints,
             renames=snap.renames,
-            generated=snap.generated,
-            dvs=dvs,
         )
         return dest
 
@@ -1716,15 +993,7 @@ class AcidTable:
         and one log write; zero data IO at any table size.
         """
         target = self.snapshot(version)  # raises KeyError-ish if absent
-        missing = [
-            f
-            for f in target.files
-            if not os.path.exists(self._resolve(f))
-        ] + [
-            r
-            for r in target.dvs.values()
-            if not os.path.exists(self._resolve_dv(r))
-        ]
+        missing = [f for f in target.files if not os.path.exists(self._resolve(f))]
         if missing:
             raise FileNotFoundError(
                 f"cannot restore {self.path} to version {version}: "
@@ -1737,29 +1006,7 @@ class AcidTable:
             schema_json=target.schema_json,
             stats=dict(target.stats),
             base_version=self.latest_version(),
-            constraints=dict(target.constraints),
             renames=dict(target.renames),
-            generated=dict(target.generated),
-            dvs=dict(target.dvs),
-        )
-
-    def maybe_optimize(
-        self,
-        *,
-        max_files: int = 64,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        zorder_by: Sequence[str] | None = None,
-    ) -> Snapshot | None:
-        """Compact ONLY when the current snapshot's file count exceeds
-        ``max_files`` — the maintenance hook a streaming sink calls
-        after each commit so incremental writers (one small file per
-        batch per touched set) can run forever without manifest/task
-        explosion. Returns the OPTIMIZE snapshot when compaction ran,
-        else None; the check is one metadata read, no data I/O."""
-        if len(self.snapshot().files) <= max_files:
-            return None
-        return self.optimize(
-            target_file_bytes=target_file_bytes, zorder_by=zorder_by
         )
 
     def optimize(
@@ -1767,7 +1014,6 @@ class AcidTable:
         *,
         target_file_bytes: int = 128 << 20,
         zorder_by: Sequence[str] | None = None,
-        max_retries: int = 3,
     ) -> Snapshot:
         """Transactional compaction (the lakehouse ``OPTIMIZE``):
         rewrite the current snapshot at ~``target_file_bytes`` per
@@ -1780,27 +1026,19 @@ class AcidTable:
         its snapshot read and its commit), committing the stale
         rewrite would resurrect pre-merge rows — so it REBASES: the
         whole compaction re-reads the new snapshot and re-runs, up to
-        ``max_retries`` times, then propagates :class:`CommitConflict`
-        (abort, never silent data loss). Raced by
-        test_acid.py::test_optimize_concurrent_with_merge.
+        ``COMMIT_ATTEMPTS`` attempts, then propagates
+        :class:`CommitConflict` (abort, never silent data loss).
+        Raced by test_acid.py::test_optimize_concurrent_with_merge.
 
         Incremental writers leave one small file per touched-set per
         commit; at 100 TB that's manifest pressure and a task per
         tiny file. OPTIMIZE is the periodic counterweight: one
         commit, same rows, bounded file count, better clustering.
         """
-        # total attempts == max_retries: the first max_retries - 1
-        # swallow CommitConflict and rebase, the final one propagates
-        # (ADVICE r4: the old loop ran max_retries + 1 attempts)
-        for _ in range(max_retries - 1):
-            try:
-                return self._optimize_once(
-                    target_file_bytes=target_file_bytes, zorder_by=zorder_by
-                )
-            except CommitConflict:
-                continue
-        return self._optimize_once(
-            target_file_bytes=target_file_bytes, zorder_by=zorder_by
+        return self._with_rebase(
+            lambda: self._optimize_once(
+                target_file_bytes=target_file_bytes, zorder_by=zorder_by
+            )
         )
 
     def _optimize_once(
@@ -1809,8 +1047,6 @@ class AcidTable:
         target_file_bytes: int,
         zorder_by: Sequence[str] | None,
     ) -> Snapshot:
-        import math
-
         snap = self.snapshot()
         schema = StructType.fromJson(json.loads(snap.schema_json))
         total = sum(
@@ -1858,20 +1094,8 @@ class AcidTable:
         inv = {log: phys for phys, log in new.renames.items()}
         keys = [inv.get(k, k) for k in keys]
 
-        def scan(snap_side, files):
-            return self._scan_physical(snap_side, sorted(files), schema)
-
-        # a deletion-vector attach changes NO file set — the file is
-        # "changed" when its vector differs between the snapshots, and
-        # both sides scan it under their OWN vector so the full-row
-        # cancel surfaces exactly the newly-vectored rows as deletes
-        dv_changed = {
-            f
-            for f in set(old.files) & set(new.files)
-            if old.dvs.get(f) != new.dvs.get(f)
-        }
-        removed = scan(old, (set(old.files) - set(new.files)) | dv_changed)
-        added = scan(new, (set(new.files) - set(old.files)) | dv_changed)
+        removed = self._scan_physical(old, sorted(set(old.files) - set(new.files)), schema)
+        added = self._scan_physical(new, sorted(set(new.files) - set(old.files)), schema)
         # survivors copied verbatim during COW rewrites appear on both
         # sides — cancel them out before classifying. The cancellation
         # must be NULL-safe: join(cols) uses null-unsafe equality, so a
@@ -1913,13 +1137,6 @@ class AcidTable:
         for f in os.listdir(self._data) if os.path.isdir(self._data) else []:
             if f.endswith(".parquet") and f not in live:
                 os.unlink(os.path.join(self._data, f))
-                removed.append(f)
-        # deletion vectors referenced by no retained snapshot are
-        # orphans (superseded merges, consumed-by-rewrite sidecars)
-        live_dvs = {r for s in retained for r in s.dvs.values()}
-        for f in os.listdir(self._dvdir) if os.path.isdir(self._dvdir) else []:
-            if f.endswith(".dv.json") and f not in live_dvs:
-                os.unlink(os.path.join(self._dvdir, f))
                 removed.append(f)
         # the horizon version must stay reconstructable once the
         # pre-horizon delta chain is gone — checkpoint it first

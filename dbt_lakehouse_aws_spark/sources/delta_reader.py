@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from dbt_lakehouse_aws_spark.localframe import local_frame
+
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 
 
@@ -131,7 +133,7 @@ class DeltaLogTable:
         ]
         data_schema = StructType(data_fields)
         if not snap.files:
-            return self.spark.createDataFrame([], snap.schema)
+            return local_frame(self.spark, [], snap.schema)
         parts = []
         # group files by identical partition-value assignment so the
         # scan stays one job per partition tuple, not per file

@@ -75,6 +75,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from dbt_lakehouse_aws_spark.localframe import local_frame
 from dbt_lakehouse_aws_spark.sources.avro_io import read_container
 
 _META_RE = re.compile(r"^v(\d+)\.metadata\.json$")
@@ -267,7 +268,7 @@ class IcebergTable:
 
         snap = self.snapshot(snapshot_id)
         if not snap.files:
-            return self.spark.createDataFrame([], snap.schema)
+            return local_frame(self.spark, [], snap.schema)
         df = self.spark.read.schema(snap.schema).parquet(*snap.files)
         if not snap.pos_deletes and not snap.eq_deletes:
             return df
@@ -284,8 +285,6 @@ class IcebergTable:
             norm(F.col("_metadata.file_path")).alias("__ib_file"),
             F.col("_metadata.row_index").alias("__ib_pos"),
         )
-        from dbt_lakehouse_aws_spark.localframe import local_frame
-
         seq_df = F.broadcast(
             local_frame(
                 self.spark, list(snap.file_seqs), "__ib_sfile STRING, __ib_seq LONG"

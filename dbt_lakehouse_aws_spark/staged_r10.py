@@ -920,71 +920,6 @@ def poisson_rate_ratio_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_staged(
-    "acid_deletion_vectors_events",
-    """
-    WITH base AS (
-      SELECT user_id, event_type,
-             CAST(round(value * 100) AS BIGINT) AS cents
-      FROM events
-    ),
-    kept AS (SELECT * FROM base WHERE NOT (user_id % 97 = 0))
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(cents) AS BIGINT) AS cents,
-           CAST(sum(user_id) AS BIGINT) AS user_sum
-    FROM kept GROUP BY 1
-    ORDER BY event_type
-    """,
-)
-def acid_deletion_vectors_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETE via DELETION VECTORS under the driver gate (Delta
-    DV / Iceberg v2 position-delete semantics): events land in an
-    ACID table, a sparse ~1% DELETE attaches run-length position
-    sidecars instead of rewriting data, and the post-delete scan must
-    match the oracle's relational WHERE NOT replay exactly. The
-    in-code asserts pin what the value hash can't see: the commit
-    moved ZERO data files (pure metadata + O(deleted rows) sidecar),
-    vectors are attached, time travel still serves the pre-delete
-    snapshot, and OPTIMIZE later materializes the vectors away. At
-    100 TB this is the GDPR-erasure shape: deleting one user costs
-    the user's rows, not the table's bytes."""
-    import tempfile
-    import uuid
-
-    from dbt_lakehouse_aws_spark.sources.acid import AcidTable
-
-    base = T(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    t = AcidTable(
-        spark, tempfile.mkdtemp(prefix=f"dv_{uuid.uuid4().hex[:8]}_") + "/t"
-    )
-    t.write(base.repartition(4))
-    pre = t.snapshot()
-    snap = t.delete("user_id % 97 = 0", mode="vector")
-    assert set(snap.files) == set(pre.files), (
-        "vector delete must not move data files"
-    )
-    assert snap.dvs, "no deletion vector attached"
-    assert snap.version == pre.version + 1, "DV delete must be one commit"
-    n_pre = t.read(pre.version).count()
-    n_post = t.read().count()
-    assert n_post < n_pre, "vectored rows still served"
-    return (
-        t.read()
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("cents").cast("long").alias("cents"),
-            F.sum("user_id").cast("long").alias("user_sum"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@_staged(
     "nelson_aalen_repurchase",
     """
     WITH purchases AS (

@@ -10,11 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_lakehouse_aws_spark.sources.acid import (
-    AcidTable,
-    CommitConflict,
-    ConstraintViolation,
-)
+from dbt_lakehouse_aws_spark.sources.acid import AcidTable, CommitConflict
 
 
 def _mkdf(spark, rows):
@@ -108,6 +104,29 @@ def test_merge_retries_past_conflict(spark, tmp_path, base_rows):
     snap = t.merge(_mkdf(spark, [(3, "odd", 33.0)]), ["id"])
     assert fails["n"] == 1 and snap.version == 2
     assert t.read().filter("id = 3").first()["value"] == 33.0
+
+
+def test_commit_race_losers_make_three_attempts(spark, tmp_path, base_rows, monkeypatch):
+    """merge() and optimize() share one retry policy: an operation
+    that keeps losing the commit race rebases COMMIT_ATTEMPTS - 1
+    times and then raises — 3 attempts in all."""
+    t = AcidTable(spark, str(tmp_path / "t"))
+    t.write(_mkdf(spark, base_rows))
+    calls = []
+
+    def always_conflict(*args, **kwargs):
+        calls.append(1)
+        raise CommitConflict("lost the race")
+
+    monkeypatch.setattr(t, "_merge_once", always_conflict)
+    with pytest.raises(CommitConflict):
+        t.merge(_mkdf(spark, [(3, "odd", 33.0)]), ["id"])
+    assert len(calls) == 3
+    monkeypatch.setattr(t, "_optimize_once", always_conflict)
+    with pytest.raises(CommitConflict):
+        t.optimize()
+    assert len(calls) == 6
+    assert t.latest_version() == 0
 
 
 def test_merge_prunes_untouched_files(spark, tmp_path):
@@ -322,15 +341,12 @@ def test_log_is_delta_structured_with_checkpoints(spark, tmp_path):
 
     log = tmp_path / "t" / "_log"
     merge_delta = _json.loads((log / f"{5:020d}.json").read_text())
-    # core delta shape plus the r5 metadata fields (commit wall-clock
-    # for as-of time travel; txn appears only on idempotent-writer
-    # commits; constraints carries the full CHECK-constraint map)
-    assert {"version", "operation", "add", "remove", "schema", "parent"} <= set(merge_delta)
-    assert set(merge_delta) <= {
+    # core delta shape plus commit wall-clock (as-of time travel) and
+    # the full rename map; txn appears only on idempotent-writer commits
+    assert {
         "version", "operation", "add", "remove", "schema", "parent",
-        "committed_at", "txn", "constraints", "renames", "generated",
-        "dvs", "identity",
-    }
+        "committed_at", "renames",
+    } == set(merge_delta) - {"txn"}
     assert len(merge_delta["add"]) <= 2 and len(merge_delta["remove"]) <= 2
     # checkpoint exists at version 10 and reconstruction works everywhere
     assert (log / f"{10:020d}.checkpoint.json").exists()
@@ -351,35 +367,6 @@ def test_vacuum_preserves_horizon_reconstruction(spark, tmp_path):
     assert [s.version for s in t.history()] == [3, 4]
     assert t.read(version=3).count() == 50
     assert t.read(version=4).count() == 50
-
-
-def test_bloom_prune_on_unclustered_table(spark, tmp_path):
-    """On a table NOT clustered by the merge key, min/max stats prune
-    nothing (every file spans the domain) — the per-file Bloom
-    filters must pin the delta to the files actually holding its
-    keys, without scanning."""
-    import random
-
-    ids = list(range(1000))
-    random.Random(5).shuffle(ids)  # random placement across files
-    rows = [(i, "g", float(i)) for i in ids]
-    t = AcidTable(spark, str(tmp_path / "t"), bloom_cols=["id"])
-    snap0 = t.write(
-        spark.createDataFrame(rows, "id bigint, grp string, value double").repartition(8)
-    )
-    assert len(snap0.files) == 8
-    assert all("__bloom__id" in snap0.stats[f] for f in snap0.files)
-
-    s1 = t.merge(_mkdf(spark, [(123, "g", -1.0), (777, "g", -2.0)]), ["id"])
-    touched = int(s1.operation.split("touched=")[1].split("/")[0])
-    assert touched <= 3, f"bloom should pin 2 scattered keys to <=3 files, got {touched}"
-    got = {r["id"]: r["value"] for r in t.read().collect()}
-    assert got[123] == -1.0 and got[777] == -2.0 and len(got) == 1000
-
-    # a handle without bloom_cols still reads/merges the same table
-    t2 = AcidTable(spark, str(tmp_path / "t"))
-    t2.merge(_mkdf(spark, [(5, "g", -5.0)]), ["id"])
-    assert t2.read().filter("id = 5").first()["value"] == -5.0
 
 
 def test_row_changes_null_safe_cancellation(spark, tmp_path):
@@ -420,6 +407,49 @@ def test_stray_tmp_log_file_is_ignored(spark, tmp_path, base_rows):
     s = t.merge(_mkdf(spark, [(0, "even", -1.0)]), ["id"])
     assert s.version == 1
     assert t.read().filter("id = 0").first()["value"] == -1.0
+
+
+def test_table_using_removed_feature_is_refused(spark, tmp_path, base_rows):
+    """Older writers could record deletion vectors, CHECK constraints,
+    generated and identity columns in the log. This format no longer
+    applies them, so serving such a table would bring deleted rows
+    back or skip its rules: snapshot() refuses it, naming the feature,
+    whether the map sits in a delta or a checkpoint. The empty maps
+    those writers put on every commit, and their per-file
+    ``__bloom__`` stats entries, are harmless."""
+    import json as _json
+
+    t = AcidTable(spark, str(tmp_path / "t"))
+    t.write(_mkdf(spark, base_rows[:50]).coalesce(1))  # v0 + its checkpoint
+    (f,) = t.write(_mkdf(spark, base_rows[50:]).coalesce(1), mode="append").files[1:]
+    log = tmp_path / "t" / "_log"
+    delta, cp = log / f"{1:020d}.json", log / f"{0:020d}.checkpoint.json"
+    old_maps = dict(constraints={}, generated={}, dvs={}, identity={})
+    old_delta = {**_json.loads(delta.read_text()), **old_maps}
+    old_delta["add"][f]["__bloom__id"] = "AAAA"
+    old_cp = {**_json.loads(cp.read_text()), **old_maps}
+    delta.write_text(_json.dumps(old_delta))
+    cp.write_text(_json.dumps(old_cp))
+    assert t.read().count() == 100
+    assert t.read(prune={"id": (75, 75)}).filter("id = 75").count() == 1
+
+    features = {
+        "dvs": ({f: "0000000001-0.dv.json"}, "deletion vectors"),
+        "constraints": ({"pos": "value >= 0"}, "CHECK constraints"),
+        "generated": ({"cents": "CAST(value * 100 AS BIGINT)"}, "generated columns"),
+        "identity": ({"row_id": 1}, "identity columns"),
+    }
+    for key, (value, name) in features.items():
+        delta.write_text(_json.dumps({**old_delta, key: value}))
+        with pytest.raises(ValueError, match=name):
+            t.read()
+    delta.write_text(_json.dumps(old_delta))
+    (f0,) = t.snapshot(0).files
+    features["dvs"] = ({f0: "0000000000-0.dv.json"}, "deletion vectors")
+    for key, (value, name) in features.items():
+        cp.write_text(_json.dumps({**old_cp, key: value}))
+        with pytest.raises(ValueError, match=name):
+            t.read(version=0)
 
 
 def test_merge_rejects_duplicate_source_keys(spark, tmp_path, base_rows):
@@ -599,73 +629,6 @@ def test_vacuum_spares_concurrent_reader_of_retained_snapshot(spark, tmp_path):
         reader_v0.collect()  # horizon passed: stale reader fails, not wrong data
 
 
-def test_distributed_bloom_bitmaps_bit_identical_to_driver_build(spark, tmp_path):
-    """The mapInArrow bloom build must produce the SAME bitmap the
-    driver-side _bloom_build computes from the file's values —
-    including exact int (no pandas float promotion), strings, NULL
-    skipping, and the all-NULL → empty-bitmap case. A repr drift
-    between build and probe hashing would silently disable pruning
-    (or worse, prune a file that holds a key)."""
-    import pyarrow.parquet as pq
-
-    from dbt_lakehouse_aws_spark.sources.acid import _bloom_build, _bloom_might_contain
-
-    rows = [
-        (1, "alpha", 1.0),
-        (2, None, 2.0),
-        (9_007_199_254_740_993, "big", 3.0),  # exact only as int, not float64
-        (4, "alpha", None),
-    ]
-    t = AcidTable(spark, str(tmp_path / "t"), bloom_cols=["id", "grp"])
-    snap = t.write(
-        spark.createDataFrame(rows, "id bigint, grp string, value double").coalesce(1)
-    )
-    (f,) = snap.files
-    table = pq.read_table(str(tmp_path / "t" / "data" / f))
-    for col in ("id", "grp"):
-        vals = [v for v in table.column(col).to_pylist() if v is not None]
-        assert snap.stats[f][f"__bloom__{col}"] == _bloom_build(vals)
-    enc = snap.stats[f]["__bloom__id"]
-    assert _bloom_might_contain(enc, 9_007_199_254_740_993)
-    assert not _bloom_might_contain(enc, 9_007_199_254_740_992)
-
-    # all-NULL column still carries a (never-matching) bloom
-    t2 = AcidTable(spark, str(tmp_path / "t2"), bloom_cols=["grp"])
-    snap2 = t2.write(
-        spark.createDataFrame(
-            [(1, None, 1.0)], "id bigint, grp string, value double"
-        ).coalesce(1)
-    )
-    (f2,) = snap2.files
-    assert snap2.stats[f2]["__bloom__grp"] == _bloom_build([])
-
-
-def test_distributed_footer_stats_identical_to_driver_loop(spark, tmp_path):
-    """Commits above _DRIVER_STATS_MAX_FILES files collect footer
-    min/max through a Spark job; the result must be byte-identical to
-    the driver-side _file_stats loop (same pruning decisions either
-    way)."""
-    import os
-
-    from dbt_lakehouse_aws_spark.sources.acid import _file_stats
-
-    n_files = AcidTable._DRIVER_STATS_MAX_FILES + 8
-    t = AcidTable(spark, str(tmp_path / "t"))
-    df = spark.range(0, 4000, 1, n_files).selectExpr(
-        "id", "cast(id % 7 as string) AS grp", "id * 0.5 AS value"
-    )
-    snap = t.write(df)
-    assert len(snap.files) == n_files
-    for f in snap.files:
-        expected = _file_stats(
-            os.path.join(str(tmp_path / "t"), "data", f), ["id", "grp", "value"]
-        )
-        assert snap.stats[f] == expected
-    # pruning still behaves: a tight id range keeps few files
-    kept = t._prune_files(snap, "id", 0, 50)
-    assert 1 <= len(kept) <= 2
-
-
 def test_restore_is_metadata_only_and_preserves_history(spark, tmp_path):
     t = AcidTable(spark, str(tmp_path / "t"))
     df0 = spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
@@ -814,93 +777,6 @@ def test_stream_append_into_acid_exactly_once(spark, tmp_path):
     assert t.read().count() == 3  # replay added nothing
 
 
-def test_maybe_optimize_triggers_on_file_count(spark, tmp_path):
-    """Auto-compaction: below the threshold it is a metadata no-op;
-    above it, one OPTIMIZE commit shrinks the file count and
-    preserves every row."""
-    from dbt_lakehouse_aws_spark.sources.acid import AcidTable
-
-    t = AcidTable(spark, str(tmp_path / "mo"))
-    t.write(spark.createDataFrame([(0, "x")], "id long, s string"))
-    for i in range(1, 8):
-        t.write(
-            spark.createDataFrame([(i, "x")], "id long, s string"),
-            mode="append",
-        )
-    n_files = len(t.snapshot().files)
-    assert n_files >= 8
-    assert t.maybe_optimize(max_files=100) is None  # under threshold
-    snap = t.maybe_optimize(max_files=4)
-    assert snap is not None and snap.operation.startswith("OPTIMIZE")
-    assert len(t.snapshot().files) < n_files
-    assert t.read().count() == 8
-
-
-def test_check_constraint_rejects_bad_append_atomically(spark, tmp_path, base_rows):
-    from dbt_lakehouse_aws_spark.sources.acid import ConstraintViolation
-
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, base_rows))
-    t.add_check_constraint("value_nonneg", "value >= 0")
-    assert t.check_constraints() == {"value_nonneg": "value >= 0"}
-    v = t.latest_version()
-    with pytest.raises(ConstraintViolation, match="value_nonneg"):
-        t.write(_mkdf(spark, [(200, "x", -1.0)]), mode="append")
-    assert t.latest_version() == v  # nothing committed
-    assert t.read().count() == len(base_rows)
-    # valid rows still flow
-    t.write(_mkdf(spark, [(201, "x", 5.0)]), mode="append")
-    assert t.read().count() == len(base_rows) + 1
-
-
-def test_check_constraint_null_passes_and_existing_violation_blocks_add(
-    spark, tmp_path
-):
-    from dbt_lakehouse_aws_spark.sources.acid import ConstraintViolation
-
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(
-        spark.createDataFrame(
-            [(1, None), (2, 5.0)], "id bigint, value double"
-        )
-    )
-    # NULL value -> constraint NULL -> passes (Delta CHECK semantics)
-    t.add_check_constraint("pos", "value > 0")
-    # a constraint the current data violates cannot be added
-    with pytest.raises(ConstraintViolation):
-        t.add_check_constraint("big", "value > 10")
-    assert set(t.check_constraints()) == {"pos"}
-
-
-def test_check_constraint_drop_and_merge_enforcement(spark, tmp_path, base_rows):
-    from dbt_lakehouse_aws_spark.sources.acid import ConstraintViolation
-
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, base_rows))
-    t.add_check_constraint("value_nonneg", "value >= 0")
-    with pytest.raises(ConstraintViolation):
-        t.merge(_mkdf(spark, [(3, "odd", -9.0)]), keys=["id"])
-    t.drop_check_constraint("value_nonneg")
-    t.merge(_mkdf(spark, [(3, "odd", -9.0)]), keys=["id"])
-    got = {r["id"]: r["value"] for r in t.read().collect()}
-    assert got[3] == -9.0
-
-
-def test_check_constraint_survives_checkpoint_replay(spark, tmp_path):
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(spark.createDataFrame([(1, 1.0)], "id bigint, value double"))
-    t.add_check_constraint("pos", "value > 0")
-    # push past CHECKPOINT_EVERY so the snapshot replays from a
-    # checkpoint, not the full delta chain
-    for i in range(2, AcidTable.CHECKPOINT_EVERY + 3):
-        t.write(
-            spark.createDataFrame([(i, float(i))], "id bigint, value double"),
-            mode="append",
-        )
-    assert t.latest_version() >= AcidTable.CHECKPOINT_EVERY
-    assert t.check_constraints() == {"pos": "value > 0"}
-
-
 def test_rename_column_metadata_only_roundtrip(spark, tmp_path):
     """RENAME COLUMN is one metadata commit: no data file changes,
     reads present the logical name, appends/merges/deletes written in
@@ -944,11 +820,8 @@ def test_rename_column_metadata_only_roundtrip(spark, tmp_path):
 
 
 def test_rename_column_guards(spark, tmp_path):
-    """Unknown/duplicate names are rejected; renaming a column a CHECK
-    constraint references is refused until the constraint is dropped;
-    renaming back to the physical name clears the mapping."""
-    import json as _json
-
+    """Unknown/duplicate names are rejected; renaming back to the
+    physical name clears the mapping."""
     import pytest as _pytest
 
     t = AcidTable(spark, str(tmp_path / "t"))
@@ -958,77 +831,11 @@ def test_rename_column_guards(spark, tmp_path):
     with _pytest.raises(ValueError, match="already exists"):
         t.rename_column("value", "grp")
 
-    t.add_check_constraint("pos", "value >= 0")
-    with _pytest.raises(ValueError, match="referenced by CHECK"):
-        t.rename_column("value", "score")
-    t.drop_check_constraint("pos")
     t.rename_column("value", "score")
-    # constraint added AFTER the rename binds to the logical name
-    t.add_check_constraint("pos2", "score >= 0")
-    with _pytest.raises(ConstraintViolation):
-        t.write(
-            _mkdf(spark, [(9, "z", -1.0)]).withColumnRenamed("value", "score"),
-            mode="append",
-        )
     # rename back to the physical name empties the map
-    t.drop_check_constraint("pos2")
     t.rename_column("score", "value")
     assert t.snapshot().renames == {}
     assert {r["id"]: r["value"] for r in t.read().collect()} == {1: 1.0}
-
-
-def test_generated_column_materialize_compute_reject(spark, tmp_path):
-    """ADD GENERATED COLUMN materializes existing rows once; later
-    appends compute the column when absent, pass when a supplied
-    value AGREES, and atomically reject disagreement; merge computes
-    it too; renaming a referenced column is refused."""
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, [(1, "a", 1.5), (2, "b", 2.5)]))
-    t.add_generated_column("value_cents", "CAST(round(value * 100) AS BIGINT)")
-    got = {r["id"]: r["value_cents"] for r in t.read().collect()}
-    assert got == {1: 150, 2: 250}
-
-    # absent -> computed
-    t.write(_mkdf(spark, [(3, "c", 3.25)]), mode="append")
-    assert t.read().filter("id = 3").first()["value_cents"] == 325
-    # supplied + agreeing -> accepted
-    agree = _mkdf(spark, [(4, "d", 4.0)]).withColumn(
-        "value_cents", F.lit(400).cast("long")
-    )
-    t.write(agree, mode="append")
-    # supplied + disagreeing -> whole write rejected
-    bad = _mkdf(spark, [(5, "e", 5.0)]).withColumn(
-        "value_cents", F.lit(1).cast("long")
-    )
-    with pytest.raises(ConstraintViolation, match="GENERATED"):
-        t.write(bad, mode="append")
-    assert t.read().count() == 4
-
-    # merge computes the generated column for inserts and updates
-    t.merge(_mkdf(spark, [(1, "a", 9.0), (6, "f", 6.0)]), ["id"])
-    got = {r["id"]: r["value_cents"] for r in t.read().collect()}
-    assert got[1] == 900 and got[6] == 600
-
-    with pytest.raises(ValueError, match="generated column"):
-        t.rename_column("value", "v2")
-
-
-def test_not_null_via_check_constraint(spark, tmp_path):
-    """NOT NULL is a CHECK: `col IS NOT NULL` evaluates FALSE (not
-    NULL) on null rows, so the three-valued pass rule still rejects
-    them — no separate nullability machinery needed."""
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, [(1, "a", 1.0)]))
-    t.add_check_constraint("grp_nn", "grp IS NOT NULL")
-    with pytest.raises(ConstraintViolation, match="grp_nn"):
-        t.write(
-            spark.createDataFrame(
-                [(2, None, 2.0)], "id bigint, grp string, value double"
-            ),
-            mode="append",
-        )
-    t.write(_mkdf(spark, [(3, "c", 3.0)]), mode="append")
-    assert t.read().count() == 2
 
 
 def test_replace_where_swaps_only_matching_partition(spark, tmp_path, base_rows):
@@ -1101,10 +908,6 @@ def test_drop_column_metadata_only(spark, tmp_path, base_rows):
 def test_drop_column_guards(spark, tmp_path, base_rows):
     t = AcidTable(spark, str(tmp_path / "dcg"))
     t.write(_mkdf(spark, base_rows))
-    t.add_check_constraint("v_nonneg", "value >= 0")
-    with pytest.raises(ValueError, match="CHECK"):
-        t.drop_column("value")
-    t.drop_check_constraint("v_nonneg")
     t.drop_column("value")
     with pytest.raises(ValueError, match="no column"):
         t.drop_column("value")
@@ -1167,169 +970,6 @@ def test_shallow_clone_isolation_and_divergence(spark, tmp_path):
         pass
 
 
-# -- deletion vectors -------------------------------------------------------
-
-
-def _dv_table(spark, tmp_path, n=200, files=4):
-    """n rows spread over `files` data files."""
-    t = AcidTable(spark, str(tmp_path / "dvt"))
-    rows = [(i, "even" if i % 2 == 0 else "odd", float(i)) for i in range(n)]
-    df = _mkdf(spark, rows).repartition(files)
-    t.write(df)
-    return t, rows
-
-
-def test_dv_delete_is_metadata_only_and_read_correct(spark, tmp_path):
-    t, rows = _dv_table(spark, tmp_path)
-    s0 = t.snapshot()
-    snap = t.delete("id IN (3, 17, 101)", mode="vector")
-    # no data file written or removed: pure sidecar + manifest
-    assert set(snap.files) == set(s0.files)
-    assert snap.dvs, "a deletion vector must be attached"
-    assert "DELETE (dv)" in snap.operation
-    got = sorted(r["id"] for r in t.read().collect())
-    assert got == sorted(i for i, _, _ in rows if i not in (3, 17, 101))
-
-
-def test_dv_second_delete_merges_vector(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path)
-    t.delete("id = 10", mode="vector")
-    t.delete("id = 11", mode="vector")
-    assert t.read().filter(F.col("id").isin(10, 11)).count() == 0
-    assert t.read().count() == 198
-
-
-def test_dv_full_file_match_drops_file(spark, tmp_path):
-    t = AcidTable(spark, str(tmp_path / "t"))
-    a = _mkdf(spark, [(i, "a", float(i)) for i in range(50)]).coalesce(1)
-    b = _mkdf(spark, [(i, "b", float(i)) for i in range(50, 100)]).coalesce(1)
-    t.write(a)
-    s1 = t.write(b, mode="append")
-    snap = t.delete("grp = 'a'", mode="vector")
-    assert len(snap.files) == len(s1.files) - 1, "fully-matched file is dropped"
-    assert not snap.dvs
-    assert t.read().count() == 50
-
-
-def test_dv_dense_match_rewrites_instead(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=1)
-    snap = t.delete("id < 80", mode="vector")  # 80% of the file's rows
-    assert "rewritten=1" in snap.operation
-    assert not snap.dvs, "dense delete must not leave a vector"
-    assert t.read().count() == 20
-
-
-def test_dv_rewrite_delete_consumes_vector(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=1)
-    t.delete("id = 5", mode="vector")
-    snap = t.delete("id = 6", mode="rewrite")
-    assert not snap.dvs, "COW rewrite consumes the file's vector"
-    got = sorted(r["id"] for r in t.read().collect())
-    assert 5 not in got and 6 not in got and len(got) == 98
-
-
-def test_dv_merge_never_resurrects_vectored_row(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=1)
-    t.delete("id = 7", mode="vector")
-    t.merge(_mkdf(spark, [(8, "upd", 800.0)]), keys=["id"])
-    got = {r["id"]: r["value"] for r in t.read().collect()}
-    assert 7 not in got, "merge rewrite resurrected a vectored row"
-    assert got[8] == 800.0 and len(got) == 99
-
-
-def test_dv_time_travel_sees_pre_delete_state(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path)
-    v0 = t.snapshot().version
-    t.delete("id < 10", mode="vector")
-    assert t.read(v0).count() == 200
-    assert t.read().count() == 190
-
-
-def test_dv_change_feed_emits_deletes(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path)
-    v0 = t.snapshot().version
-    s1 = t.delete("id IN (1, 2)", mode="vector")
-    changes = t.row_changes(v0, s1.version, keys=["id"]).collect()
-    assert sorted((r["id"], r["_change_type"]) for r in changes) == [
-        (1, "delete"),
-        (2, "delete"),
-    ]
-
-
-def test_dv_optimize_materializes_vectors(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path)
-    t.delete("id % 10 = 0", mode="vector")
-    snap = t.optimize(target_file_bytes=1 << 30)
-    assert not snap.dvs
-    assert t.read().count() == 180
-    assert t.read(snap.version - 1).count() == 180
-
-
-def test_dv_vacuum_drops_superseded_vectors_keeps_live(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=1)
-    t.delete("id = 1", mode="vector")
-    t.delete("id = 2", mode="vector")  # supersedes vector #1
-    dvdir = os.path.join(t.path, "dv")
-    assert len(os.listdir(dvdir)) == 2
-    t.vacuum(retain_last=1)
-    live = [f for f in os.listdir(dvdir) if f.endswith(".dv.json")]
-    assert len(live) == 1, "superseded vector must be vacuumed, live one kept"
-    assert t.read().count() == 98
-
-
-def test_dv_restore_brings_vector_state_back(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path)
-    s1 = t.delete("id = 0", mode="vector")
-    t.delete("id = 1", mode="vector")
-    t.restore(s1.version)
-    got = sorted(r["id"] for r in t.read().collect())
-    assert 0 not in got and 1 in got
-
-
-def test_dv_clone_carries_vectors_and_stays_isolated(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path)
-    t.delete("id = 42", mode="vector")
-    c = t.clone(str(tmp_path / "branch"))
-    assert c.read().count() == 199
-    c.delete("id = 43", mode="vector")
-    assert c.read().count() == 198
-    assert t.read().count() == 199, "clone-side vector must not leak to source"
-
-
-def test_dv_checkpoint_replay_preserves_vectors(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=1)
-    t.delete("id = 3", mode="vector")
-    # push past CHECKPOINT_EVERY so the snapshot replays from checkpoint
-    for i in range(AcidTable.CHECKPOINT_EVERY + 1):
-        t.write(_mkdf(spark, [(1000 + i, "x", 0.0)]), mode="append")
-    assert t.read().filter(F.col("id") == 3).count() == 0
-
-
-def test_dv_guard_rejects_oversized_vector_delete(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=4)
-    old_cap = AcidTable.DV_MAX_POSITIONS
-    AcidTable.DV_MAX_POSITIONS = 5
-    try:
-        with pytest.raises(ValueError, match="DV_MAX_POSITIONS"):
-            # 25% per file -> sparse path (not dense-rewrite), but 25
-            # positions total exceeds the lowered cap
-            t.delete("id % 4 = 0", mode="vector")
-    finally:
-        AcidTable.DV_MAX_POSITIONS = old_cap
-
-
-def test_dv_ranges_are_run_length_encoded(spark, tmp_path):
-    t, _ = _dv_table(spark, tmp_path, n=100, files=1)
-    snap = t.delete("id >= 10 AND id < 20", mode="vector")
-    import json as _json
-
-    ref = next(iter(snap.dvs.values()))
-    with open(os.path.join(t.path, "dv", ref)) as fh:
-        payload = _json.load(fh)
-    assert payload["count"] == 10
-    assert len(payload["ranges"]) <= 2, "contiguous positions must collapse"
-
-
 def test_merge_not_matched_by_source_delete(spark, tmp_path):
     """WHEN NOT MATCHED BY SOURCE THEN DELETE: one atomic MERGE
     updates matched keys, inserts new ones, and deletes unmatched
@@ -1377,79 +1017,6 @@ def test_merge_nmbs_prices_only_touched_files(spark, tmp_path):
     # file holding group b carries over untouched
     assert set(s1.files) & set(snap.files), "untouched file was rewritten"
     assert t.read().count() == 100
-
-
-# -- identity columns -------------------------------------------------------
-
-
-def test_identity_column_assigns_disjoint_monotone_ranges(spark, tmp_path):
-    """Two appends that omit the identity column draw disjoint,
-    contiguous id ranges from the manifest high-water mark."""
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, []).limit(0))  # establish schema, empty
-    t.add_identity_column("row_id", start=100)
-    t.write(_mkdf(spark, [(i, "a", 0.0) for i in range(7)]), mode="append")
-    t.write(_mkdf(spark, [(i, "b", 0.0) for i in range(5)]), mode="append")
-    rows = t.read().select("grp", "row_id").collect()
-    ids = sorted(r["row_id"] for r in rows)
-    assert ids == list(range(100, 112)), ids
-    a_ids = {r["row_id"] for r in rows if r["grp"] == "a"}
-    b_ids = {r["row_id"] for r in rows if r["grp"] == "b"}
-    assert max(a_ids) < min(b_ids), "append ranges must be disjoint and ordered"
-    assert t.snapshot().identity == {"row_id": 112}
-
-
-def test_identity_passthrough_and_merge_keeps_ids(spark, tmp_path):
-    """A batch that carries the column passes through untouched, and
-    a MERGE (whose delta must carry all columns) cannot re-id
-    survivors."""
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, []).limit(0))
-    t.add_identity_column("row_id")
-    t.write(_mkdf(spark, [(1, "a", 1.0), (2, "a", 2.0)]), mode="append")
-    before = {r["id"]: r["row_id"] for r in t.read().collect()}
-    upd = t.read().filter(F.col("id") == 1).withColumn("value", F.lit(99.0))
-    t.merge(upd, keys=["id"])
-    after = {r["id"]: r["row_id"] for r in t.read().collect()}
-    assert after == before, "merge must not reassign identity values"
-    assert t.read().filter(F.col("id") == 1).first()["value"] == 99.0
-
-
-def test_identity_passthrough_advances_high_water_mark(spark, tmp_path):
-    """ADVICE r6 #2 regression (Delta SYNC IDENTITY): an explicit
-    pass-through write of row_id=500 while the mark sits at 100 must
-    raise the mark to 501, so a later column-omitting append starts
-    at 501 instead of colliding at 100."""
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, []).limit(0))
-    t.add_identity_column("row_id", start=100)
-    explicit = _mkdf(spark, [(1, "a", 1.0), (2, "a", 2.0)]).withColumn(
-        "row_id", (F.col("id") + 499).cast("long")  # ids 500, 501
-    )
-    t.write(explicit, mode="append")
-    assert t.snapshot().identity == {"row_id": 502}
-    t.write(_mkdf(spark, [(3, "b", 3.0), (4, "b", 4.0)]), mode="append")
-    ids = sorted(r["row_id"] for r in t.read().collect())
-    assert ids == [500, 501, 502, 503], ids
-    assert len(set(ids)) == 4, "explicit/auto id collision"
-    # a pass-through BELOW the mark must not regress it
-    low = _mkdf(spark, [(5, "c", 5.0)]).withColumn(
-        "row_id", F.lit(7).cast("long")
-    )
-    t.write(low, mode="append")
-    assert t.snapshot().identity == {"row_id": 504}
-
-
-def test_identity_refuses_nonempty_table_and_duplicates(spark, tmp_path):
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, [(1, "a", 1.0)]))
-    with pytest.raises(ValueError, match="not empty"):
-        t.add_identity_column("row_id")
-    t2 = AcidTable(spark, str(tmp_path / "t2"))
-    t2.write(_mkdf(spark, []).limit(0))
-    t2.add_identity_column("row_id")
-    with pytest.raises(ValueError, match="already exists"):
-        t2.add_identity_column("row_id")
 
 
 def test_source_vacuum_can_invalidate_clone_documented_hazard(spark, tmp_path):

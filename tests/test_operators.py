@@ -1453,3 +1453,31 @@ def test_hyperball_closeness_tracks_exact_on_path_graph(spark):
     for node in got:
         for c in ("est1", "est2", "est3"):
             assert got[node][c] == again[node][c]
+
+
+def test_hyperball_closeness_chunked_yield_is_identical(spark, monkeypatch):
+    """The register reduce yields its keys in bounded chunks: with one
+    shuffle partition holding every key and a chunk far below the key
+    count, the estimates equal the single-chunk run exactly."""
+    from dbt_lakehouse_aws_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 40) for i in range(40)] + [(i, i + 1) for i in range(39)],
+        "a long, b long",
+    )
+
+    def run():
+        return {
+            r["node"]: tuple(r[1:])
+            for r in graph.hyperball_closeness(edges, max_hops=3).collect()
+        }
+
+    whole = run()
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    monkeypatch.setattr(graph, "_HLL_CHUNK_KEYS", 3)
+    try:
+        chunked = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(whole) == 40 and chunked == whole

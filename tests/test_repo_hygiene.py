@@ -130,3 +130,42 @@ def test_package_reads_only_deployment_env_vars():
         if bad:
             extra[str(p.relative_to(PKG))] = bad
     assert not extra, f"environment reads outside {sorted(DEPLOYMENT_ENV)}: {extra}"
+
+
+#: unregistered staged-query inventory awaiting deletion; its
+#: createDataFrame calls go with it rather than being converted
+STAGED_INVENTORY = {f"staged_r{n}.py" for n in (10, 11, 12, 13)}
+
+
+def _row_literal_frames(path: pathlib.Path) -> list[int]:
+    """Lines of ``createDataFrame`` calls whose data argument is a
+    list, tuple or comprehension literal."""
+    literal = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp)
+    lines = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            data = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "data"), None
+            )
+            if isinstance(data, literal):
+                lines.append(node.lineno)
+    return lines
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """Driver-side rows become a DataFrame only through
+    ``localframe.local_frame`` (an Arrow LocalRelation): a
+    ``createDataFrame(<list>)`` plan is a pickled-row RDD that
+    re-runs Python workers on every action. Static: no Spark session."""
+    offenders = {}
+    for p in sorted(PKG.rglob("*.py")):
+        if p.name == "localframe.py" or p.name in STAGED_INVENTORY:
+            continue
+        lines = _row_literal_frames(p)
+        if lines:
+            offenders[str(p.relative_to(PKG))] = lines
+    assert not offenders, f"createDataFrame over python rows (use local_frame): {offenders}"

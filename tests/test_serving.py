@@ -161,6 +161,25 @@ def test_durable_draft_board_survives_restart(spark, board_df, tmp_path):
     assert len(b3.scan()) == 1
 
 
+def test_durable_board_item_frame_is_a_local_relation(spark, tmp_path):
+    """A put's one-row MERGE source is an Arrow LocalRelation, not a
+    pickled-row LogicalRDD that re-runs a Python worker per action."""
+    from dbt_lakehouse_aws_spark.serving.api import DurableDraftBoard
+
+    board = DurableDraftBoard(spark, str(tmp_path / "draft_board"))
+    item = {
+        "player_id": "1",
+        "drafted": True,
+        "drafted_at": "2026-03-01T00:00:00+00:00",
+        "player_name": "Mike Trout",
+        "drafted_to_my_team": False,
+    }
+    df = board._item_df(item)
+    plan = df._jdf.queryExecution().logical()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert [r.asDict() for r in df.collect()] == [item]
+
+
 def test_simulate_draft_deterministic_and_adp_biased(board_df):
     from dbt_lakehouse_aws_spark.serving.api import simulate_draft
 
