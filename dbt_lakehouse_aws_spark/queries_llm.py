@@ -1588,8 +1588,10 @@ def iceberg_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import tempfile
 
-    from dbt_lakehouse_aws_spark.sources.avro_io import write_container
+    import pyarrow.parquet as pq
+
     from dbt_lakehouse_aws_spark.sources.iceberg_reader import read_iceberg_table
+    from dbt_lakehouse_aws_spark.sources.iceberg_writer import _manifest_entry, _write_snapshot
 
     ev = T(spark, sf_dir, "events").select(
         "event_id", "event_type", "value",
@@ -1611,54 +1613,19 @@ def iceberg_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         if f.endswith(".parquet")
     }
 
-    entry_schema = {
-        "type": "record", "name": "manifest_entry", "fields": [
-            {"name": "status", "type": "int"},
-            {"name": "snapshot_id", "type": ["null", "long"]},
-            {"name": "data_file", "type": {
-                "type": "record", "name": "data_file", "fields": [
-                    {"name": "content", "type": "int"},
-                    {"name": "file_path", "type": "string"},
-                    {"name": "file_format", "type": "string"},
-                    {"name": "record_count", "type": "long"},
-                    {"name": "file_size_in_bytes", "type": "long"},
-                ]}},
-        ]}
-    list_schema = {
-        "type": "record", "name": "manifest_file", "fields": [
-            {"name": "manifest_path", "type": "string"},
-            {"name": "manifest_length", "type": "long"},
-            {"name": "partition_spec_id", "type": "int"},
-            {"name": "added_snapshot_id", "type": ["null", "long"]},
-        ]}
-
     meta_dir = _os.path.join(root, "metadata")
     _os.makedirs(meta_dir, exist_ok=True)
 
     def entry(status, b):
+        # v1 tables carry no sequence numbers: their data is sequence 0
         p = data_files[b]
-        return {"status": status, "snapshot_id": 100 if status == 1 else None,
-                "data_file": {"content": 0, "file_path": p, "file_format": "PARQUET",
-                              "record_count": 0,
-                              "file_size_in_bytes": _os.path.getsize(p)}}
+        e = _manifest_entry(100 if status == 1 else None, 0, p,
+                            pq.read_metadata(p).num_rows, _os.path.getsize(p))
+        return {**e, "status": status}
 
-    def write_manifest(name, entries, snap_id):
-        mp = _os.path.join(meta_dir, name)
-        blob = write_container(entry_schema, entries, codec="deflate")
-        with open(mp, "wb") as fh:
-            fh.write(blob)
-        lp = _os.path.join(meta_dir, name.replace("m", "ml", 1))
-        with open(lp, "wb") as fh:
-            fh.write(write_container(list_schema, [{
-                "manifest_path": mp, "manifest_length": len(blob),
-                "partition_spec_id": 0, "added_snapshot_id": snap_id}]))
-        return lp
-
-    ml1 = write_manifest("m1.avro", [entry(1, b) for b in range(4)], 100)
-    ml2 = write_manifest(
-        "m2.avro",
-        [entry(0, b) for b in range(3)] + [entry(2, 3)],
-        200,
+    snap1 = _write_snapshot(meta_dir, 100, 0, [entry(1, b) for b in range(4)], [], 1)
+    snap2 = _write_snapshot(
+        meta_dir, 200, 0, [entry(0, b) for b in range(3)] + [entry(2, 3)], [], 2
     )
     meta = {
         "format-version": 1,
@@ -1673,11 +1640,7 @@ def iceberg_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]},
         "partition-spec": [], "properties": {},
         "current-snapshot-id": 200,
-        "snapshots": [
-            {"snapshot-id": 100, "timestamp-ms": 1, "manifest-list": ml1},
-            {"snapshot-id": 200, "timestamp-ms": 2, "manifest-list": ml2,
-             "parent-snapshot-id": 100},
-        ],
+        "snapshots": [snap1, {**snap2, "parent-snapshot-id": 100}],
     }
     with open(_os.path.join(meta_dir, "v2.metadata.json"), "w") as fh:
         _json.dump(meta, fh)
@@ -1700,7 +1663,7 @@ def iceberg_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def iceberg_v2_mor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iceberg v2 MERGE-ON-READ deletes end-to-end
     (sources/iceberg_reader.py): a format-version-2 table is laid down
-    per the public spec (sources/iceberg_testing.py — real Avro
+    per the public spec (sources/iceberg_writer.py::write_v2_table — real Avro
     manifests with sequence numbers) over four data files, plus a
     POSITION delete file (the row ordinals of bucket-0 rows whose
     event_id % 10 = 0, written as URI file paths to exercise path
@@ -1716,7 +1679,7 @@ def iceberg_v2_mor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from dbt_lakehouse_aws_spark.sources.iceberg_reader import read_iceberg_table
-    from dbt_lakehouse_aws_spark.sources.iceberg_testing import V2File, write_v2_table
+    from dbt_lakehouse_aws_spark.sources.iceberg_writer import V2File, write_v2_table
 
     ev = T(spark, sf_dir, "events").select(
         "event_id", "event_type", "value",

@@ -16,12 +16,12 @@ first principles:
   file list, schema (Spark JSON), per-file column stats, and the
   parent version. The latest version is ``max()`` over the log dir —
   exactly Delta's ``_delta_log`` discovery rule.
-* **Atomic, optimistic commits.** A commit is materialized as a
-  fully-written temp file hard-linked into the log via
-  ``os.link`` — POSIX put-if-absent. Two writers racing for version
-  N: one link succeeds, the loser gets :class:`CommitConflict` and
-  must rebase (re-read the new snapshot and retry). No partial
-  manifest is ever visible.
+* **Atomic, optimistic commits.** A commit is the put-if-absent of
+  :func:`.tablefiles.commit` (a fully-written temp file hard-linked
+  to the version name), the same commit the Delta and Iceberg
+  writers use. Two writers racing for version N: one link succeeds,
+  the loser gets :class:`CommitConflict` and must rebase (re-read the
+  new snapshot and retry). No partial manifest is ever visible.
 * **Snapshot isolation.** Readers resolve a version once; since data
   files are immutable and only unreferenced by later manifests
   (never deleted until :meth:`vacuum`), a reader's DataFrame is
@@ -37,9 +37,11 @@ first principles:
   DELETE and ``replace_where`` rewrite the files holding matching
   rows the same way; there is no merge-on-read delete.
 
-The statistics are harvested from parquet footers via pyarrow in a
-driver loop (no Spark job), mirroring how Iceberg manifests carry
-per-file column bounds.
+Data files enter the table through :func:`.tablefiles.stage`, and the
+statistics come from the footers it reads (:func:`.tablefiles.footer_bounds`,
+a driver loop, no Spark job), mirroring how Iceberg manifests carry
+per-file column bounds; this module keeps only their JSON-safe
+``[min, max]`` form over ``_STATS_TYPES``.
 """
 
 from __future__ import annotations
@@ -55,6 +57,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 
 from dbt_lakehouse_aws_spark.localframe import local_frame
+from dbt_lakehouse_aws_spark.sources.tablefiles import StagedFile, commit, footer_bounds, stage
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -92,38 +95,6 @@ class Snapshot:
     stats: dict[str, dict[str, list]]  # file -> col -> [min, max]
     parent: int | None
     renames: dict[str, str] = field(default_factory=dict)  # physical col -> logical col
-
-
-def _file_stats(path: str, cols: Sequence[str]) -> dict[str, list]:
-    """Per-file [min, max] bounds for ``cols`` from the parquet footer."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    name_to_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    out: dict[str, list] = {}
-    for c in cols:
-        idx = name_to_idx.get(c)
-        if idx is None:
-            continue
-        lo = hi = None
-        ok = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    ok = False
-                    break
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-        if ok and lo is not None and _json_safe(lo) and _json_safe(hi):
-            out[c] = [lo, hi]
-    return out
 
 
 def _json_safe(v) -> bool:
@@ -166,11 +137,11 @@ class AcidTable:
         return os.path.isdir(self._log) and bool(self._versions())
 
     # Only files matching the canonical {version:020d} names count as
-    # log entries. A writer that crashes between creating its
-    # .tmp-{uuid}.json staging file and the os.link/unlink commit
-    # leaves a stray whose first dot-segment isn't an int — naive
-    # int(f.split('.')[0]) parsing would then brick every read and
-    # commit of the table until manual cleanup.
+    # log entries. A writer that crashes between creating its .tmp-*
+    # staging file and the link/unlink commit (or an older writer's
+    # .tmp-{uuid}.json) leaves a stray whose first dot-segment isn't
+    # an int — naive int(f.split('.')[0]) parsing would then brick
+    # every read and commit of the table until manual cleanup.
     _DELTA_RE = re.compile(r"^(\d{20})\.json$")
     _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.json$")
 
@@ -317,7 +288,6 @@ class AcidTable:
         txn: tuple[str, int] | None = None,
         renames: dict[str, str] | None = None,
     ) -> Snapshot:
-        os.makedirs(self._log, exist_ok=True)
         new_version = 0 if base_version is None else base_version + 1
         if base_version is None:
             prev_files: set[str] = set()
@@ -341,21 +311,13 @@ class AcidTable:
             # so replay needs no rename history
             "renames": dict(prev_renames if renames is None else renames),
         }
-        tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(delta, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        final = os.path.join(self._log, f"{new_version:020d}.json")
         try:
-            os.link(tmp, final)  # atomic put-if-absent: the commit point
+            commit(self._log, f"{new_version:020d}.json", json.dumps(delta))
         except FileExistsError as e:
             raise CommitConflict(
                 f"version {new_version} of {self.path} was committed concurrently; "
                 "re-read the snapshot and retry"
             ) from e
-        finally:
-            os.unlink(tmp)
         snap = self.snapshot(new_version)
         if new_version % self.CHECKPOINT_EVERY == 0:
             self._write_checkpoint(snap)
@@ -391,52 +353,27 @@ class AcidTable:
 
     # -- data-file primitives ---------------------------------------------
 
-    def _write_data_files(self, df: DataFrame, version_hint: int) -> list[str]:
-        """Write ``df`` to new immutable files; return log-relative names.
+    def _write_data_files(self, df: DataFrame, version_hint: int) -> dict[str, StagedFile]:
+        """Write ``df`` to new immutable files under ``data/``
+        (:func:`.tablefiles.stage`); keyed by their log names."""
+        staged = stage(
+            df,
+            self.path,
+            lambda _rel: os.path.join(_DATA_DIR, f"{version_hint:010d}-{uuid.uuid4().hex}.parquet"),
+        )
+        return {os.path.basename(f.path): f for f in staged}
 
-        Spark writes to a staging dir (its committer already guarantees
-        task-level atomicity there); finished parts are then hard-linked
-        into ``data/`` under collision-free names. Same-filesystem link +
-        unlink keeps this metadata-only.
-        """
-        os.makedirs(self._data, exist_ok=True)
-        stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(stage)
-        out: list[str] = []
-        for f in sorted(os.listdir(stage)):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{version_hint:010d}-{uuid.uuid4().hex}.parquet"
-            os.link(os.path.join(stage, f), os.path.join(self._data, name))
-            out.append(name)
-        import shutil
-
-        shutil.rmtree(stage)
-        return out
-
-    def _write_nonempty(self, df: DataFrame, version_hint: int) -> list[str]:
+    def _write_nonempty(self, df: DataFrame, version_hint: int) -> dict[str, StagedFile]:
         """``_write_data_files`` that contributes NO files when the
-        frame holds zero rows. Replaces the
-        ``keep.limit(1).count() > 0`` pre-probe at the rewrite sites
-        (replace_where / delete), which evaluated the rewrite frame
-        TWICE — once for the emptiness check, once for the write
-        (guide §1.2). The row count now comes from the
-        already-written footers (driver metadata reads over a
-        bounded, coalesced file set), so the frame is evaluated ONCE;
-        the commit outcome is identical — a non-empty write keeps
-        every part file exactly as before, an all-empty write
-        contributes none."""
-        import pyarrow.parquet as pq
-
+        frame holds zero rows. The row count comes from the footers
+        the write already read, so the frame is evaluated once (guide
+        §1.2); a non-empty write keeps every part file."""
         files = self._write_data_files(df, version_hint)
-        total = 0
-        for f in files:
-            total += pq.ParquetFile(os.path.join(self._data, f)).metadata.num_rows
-            if total:
-                return files
-        for f in files:
-            os.unlink(os.path.join(self._data, f))
-        return []
+        if any(f.rows for f in files.values()):
+            return files
+        for name in files:
+            os.unlink(os.path.join(self._data, name))
+        return {}
 
     def _scan_physical(
         self,
@@ -469,14 +406,21 @@ class AcidTable:
             )
         return df
 
-    def _stats_for(self, files: Sequence[str], schema: StructType) -> dict[str, dict[str, list]]:
-        """Per-file [min, max] footer stats of newly written ``files``.
-        Commits rely on os.link, so tables are POSIX-local: a footer
-        read is ~1-2 ms, and a serial driver loop beats one Spark
-        job's scheduling overhead (~0.5-0.7 s measured) well past 100
-        files."""
+    @staticmethod
+    def _stats_for(
+        files: dict[str, StagedFile], schema: StructType
+    ) -> dict[str, dict[str, list]]:
+        """Per-file JSON-safe [min, max] footer bounds of newly written
+        ``files`` over the ``_STATS_TYPES`` columns."""
         cols = [f.name for f in schema.fields if f.dataType.simpleString() in _STATS_TYPES]
-        return {f: _file_stats(os.path.join(self._data, f), cols) for f in files}
+        return {
+            name: {
+                c: [lo, hi]
+                for c, (lo, hi, _nulls) in footer_bounds(f.footer, cols).items()
+                if _json_safe(lo) and _json_safe(hi)
+            }
+            for name, f in files.items()
+        }
 
     # -- public API -------------------------------------------------------
 
@@ -530,10 +474,10 @@ class AcidTable:
         if mode == "append" and snap is not None:
             old_schema = StructType.fromJson(json.loads(snap.schema_json))
             schema_json = self._evolved_schema(old_schema, df).json()
-            files = list(snap.files) + new_files
+            files = list(snap.files) + list(new_files)
             stats = {**snap.stats, **stats}
         elif mode in ("overwrite", "append"):
-            files = new_files
+            files = list(new_files)
         else:
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         return self._commit(
@@ -838,7 +782,7 @@ class AcidTable:
         return self._commit(
             operation=f"MERGE keys={keys} touched={len(touched)}/{len(snap.files)}"
             + (" +nmbs_delete" if nmbs_delete else ""),
-            files=untouched + new_files,
+            files=untouched + list(new_files),
             schema_json=evolved.json(),
             stats=stats,
             base_version=snap.version,
@@ -847,7 +791,7 @@ class AcidTable:
 
     def _rewrite_matching(
         self, snap: Snapshot, cond
-    ) -> tuple[list[str], list[str]]:
+    ) -> tuple[list[str], dict[str, StagedFile]]:
         """Copy-on-write removal of the rows matching ``cond`` (a
         logical-name Column): returns (touched, rewritten) — the
         manifest entries holding matching rows and the new files
@@ -862,7 +806,7 @@ class AcidTable:
             by_base = {os.path.basename(self._resolve(f)): f for f in snap.files}
             touched = [by_base[r["_file"]] for r in rows]
         if not touched:
-            return [], []
+            return [], {}
         touched_df = self._to_logical(self._scan_physical(snap, touched), snap.renames)
         keep = self._to_physical(
             touched_df.filter(~cond | cond.isNull()), snap.renames
@@ -881,7 +825,7 @@ class AcidTable:
         stats.update(self._stats_for(new_files, schema))
         return self._commit(
             operation=f"DELETE touched={len(touched)}/{len(snap.files)}",
-            files=untouched + new_files,
+            files=untouched + list(new_files),
             schema_json=snap.schema_json,
             stats=stats,
             base_version=snap.version,
@@ -922,13 +866,13 @@ class AcidTable:
         )
         untouched = [f for f in snap.files if f not in set(touched)]
         stats = {f: s for f, s in snap.stats.items() if f in set(untouched)}
-        stats.update(self._stats_for(rewritten + new_files, schema))
+        stats.update(self._stats_for({**rewritten, **new_files}, schema))
         return self._commit(
             operation=(
                 f"REPLACE WHERE {predicate} "
                 f"touched={len(touched)}/{len(snap.files)}"
             ),
-            files=untouched + rewritten + new_files,
+            files=untouched + list(rewritten) + list(new_files),
             schema_json=snap.schema_json,
             stats=stats,
             base_version=snap.version,
@@ -1066,7 +1010,7 @@ class AcidTable:
         return self._commit(
             operation=f"OPTIMIZE files={len(snap.files)}->{len(new_files)}"
             + (f" zorder={list(zorder_by)}" if zorder_by else ""),
-            files=new_files,
+            files=list(new_files),
             schema_json=snap.schema_json,
             stats=self._stats_for(new_files, schema),
             base_version=snap.version,

@@ -61,7 +61,6 @@ class TableCatalog:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self._tables: dict[str, DataFrame] = {}
-        self._partitioning: dict[str, list[str]] = {}
 
     @staticmethod
     def _qualify(schema: str, name: str) -> str:
@@ -122,57 +121,9 @@ class TableCatalog:
                 writer = writer.partitionBy(*partition_by)
             writer.save(path)
             df = self.spark.read.format(file_format).load(path)
-            self._partitioning[key] = list(partition_by or [])
         self._tables[key] = df
         df.createOrReplaceTempView(f"{schema}__{name}" if schema else name)
         return df
-
-    def compact(
-        self,
-        schema: str,
-        name: str,
-        *,
-        target_file_bytes: int = 128 << 20,
-    ) -> DataFrame:
-        """Small-files compaction (the OPTIMIZE of a real lakehouse).
-
-        Streaming/incremental writers leave many small files; at scale
-        that means catalog pressure and a task per tiny file. Rewrite
-        the table at ``ceil(bytes / target)`` files — a full shuffle
-        (``repartition``, not ``coalesce``) so output files are evenly
-        sized even when the inputs are skewed; for a partitioned table
-        the shuffle keys are the partition columns, so each Hive
-        partition compacts to its own file set. Write-then-swap keeps
-        readers consistent (a real lake gets this from Delta/Iceberg
-        snapshot isolation).
-        """
-        import math
-        import shutil
-
-        key = self._qualify(schema, name)
-        path = os.path.join(self.warehouse_dir, schema, name)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if f.endswith(".parquet")
-            )
-        n = max(1, math.ceil(total / target_file_bytes))
-        parts = self._partitioning.get(key, [])
-        df = self.spark.read.parquet(path)
-        df = df.repartition(n, *parts) if parts else df.repartition(n)
-        stage = f"{path}__compact"
-        writer = df.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(stage)
-        shutil.rmtree(path)
-        os.replace(stage, path)
-        out = self.spark.read.parquet(path)
-        self._tables[key] = out
-        out.createOrReplaceTempView(f"{schema}__{name}" if schema else name)
-        return out
 
     def get(self, schema: str, name: str) -> DataFrame:
         return self._tables[self._qualify(schema, name)]

@@ -18,15 +18,19 @@ Protocol surface written (PROTOCOL.md, reader/writer version 1/2):
   min/max/nullCount — harvested from the parquet FOOTERS only, so
   stats cost is O(files) metadata reads, never a data scan;
 * ``append`` adds files; ``overwrite`` emits ``remove`` for every
-  previously-live file + the new ``add``s, in ONE commit (atomic
-  replace under the protocol's last-writer-wins on version files);
-* commits are created with O_EXCL so two concurrent writers cannot
-  both claim the same version (the loser raises and can retry).
+  previously-live file + the new ``add``s, in ONE commit (an atomic
+  replace);
+* each version file is claimed through the put-if-absent commit of
+  :mod:`.tablefiles`: readers never see a partial version, and of two
+  writers racing for a version the loser raises and can retry.
 
-The data files themselves are written by Spark's parquet sink into a
-staging directory and hard-linked/renamed into the table root, so
-file layout, compression, and parallelism are the normal distributed
-write path — the driver only ever touches metadata.
+The data files are written by Spark's parquet sink into a staging
+directory and renamed into the table root by :func:`.tablefiles.stage`,
+so file layout, compression, and parallelism are the normal
+distributed write path — the driver only ever touches metadata. The
+per-file stats come from :func:`.tablefiles.footer_bounds`; this
+module only serializes them (first 32 columns, dates and timestamps
+as ISO strings).
 
 Deliberately NOT written: checkpoints, deletion vectors, column
 mapping, invariants — features a minReaderVersion=1 table must not
@@ -43,97 +47,31 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame
 
 from .delta_reader import DeltaLogTable
+from .tablefiles import StagedFile, commit, footer_bounds, stage
 
 _MAX_STAT_COLS = 32  # delta-spark's default dataSkippingNumIndexedCols
 
 
-def _footer_stats(local_path: str, schema_fields: list) -> str:
-    """Per-file ``add.stats`` JSON from the parquet footer (no scan).
-
-    Min/max/nullCount only for top-level primitive columns present in
-    the footer with usable statistics; truncation/absence degrades to
-    omitting the column, which the protocol allows.
-    """
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(local_path).metadata
-    num_records = md.num_rows
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    by_name = {}
-    for i in range(md.num_columns):
-        col = md.row_group(0).column(i) if md.num_row_groups else None
-        if col is not None:
-            by_name[col.path_in_schema] = i
-    stat_cols = [f.name for f in schema_fields[:_MAX_STAT_COLS]]
-    for name in stat_cols:
-        idx = by_name.get(name)
-        if idx is None:
-            continue
-        cmin = cmax = None
-        nnull = 0
-        ok = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    ok = False
-                    break
-            cmin = mn if cmin is None else min(cmin, mn)
-            cmax = mx if cmax is None else max(cmax, mx)
-            nnull += st.null_count or 0
-        if ok and cmin is not None:
-            if hasattr(cmin, "isoformat"):
-                cmin, cmax = cmin.isoformat(), cmax.isoformat()
-            mins[name] = cmin
-            maxs[name] = cmax
-            nulls[name] = nnull
+def _add_stats(f: StagedFile, data_fields: list) -> str:
+    """Per-file ``add.stats`` JSON from the footer bounds; a column
+    without usable bounds is omitted, which the protocol allows."""
+    cols = [c.name for c in data_fields[:_MAX_STAT_COLS]]
+    bounds = footer_bounds(f.footer, cols)
+    iso = lambda v: v.isoformat() if hasattr(v, "isoformat") else v  # noqa: E731
     return json.dumps(
         {
-            "numRecords": num_records,
-            "minValues": mins,
-            "maxValues": maxs,
-            "nullCount": nulls,
+            "numRecords": f.rows,
+            "minValues": {c: iso(b[0]) for c, b in bounds.items()},
+            "maxValues": {c: iso(b[1]) for c, b in bounds.items()},
+            "nullCount": {c: b[2] for c, b in bounds.items()},
         }
     )
-
-
-def _spark_schema_string(df: DataFrame, partition_by: list[str]) -> str:
-    return df.schema.json()
-
-
-def _collect_staged_files(staging: str) -> list[tuple[str, dict]]:
-    """(relative_path, partitionValues) for every parquet file Spark
-    staged, decoding hive-style ``col=value`` directory components."""
-    out = []
-    for dirpath, _dirs, files in os.walk(staging):
-        rel_dir = os.path.relpath(dirpath, staging)
-        pv: dict[str, str | None] = {}
-        if rel_dir != ".":
-            for comp in rel_dir.split(os.sep):
-                if "=" in comp:
-                    k, _, v = comp.partition("=")
-                    pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue  # _SUCCESS, .crc
-            rel = f if rel_dir == "." else os.path.join(rel_dir, f)
-            out.append((rel, pv))
-    return out
 
 
 def write_delta_table(
@@ -180,89 +118,61 @@ def write_delta_table(
                 f"{list(snap.partition_columns)}"
             )
 
-    # 1. distributed data write into a staging dir under the root
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-
+    # 1. distributed data write, files moved into the table root with
+    # their partition layout kept
+    staged = stage(df, path, lambda rel: rel, partition_by)
     data_fields = [f for f in df.schema.fields if f.name not in partition_by]
-    staged = _collect_staged_files(staging)
-    adds = []
-    try:
-        # 2. move files into the table root (partition layout kept)
-        for rel, pv in staged:
-            dst = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            src = os.path.join(staging, rel)
-            stats = _footer_stats(src, data_fields)
-            size = os.path.getsize(src)
-            os.rename(src, dst)
-            adds.append(
-                {
-                    "add": {
-                        "path": rel.replace(os.sep, "/"),
-                        "partitionValues": pv,
-                        "size": size,
-                        "modificationTime": int(time.time() * 1000),
-                        "dataChange": True,
-                        "stats": stats,
-                    }
-                }
-            )
-        # 3. single atomic commit
-        actions: list[dict] = []
-        if version == 0:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-        if version == 0 or mode == "overwrite":
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": _spark_schema_string(df, partition_by),
-                        "partitionColumns": partition_by,
-                        "configuration": {},
-                        "createdTime": int(time.time() * 1000),
-                    }
-                }
-            )
-        for p in prior_files:
-            actions.append(
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": int(time.time() * 1000),
-                        "dataChange": True,
-                        "partitionValues": prior_pv.get(p, {}),
-                    }
-                }
-            )
-        actions.extend(adds)
+    now_ms = int(time.time() * 1000)
+    actions: list[dict] = []
+    if version == 0:
+        actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
+    if version == 0 or mode == "overwrite":
         actions.append(
             {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": mode},
-                    "engineInfo": "dbt-lakehouse-aws-spark delta_writer",
+                "metaData": {
+                    "id": str(uuid.uuid4()),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": df.schema.json(),
+                    "partitionColumns": partition_by,
+                    "configuration": {},
+                    "createdTime": now_ms,
                 }
             }
         )
-        os.makedirs(log_dir, exist_ok=True)
-        commit_path = os.path.join(log_dir, f"{version:020d}.json")
-        # O_EXCL: concurrent writers race on the version file; loser raises
-        fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            with os.fdopen(fd, "w") as fh:
-                for a in actions:
-                    fh.write(json.dumps(a) + "\n")
-        except BaseException:
-            os.unlink(commit_path)
-            raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    for p in prior_files:
+        actions.append(
+            {
+                "remove": {
+                    "path": p,
+                    "deletionTimestamp": now_ms,
+                    "dataChange": True,
+                    "partitionValues": prior_pv.get(p, {}),
+                }
+            }
+        )
+    for f in staged:
+        actions.append(
+            {
+                "add": {
+                    "path": f.path.replace(os.sep, "/"),
+                    "partitionValues": f.partition,
+                    "size": f.size,
+                    "modificationTime": now_ms,
+                    "dataChange": True,
+                    "stats": _add_stats(f, data_fields),
+                }
+            }
+        )
+    actions.append(
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": "WRITE",
+                "operationParameters": {"mode": mode},
+                "engineInfo": "dbt-lakehouse-aws-spark delta_writer",
+            }
+        }
+    )
+    # 2. single atomic commit; a writer that lost the version raises
+    commit(log_dir, f"{version:020d}.json", "".join(json.dumps(a) + "\n" for a in actions))
     return version

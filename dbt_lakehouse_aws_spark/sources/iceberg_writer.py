@@ -1,5 +1,6 @@
 """Write Apache Iceberg v2 tables (create + append) from first
-principles — the write-side twin of :mod:`.iceberg_reader`.
+principles — the write-side twin of :mod:`.iceberg_reader`, and the
+one module that owns Iceberg metadata.
 
 The reference materializes its lakehouse AS Iceberg tables
 (reference ``dbt_project.yml:38-51`` — ``table_type: iceberg``), so
@@ -7,25 +8,33 @@ migration parity needs a write path too. The sandbox has no
 iceberg-spark runtime jars; this module emits the PUBLIC table spec
 (https://iceberg.apache.org/spec/) directly:
 
-* data files: plain parquet written distributed by Spark, moved into
-  ``data/`` (rename within the table root — no re-write);
+* data files: plain parquet written distributed by Spark and renamed
+  into ``data/`` by :func:`.tablefiles.stage` (no re-write; record
+  counts come from the footers);
 * manifests + manifest lists: **Avro container files** encoded by
-  the pure-Python codec in :mod:`.avro_io`, with the spec's reserved
-  ``field-id`` annotations (status=0, data_file=2, file_path=100,
-  manifest_path=500, … — the ids external engines map columns by);
+  the pure-Python codec in :mod:`.avro_io`, under ONE manifest-entry
+  and ONE manifest-list schema with the spec's reserved ``field-id``
+  annotations (status=0, data_file=2, file_path=100,
+  equality_ids=135, manifest_path=500, … — the ids external engines
+  map columns by);
 * table metadata: ``metadata/vN.metadata.json`` (format-version 2,
   explicit sequence numbers — no inheritance dance for readers to
-  resolve), committed with ``O_EXCL`` so two concurrent writers race
-  on the version file and exactly one wins (the same put-if-absent
-  point as :class:`.acid.AcidTable` and the Delta writer);
-* ``version-hint.text`` refreshed via tmp+rename (advisory — readers
-  fall back to the highest vN).
+  resolve) from one builder, claimed through the put-if-absent commit
+  of :mod:`.tablefiles` (the same commit as :class:`.acid.AcidTable`
+  and the Delta writer): two writers racing for a version, exactly
+  one wins, and no reader sees a partial file;
+* an append builds on the newest LISTED ``vN.metadata.json`` — the
+  version it then claims N+1 over; ``version-hint.text`` is refreshed
+  via tmp+rename for readers only (advisory, it may lag).
 
 Scope: unpartitioned append/create (the shapes the reference's CTAS
 models produce). Row-level deletes belong to the engine's own
 :class:`.acid.AcidTable`; writing v2 delete files into tables other
 engines maintain is exactly the corruption risk the reader module
-documents.
+documents. :func:`write_v2_table` lays such files down only as a
+FIXTURE, around parquet files the caller wrote, so tests and the
+``iceberg_v2_mor_events`` query can exercise the reader's
+merge-on-read path.
 
 Round-trip is pinned by the driver gate
 (``iceberg_write_roundtrip_events``): rows written here and read
@@ -38,10 +47,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -57,6 +67,8 @@ from pyspark.sql.types import (
 )
 
 from dbt_lakehouse_aws_spark.sources.avro_io import read_container, write_container
+from dbt_lakehouse_aws_spark.sources.iceberg_reader import _META_RE, _local_path
+from dbt_lakehouse_aws_spark.sources.tablefiles import commit, stage
 
 _SPARK_TO_ICEBERG = {
     BooleanType: "boolean",
@@ -80,102 +92,225 @@ def _iceberg_type(dt) -> str:
     raise ValueError(f"unsupported Spark type for Iceberg write: {dt}")
 
 
-def _iceberg_schema(df: DataFrame) -> dict:
-    return {
-        "type": "struct",
-        "schema-id": 0,
-        "fields": [
-            {
-                "id": i + 1,
-                "name": f.name,
-                "required": not f.nullable,
-                "type": _iceberg_type(f.dataType),
-            }
-            for i, f in enumerate(df.schema.fields)
-        ],
-    }
-
-
 #: v2 manifest_entry Avro schema with the spec's reserved field ids.
-def _manifest_schema() -> dict:
-    return {
-        "type": "record",
-        "name": "manifest_entry",
-        "fields": [
-            {"name": "status", "type": "int", "field-id": 0},
-            {"name": "snapshot_id", "type": ["null", "long"], "field-id": 1},
-            {"name": "sequence_number", "type": ["null", "long"], "field-id": 3},
-            {"name": "file_sequence_number", "type": ["null", "long"], "field-id": 4},
-            {
-                "name": "data_file",
-                "field-id": 2,
-                "type": {
-                    "type": "record",
-                    "name": "r2",
-                    "fields": [
-                        {"name": "content", "type": "int", "field-id": 134},
-                        {"name": "file_path", "type": "string", "field-id": 100},
-                        {"name": "file_format", "type": "string", "field-id": 101},
-                        {
-                            "name": "partition",
-                            "field-id": 102,
-                            "type": {"type": "record", "name": "r102", "fields": []},
-                        },
-                        {"name": "record_count", "type": "long", "field-id": 103},
-                        {"name": "file_size_in_bytes", "type": "long", "field-id": 104},
-                    ],
-                },
+_MANIFEST_ENTRY_SCHEMA = {
+    "type": "record",
+    "name": "manifest_entry",
+    "fields": [
+        {"name": "status", "type": "int", "field-id": 0},
+        {"name": "snapshot_id", "type": ["null", "long"], "field-id": 1},
+        {"name": "sequence_number", "type": ["null", "long"], "field-id": 3},
+        {"name": "file_sequence_number", "type": ["null", "long"], "field-id": 4},
+        {
+            "name": "data_file",
+            "field-id": 2,
+            "type": {
+                "type": "record",
+                "name": "r2",
+                "fields": [
+                    {"name": "content", "type": "int", "field-id": 134},
+                    {"name": "file_path", "type": "string", "field-id": 100},
+                    {"name": "file_format", "type": "string", "field-id": 101},
+                    {
+                        "name": "partition",
+                        "field-id": 102,
+                        "type": {"type": "record", "name": "r102", "fields": []},
+                    },
+                    {"name": "record_count", "type": "long", "field-id": 103},
+                    {"name": "file_size_in_bytes", "type": "long", "field-id": 104},
+                    {
+                        "name": "equality_ids",
+                        "type": [
+                            "null",
+                            {"type": "array", "items": "int", "element-id": 136},
+                        ],
+                        "field-id": 135,
+                    },
+                ],
             },
-        ],
-    }
+        },
+    ],
+}
+
+_MANIFEST_LIST_SCHEMA = {
+    "type": "record",
+    "name": "manifest_file",
+    "fields": [
+        {"name": "manifest_path", "type": "string", "field-id": 500},
+        {"name": "manifest_length", "type": "long", "field-id": 501},
+        {"name": "partition_spec_id", "type": "int", "field-id": 502},
+        {"name": "content", "type": "int", "field-id": 517},
+        {"name": "sequence_number", "type": "long", "field-id": 515},
+        {"name": "min_sequence_number", "type": "long", "field-id": 516},
+        {"name": "added_snapshot_id", "type": "long", "field-id": 503},
+        {"name": "added_files_count", "type": "int", "field-id": 504},
+        {"name": "existing_files_count", "type": "int", "field-id": 505},
+        {"name": "deleted_files_count", "type": "int", "field-id": 506},
+        {"name": "added_rows_count", "type": "long", "field-id": 512},
+        {"name": "existing_rows_count", "type": "long", "field-id": 513},
+        {"name": "deleted_rows_count", "type": "long", "field-id": 514},
+    ],
+}
 
 
-def _manifest_list_schema() -> dict:
+def _manifest_entry(
+    snapshot_id: int,
+    seq: int,
+    path: str,
+    rows: int,
+    size: int,
+    content: int = 0,
+    equality_ids: tuple[int, ...] = (),
+) -> dict:
+    """One ADDED entry with explicit sequence numbers (no inheritance
+    for readers to resolve)."""
     return {
-        "type": "record",
-        "name": "manifest_file",
-        "fields": [
-            {"name": "manifest_path", "type": "string", "field-id": 500},
-            {"name": "manifest_length", "type": "long", "field-id": 501},
-            {"name": "partition_spec_id", "type": "int", "field-id": 502},
-            {"name": "content", "type": "int", "field-id": 517},
-            {"name": "sequence_number", "type": "long", "field-id": 515},
-            {"name": "min_sequence_number", "type": "long", "field-id": 516},
-            {"name": "added_snapshot_id", "type": "long", "field-id": 503},
-            {"name": "added_files_count", "type": "int", "field-id": 504},
-            {"name": "existing_files_count", "type": "int", "field-id": 505},
-            {"name": "deleted_files_count", "type": "int", "field-id": 506},
-            {"name": "added_rows_count", "type": "long", "field-id": 512},
-            {"name": "existing_rows_count", "type": "long", "field-id": 513},
-            {"name": "deleted_rows_count", "type": "long", "field-id": 514},
-        ],
+        "status": 1,
+        "snapshot_id": snapshot_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": {
+            "content": content,
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": rows,
+            "file_size_in_bytes": size,
+            "equality_ids": list(equality_ids) or None,
+        },
     }
 
 
-def _stage_parquet(df: DataFrame, table_path: str) -> list[tuple[str, int, int]]:
-    """Distributed parquet write → move into ``data/``; returns
-    (absolute path, rows, bytes) per file. Row counts come from the
-    parquet footers (no extra Spark job)."""
-    import pyarrow.parquet as pq
+def _write_snapshot(
+    meta_dir: str,
+    snapshot_id: int,
+    seq: int,
+    entries: list[dict],
+    prior_manifests: list[dict],
+    now_ms: int,
+) -> dict:
+    """Write a manifest of ``entries`` and a manifest list of
+    ``prior_manifests`` plus that manifest; return the snapshot."""
+    manifest_path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m0.avro")
+    manifest_bytes = write_container(_MANIFEST_ENTRY_SCHEMA, entries)
+    with open(manifest_path, "wb") as fh:
+        fh.write(manifest_bytes)
+    added_rows = sum(e["data_file"]["record_count"] for e in entries)
+    new_manifest = {
+        "manifest_path": manifest_path,
+        "manifest_length": len(manifest_bytes),
+        "partition_spec_id": 0,
+        "content": 0,  # data manifest
+        "sequence_number": seq,
+        "min_sequence_number": min((e["sequence_number"] for e in entries), default=seq),
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": len(entries),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": added_rows,
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+    }
+    # foreign-table manifests may lack some of our schema's fields
+    defaults = {f["name"]: 0 for f in _MANIFEST_LIST_SCHEMA["fields"]}
+    carried = [{**defaults, **m} for m in prior_manifests]
+    ml_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
+    with open(ml_path, "wb") as fh:
+        fh.write(write_container(_MANIFEST_LIST_SCHEMA, carried + [new_manifest]))
+    return {
+        "snapshot-id": snapshot_id,
+        "sequence-number": seq,
+        "timestamp-ms": now_ms,
+        "summary": {
+            "operation": "append",
+            "added-data-files": str(len(entries)),
+            "added-records": str(added_rows),
+        },
+        "manifest-list": ml_path,
+        "schema-id": 0,
+    }
 
-    staging = os.path.join(table_path, f".staging-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    data_dir = os.path.join(table_path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    out = []
-    try:
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            src = os.path.join(staging, f)
-            dst = os.path.join(data_dir, f"{uuid.uuid4().hex}-{f}")
-            rows = pq.ParquetFile(src).metadata.num_rows
-            size = os.path.getsize(src)
-            os.rename(src, dst)
-            out.append((dst, rows, size))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return out
+
+def _table_metadata(
+    base: dict | None, snapshot: dict, location: str, fields: list[dict]
+) -> dict:
+    """Table metadata whose current snapshot is ``snapshot``, on top of
+    ``base`` (or of a new unpartitioned table of ``fields``)."""
+    meta = base or {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": location,
+        "last-column-id": len(fields),
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": fields}],
+        "current-schema-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": []}],
+        "default-spec-id": 0,
+        "last-partition-id": 999,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "default-sort-order-id": 0,
+        "properties": {},
+    }
+    return {
+        **meta,
+        "last-sequence-number": snapshot["sequence-number"],
+        "last-updated-ms": snapshot["timestamp-ms"],
+        "snapshots": [*meta.get("snapshots", []), snapshot],
+        "current-snapshot-id": snapshot["snapshot-id"],
+    }
+
+
+@dataclass(frozen=True)
+class V2File:
+    """One file entry for :func:`write_v2_table`.
+
+    content: 0 = data, 1 = position deletes, 2 = equality deletes.
+    ``equality_ids`` are Iceberg field IDs (schema order, 1-based)
+    and are required iff content == 2.
+    """
+
+    path: str
+    seq: int
+    content: int = 0
+    equality_ids: tuple[int, ...] = field(default_factory=tuple)
+
+
+def write_v2_table(
+    root: str,
+    schema_fields: list[tuple[str, str]],
+    files: list[V2File],
+    *,
+    snapshot_id: int = 100,
+) -> str:
+    """FIXTURE: lay down ``metadata/v1.metadata.json`` (overwriting any)
+    for a format-version-2 table whose single current snapshot
+    references ``files``, parquet files the caller already wrote.
+    ``schema_fields`` is ``[(name, iceberg_type), ...]``; field IDs are
+    assigned 1..N in order. Returns the table root."""
+    meta_dir = os.path.join(root, "metadata")
+    os.makedirs(meta_dir, exist_ok=True)
+    entries = [
+        _manifest_entry(
+            snapshot_id,
+            f.seq,
+            f.path,
+            pq.read_metadata(f.path).num_rows,
+            os.path.getsize(f.path),
+            f.content,
+            f.equality_ids,
+        )
+        for f in files
+    ]
+    seq = max((f.seq for f in files), default=0)
+    snapshot = _write_snapshot(meta_dir, snapshot_id, seq, entries, [], int(time.time() * 1000))
+    fields = [
+        {"id": i + 1, "name": n, "required": False, "type": t}
+        for i, (n, t) in enumerate(schema_fields)
+    ]
+    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
+        json.dump(_table_metadata(None, snapshot, root, fields), fh)
+    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+        fh.write("1")
+    return root
 
 
 def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int:
@@ -188,9 +323,8 @@ def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int
     if mode not in ("error", "append"):
         raise ValueError(f"unsupported mode {mode!r}")
     meta_dir = os.path.join(path, "metadata")
-    exists = os.path.isdir(meta_dir) and any(
-        f.endswith(".metadata.json") for f in os.listdir(meta_dir)
-    )
+    names = os.listdir(meta_dir) if os.path.isdir(meta_dir) else []
+    exists = any(f.endswith(".metadata.json") for f in names)
     if exists and mode == "error":
         raise FileExistsError(
             f"{path} is already an Iceberg table (mode='error'); use mode='append'"
@@ -199,23 +333,28 @@ def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int
 
     now_ms = int(time.time() * 1000)
     snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
+    fields = [
+        {
+            "id": i + 1,
+            "name": f.name,
+            "required": not f.nullable,
+            "type": _iceberg_type(f.dataType),
+        }
+        for i, f in enumerate(df.schema.fields)
+    ]
 
+    meta = None
+    version = 1
+    parent = None
+    prior_manifests: list[dict] = []
     if exists:
-        from dbt_lakehouse_aws_spark.sources.iceberg_reader import IcebergTable
-
-        tbl = IcebergTable(df.sparkSession, path)
-        meta = tbl._current_metadata()
-        version = (
-            max(
-                int(f[1 : f.index(".")])
-                for f in os.listdir(meta_dir)
-                if f.endswith(".metadata.json") and f.startswith("v")
-            )
-            + 1
-        )
-        seq = int(meta.get("last-sequence-number", 0)) + 1
+        # the base is the version this commit follows: the newest one
+        # listed, never the (advisory, possibly stale) version hint
+        version = max(int(m.group(1)) for f in names if (m := _META_RE.match(f))) + 1
+        with open(os.path.join(meta_dir, f"v{version - 1}.metadata.json")) as fh:
+            meta = json.load(fh)
         # schema compatibility: same names/types, by name
-        want = {f["name"]: f["type"] for f in _iceberg_schema(df)["fields"]}
+        want = {f["name"]: f["type"] for f in fields}
         if "schemas" in meta:
             cur = {
                 f["name"]: f["type"]
@@ -231,119 +370,25 @@ def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int
             )
         snaps = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
         parent = meta.get("current-snapshot-id")
-        prior_manifests: list[dict] = []
         if parent is not None and parent in snaps and "manifest-list" in snaps[parent]:
-            from dbt_lakehouse_aws_spark.sources.iceberg_reader import _local_path
-
             with open(_local_path(snaps[parent]["manifest-list"], path), "rb") as fh:
                 _, prior_manifests = read_container(fh.read())
-    else:
-        meta = None
-        version = 1
-        seq = 1
-        parent = None
-        prior_manifests = []
+    seq = 1 if meta is None else int(meta.get("last-sequence-number", 0)) + 1
 
-    staged = _stage_parquet(df, path)
-
-    # manifest of ADDED files — explicit sequence numbers (no
-    # inheritance for readers to resolve)
+    staged = stage(df, path, lambda rel: os.path.join("data", f"{uuid.uuid4().hex}-{rel}"))
     entries = [
-        {
-            "status": 1,  # ADDED
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0,
-                "file_path": p,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": rows,
-                "file_size_in_bytes": size,
-            },
-        }
-        for p, rows, size in staged
+        _manifest_entry(snapshot_id, seq, os.path.join(path, f.path), f.rows, f.size)
+        for f in staged
     ]
-    manifest_path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m0.avro")
-    manifest_bytes = write_container(_manifest_schema(), entries)
-    with open(manifest_path, "wb") as fh:
-        fh.write(manifest_bytes)
-
-    added_rows = sum(r for _, r, _ in staged)
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": len(manifest_bytes),
-        "partition_spec_id": 0,
-        "content": 0,  # data manifest
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(staged),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": added_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    # carry prior manifests forward (append semantics); foreign-table
-    # entries may lack some of our schema's fields — default them
-    defaults = {f["name"]: 0 for f in _manifest_list_schema()["fields"]}
-    carried = [{**defaults, **m} for m in prior_manifests]
-    ml_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
-    with open(ml_path, "wb") as fh:
-        fh.write(write_container(_manifest_list_schema(), carried + [new_manifest]))
-
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "summary": {
-            "operation": "append",
-            "added-data-files": str(len(staged)),
-            "added-records": str(added_rows),
-        },
-        "manifest-list": ml_path,
-        "schema-id": 0,
-    }
+    snapshot = _write_snapshot(meta_dir, snapshot_id, seq, entries, prior_manifests, now_ms)
     if parent is not None:
         snapshot["parent-snapshot-id"] = parent
 
-    if meta is None:
-        new_meta = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid4()),
-            "location": path,
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            "last-column-id": len(df.schema.fields),
-            "schemas": [_iceberg_schema(df)],
-            "current-schema-id": 0,
-            "partition-specs": [{"spec-id": 0, "fields": []}],
-            "default-spec-id": 0,
-            "last-partition-id": 999,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "default-sort-order-id": 0,
-            "properties": {},
-            "snapshots": [snapshot],
-            "current-snapshot-id": snapshot_id,
-        }
-    else:
-        new_meta = dict(meta)
-        new_meta["last-sequence-number"] = seq
-        new_meta["last-updated-ms"] = now_ms
-        new_meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
-        new_meta["current-snapshot-id"] = snapshot_id
-
-    commit_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    # O_EXCL put-if-absent: exactly one writer wins a version
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(new_meta, fh)
-    except BaseException:
-        os.unlink(commit_path)
-        raise
+    commit(
+        meta_dir,
+        f"v{version}.metadata.json",
+        json.dumps(_table_metadata(meta, snapshot, path, fields)),
+    )
     hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
     with open(hint_tmp, "w") as fh:
         fh.write(str(version))

@@ -8,6 +8,7 @@ import ast
 import importlib
 import importlib.util
 import pathlib
+import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "dbt_lakehouse_aws_spark"
 
@@ -169,3 +170,30 @@ def test_driver_rows_become_frames_only_through_local_frame():
         if lines:
             offenders[str(p.relative_to(PKG))] = lines
     assert not offenders, f"createDataFrame over python rows (use local_frame): {offenders}"
+
+
+def test_write_decisions_live_only_in_the_kernel():
+    """The three write decisions of the ACID, Delta and Iceberg tables
+    are made once, in ``sources/tablefiles.py``: the put-if-absent
+    commit (``os.link``; ``O_EXCL`` opens leave a partial version file
+    visible) and the parquet footer statistics reads. Iceberg's Avro
+    manifest-entry and manifest-list schemas are defined once in the
+    package. Static text scan: no Spark session."""
+    kernel = PKG / "sources" / "tablefiles.py"
+    offenders = {}
+    for p in sorted((PKG / "sources").glob("*.py")):
+        if p == kernel:
+            continue
+        text = p.read_text()
+        found = [t for t in ("os.O_EXCL", "os.link(") if t in text]
+        found += [".statistics"] if re.search(r"\.statistics\b", text) else []
+        if found:
+            offenders[p.name] = found
+    assert not offenders, f"write decisions outside tablefiles.py: {offenders}"
+    for name in ('"manifest_entry"', '"manifest_file"'):
+        defs = {
+            str(p.relative_to(PKG)): p.read_text().count(name)
+            for p in PKG.rglob("*.py")
+            if name in p.read_text()
+        }
+        assert sum(defs.values()) == 1, f"{name} schema defined in {defs}"

@@ -113,43 +113,6 @@ def test_read_jsonl_source_with_quarantine(spark, tmp_path):
     df.unpersist()
 
 
-def test_compact_reduces_file_count(spark, tmp_path):
-    """Small-files compaction rewrites to size-targeted files and
-    preserves the data exactly."""
-    from dbt_lakehouse_aws_spark.sources.catalog import TableCatalog
-    import os
-
-    cat = TableCatalog(spark, warehouse_dir=str(tmp_path))
-    df = spark.range(0, 10_000).withColumn("v", F.col("id") * 2)
-    cat.put("main", "t", df.repartition(64), materialize=True)
-    path = tmp_path / "main" / "t"
-    n_before = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert n_before == 64
-    out = cat.compact("main", "t", target_file_bytes=1 << 30)
-    n_after = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert n_after == 1
-    assert out.count() == 10_000
-    assert out.agg(F.sum("v")).collect()[0][0] == 9999 * 10_000
-
-
-def test_compact_partitioned_table_keeps_layout(spark, tmp_path):
-    """Partitioned tables compact within each Hive partition and the
-    partition column survives the rewrite."""
-    from dbt_lakehouse_aws_spark.sources.catalog import TableCatalog
-    import os
-
-    cat = TableCatalog(spark, warehouse_dir=str(tmp_path))
-    df = spark.range(0, 1000).withColumn("p", (F.col("id") % 2).cast("string"))
-    cat.put("main", "pt", df.repartition(16), materialize=True, partition_by=["p"])
-    out = cat.compact("main", "pt", target_file_bytes=1 << 30)
-    root = tmp_path / "main" / "pt"
-    assert sorted(d for d in os.listdir(root) if d.startswith("p=")) == ["p=0", "p=1"]
-    for d in ("p=0", "p=1"):
-        files = [f for f in os.listdir(root / d) if f.endswith(".parquet")]
-        assert len(files) == 1
-    assert out.count() == 1000 and set(out.columns) == {"id", "p"}
-
-
 def test_sorted_write_tightens_rowgroup_stats(spark, tmp_path):
     """sort_by clustering: after a sorted write, a point predicate on
     the sort key matches the stored min/max ordering (smoke-proof via
@@ -551,6 +514,39 @@ def test_delta_writer_guards(spark, tmp_path):
             dw.write_delta_table(df, root, mode="append", partition_by=["y"])
 
 
+def test_delta_commit_is_never_seen_partial(spark, tmp_path, monkeypatch):
+    """A reader probing from inside an overwrite's commit — at every
+    file-write step of it — sees version 0 or the complete version 1,
+    never an empty or partial version file."""
+    import os as _os
+
+    from dbt_lakehouse_aws_spark.sources.delta_reader import DeltaLogTable
+    from dbt_lakehouse_aws_spark.sources.delta_writer import write_delta_table
+
+    root = str(tmp_path / "t")
+    mk = lambda lo, hi: spark.createDataFrame(
+        [(i, i * 10) for i in range(lo, hi)], "id long, v long"
+    )
+    write_delta_table(mk(0, 5), root)
+    seen = []
+
+    def probing(real):
+        def step(*args, **kwargs):
+            t = DeltaLogTable(spark, root)
+            v = t.snapshot().version
+            seen.append((v, tuple(sorted(r["id"] for r in t.read(v).collect()))))
+            return real(*args, **kwargs)
+
+        return step
+
+    for name in ("fdopen", "fsync", "link"):
+        monkeypatch.setattr(_os, name, probing(getattr(_os, name)))
+    write_delta_table(mk(100, 102), root, mode="overwrite")
+    monkeypatch.undo()
+    assert seen, "no commit step was probed"
+    assert set(seen) <= {(0, (0, 1, 2, 3, 4)), (1, (100, 101))}, seen
+
+
 # ---------------------------------------------------------------------------
 # Avro codec + distributed scan (sources/avro_io.py)
 # ---------------------------------------------------------------------------
@@ -762,7 +758,7 @@ def test_iceberg_v2_position_deletes(spark, tmp_path):
     a delete file with a LOWER sequence number than the data file
     does not apply (spec: applies to data seq <= delete seq)."""
     from dbt_lakehouse_aws_spark.sources.iceberg_reader import IcebergTable
-    from dbt_lakehouse_aws_spark.sources.iceberg_testing import V2File, write_v2_table
+    from dbt_lakehouse_aws_spark.sources.iceberg_writer import V2File, write_v2_table
 
     root = str(tmp_path / "t")
     data = spark.range(10).select(
@@ -799,7 +795,7 @@ def test_iceberg_v2_equality_deletes_seq_scoped(spark, tmp_path):
     smaller sequence number: rows re-inserted after the delete
     survive; NULL equality values match null-safely."""
     from dbt_lakehouse_aws_spark.sources.iceberg_reader import IcebergTable
-    from dbt_lakehouse_aws_spark.sources.iceberg_testing import V2File, write_v2_table
+    from dbt_lakehouse_aws_spark.sources.iceberg_writer import V2File, write_v2_table
 
     root = str(tmp_path / "t")
     a = spark.createDataFrame(
@@ -912,7 +908,7 @@ def test_iceberg_write_commit_is_put_if_absent(spark, tmp_path):
     # picked version 2 (post-listing, pre-commit) — inject it inside
     # the staging step, then the O_EXCL open must lose loudly
     v2 = _os.path.join(root, "metadata", "v2.metadata.json")
-    orig_stage = W._stage_parquet
+    orig_stage = W.write_container
     peer_payload = open(
         _os.path.join(root, "metadata", "v1.metadata.json")
     ).read()
@@ -923,14 +919,39 @@ def test_iceberg_write_commit_is_put_if_absent(spark, tmp_path):
             fh.write(peer_payload)
         return out
 
-    W._stage_parquet = racing_stage
+    W.write_container = racing_stage
     try:
         with _pytest.raises(FileExistsError):
             write_iceberg_table(a, root, mode="append")
     finally:
-        W._stage_parquet = orig_stage
+        W.write_container = orig_stage
     # the peer's commit is untouched (never overwritten)
     assert open(v2).read() == peer_payload
+
+
+def test_iceberg_append_from_stale_hint_keeps_every_snapshot(spark, tmp_path):
+    """An append builds on the newest LISTED metadata version, the one
+    it claims N+1 over: a version hint that lags (here reset to 1
+    after two commits) must not make it commit v3 on top of v1's
+    snapshot list and lose v2's rows."""
+    import json as _json
+    import os as _os
+
+    from dbt_lakehouse_aws_spark.sources.iceberg_reader import IcebergTable
+    from dbt_lakehouse_aws_spark.sources.iceberg_writer import write_iceberg_table
+
+    root = str(tmp_path / "t")
+    mk = lambda i: spark.createDataFrame([(i,)], "id long")
+    write_iceberg_table(mk(1), root)
+    write_iceberg_table(mk(2), root, mode="append")
+    with open(_os.path.join(root, "metadata", "version-hint.text"), "w") as fh:
+        fh.write("1")
+    assert write_iceberg_table(mk(3), root, mode="append") == 3
+
+    with open(_os.path.join(root, "metadata", "v3.metadata.json")) as fh:
+        meta = _json.load(fh)
+    assert len(meta["snapshots"]) == 3
+    assert sorted(r["id"] for r in IcebergTable(spark, root).read().collect()) == [1, 2, 3]
 
 
 def test_explode_archive_members_zip_and_tar(spark):
