@@ -1623,8 +1623,8 @@ def iceberg_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                             pq.read_metadata(p).num_rows, _os.path.getsize(p))
         return {**e, "status": status}
 
-    snap1 = _write_snapshot(meta_dir, 100, 0, [entry(1, b) for b in range(4)], [], 1)
-    snap2 = _write_snapshot(
+    snap1, _ = _write_snapshot(meta_dir, 100, 0, [entry(1, b) for b in range(4)], [], 1)
+    snap2, _ = _write_snapshot(
         meta_dir, 200, 0, [entry(0, b) for b in range(3)] + [entry(2, 3)], [], 2
     )
     meta = {

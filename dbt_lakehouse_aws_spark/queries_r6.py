@@ -1183,9 +1183,9 @@ def stream_append_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     events file streams into an ACID table through
     streaming/ingest.py::stream_append_into_acid (one atomic commit
     carrying BOTH the rows and the (app, batch) txn marker), then a
-    crash-replay is SIMULATED by re-running the writer's own guard
-    with the already-committed batch id — the txn watermark
-    (sources/acid.py::last_txn_batch) must skip it. The oracle pins:
+    crash-replay appends batch 0 again through the table itself —
+    its txn watermark (sources/acid.py::last_txn_batch) must skip
+    it. The oracle pins:
     table row count == source count after the first pass, unchanged
     after the replay, 0 rows added. Merge idempotency cannot give
     this for appends; the txn protocol is what makes the sink
@@ -1215,13 +1215,10 @@ def stream_append_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 = t.read().count()
 
     # crash-replay: same app id (derived from the checkpoint), batch 0
-    app_id = f"stream_append:{ckpt}"
-    seen = t.last_txn_batch(app_id)
     replay = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "event_type"
     )
-    if not (seen is not None and 0 <= seen):  # the sink's own guard
-        t.write(replay, mode="append", txn=(app_id, 0))
+    t.write(replay, mode="append", txn=(f"stream_append:{ckpt}", 0))
     n2 = t.read().count()
     return local_frame(
         spark,

@@ -1128,12 +1128,11 @@ def stream_merge_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_merge_into_acid (latest-event-per-user upsert, keys =
     user_id, order = event_id; each micro-batch is ONE atomic COW
     commit carrying rows + (app, batch) txn marker), then a
-    crash-replay is simulated by re-running the writer's guard with
-    the committed batch id — last_txn_batch must skip it WITHOUT
-    re-planning the merge. The oracle computes the end state (the
-    max-event_id row per user, grouped by type) straight from the
-    source and pins replay_added = 0: idempotence by txn protocol,
-    not by merge-rerun luck."""
+    crash-replay merges batch 0 again through the table itself — its
+    txn watermark must skip it WITHOUT running the merge. The oracle
+    computes the end state (the max-event_id row per user, grouped by
+    type) straight from the source and pins replay_added = 0:
+    idempotence by txn protocol, not by merge-rerun luck."""
     import tempfile
     import uuid
 
@@ -1160,16 +1159,13 @@ def stream_merge_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = AcidTable(spark, table_path)
     n1 = t.read().count()
 
-    # crash-replay of batch 0 through the writer's own guard
-    app_id = f"stream_merge:{ckpt}"
-    seen = t.last_txn_batch(app_id)
-    if not (seen is not None and 0 <= seen):
-        replay = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .select("event_id", "user_id", "event_type")
-            .dropDuplicates(["user_id"])
-        )
-        t.merge(replay, ["user_id"], txn=(app_id, 0))
+    # crash-replay of batch 0 through the table
+    replay = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("event_id", "user_id", "event_type")
+        .dropDuplicates(["user_id"])
+    )
+    t.merge(replay, ["user_id"], txn=(f"stream_merge:{ckpt}", 0))
     n2 = t.read().count()
 
     return (

@@ -205,7 +205,7 @@ class DurableDraftBoard:
 
     * ``put`` is an upsert → ``AcidTable.merge`` on ``player_id``
       (WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT — DynamoDB
-      PutItem semantics).
+      PutItem semantics; the first put creates the table).
     * ``delete`` is a keyed ``AcidTable.delete`` (DeleteItem).
     * ``get``/``scan`` read the latest snapshot; the board is
       bounded by league size (reference: ~300 players), so the
@@ -241,10 +241,7 @@ class DurableDraftBoard:
             "player_name": player_name,
             "drafted_to_my_team": my_team,
         }
-        if self.table.exists():
-            self.table.merge(self._item_df(item), ["player_id"])
-        else:
-            self.table.write(self._item_df(item), mode="overwrite")
+        self.table.merge(self._item_df(item), ["player_id"])
 
     def _read(self) -> DataFrame | None:
         if not self.table.exists():

@@ -27,6 +27,12 @@ first principles:
   (never deleted until :meth:`vacuum`), a reader's DataFrame is
   repeatable against concurrent writers.
 * **Time travel.** ``read(version=N)`` / :meth:`history`.
+* **Exactly-once landing.** ``write``, ``merge`` and ``replace_where``
+  with ``txn=(app, batch)`` record it in their commit, and a replay
+  of a batch that already landed returns the current snapshot without
+  staging a file. ``merge`` and ``replace_where`` on a path with no
+  commits create the table, so a caller hands over a frame and
+  nothing else.
 * **Copy-on-write MERGE / DELETE with file-level pruning.** MERGE
   rewrites *only* the files that actually contain matched keys:
   manifest min/max stats prune the candidate set without touching
@@ -95,6 +101,7 @@ class Snapshot:
     stats: dict[str, dict[str, list]]  # file -> col -> [min, max]
     parent: int | None
     renames: dict[str, str] = field(default_factory=dict)  # physical col -> logical col
+    txns: dict[str, int] = field(default_factory=dict)  # app -> last committed batch
 
 
 def _json_safe(v) -> bool:
@@ -190,6 +197,7 @@ class AcidTable:
         schema_json = ""
         operation, parent = "", None
         renames: dict[str, str] = {}
+        txns: dict[str, int] = {}
         removed: dict[str, dict] = {k: {} for k in _REMOVED_FEATURES}
         start = 0
         if base:
@@ -200,6 +208,13 @@ class AcidTable:
             renames = dict(cp.get("renames", {}))
             removed = {k: cp.get(k, {}) for k in _REMOVED_FEATURES}
             start = base[-1] + 1
+            txns = dict(cp.get("txns", {}))
+            if "txns" not in cp:
+                # a checkpoint from before checkpoints carried the txn
+                # map: the deltas it covers still hold each txn
+                for i in (i for i in self._versions() if i < start):
+                    if t := self._read_json(f"{i:020d}.json").get("txn"):
+                        txns[t["app"]] = int(t["batch"])
         for i in range(start, v + 1):
             m = self._read_json(f"{i:020d}.json")
             for f in m.get("remove", []):
@@ -210,6 +225,8 @@ class AcidTable:
             # pre-rename deltas carry no key: inherit
             renames = dict(m.get("renames", renames))
             removed = {k: m.get(k, removed[k]) for k in _REMOVED_FEATURES}
+            if t := m.get("txn"):
+                txns[t["app"]] = int(t["batch"])
         # a vector annotated one data file; it died with its file
         removed["dvs"] = {f: r for f, r in removed["dvs"].items() if f in files}
         used = [name for k, name in _REMOVED_FEATURES.items() if removed[k]]
@@ -226,6 +243,7 @@ class AcidTable:
             stats=files,
             parent=parent,
             renames=renames,
+            txns=txns,
         )
 
     def history(self) -> list[Snapshot]:
@@ -260,22 +278,29 @@ class AcidTable:
             )
         return best
 
+    def _current(self) -> Snapshot | None:
+        return self.snapshot() if self.exists() else None
+
     def last_txn_batch(self, app_id: str) -> int | None:
-        """Highest ``batch`` id committed under ``app_id`` — the
-        Delta-style idempotent-writer protocol: a streaming sink
-        records (app, batch) in the SAME atomic commit as its data,
-        and on restart skips every batch ≤ this watermark. Unlike
+        """Last ``batch`` id committed under ``app_id`` — the
+        Delta-style idempotent-writer protocol: ``write``, ``merge``
+        and ``replace_where`` called with ``txn=(app, batch)`` record
+        it in the SAME atomic commit as their data, and return the
+        current snapshot without staging a file when ``batch`` is at
+        or below this watermark (:meth:`_landed`). Unlike
         merge-idempotency arguments this also makes APPEND sinks
         exactly-once: a replayed batch is detected, not re-applied.
-        Delta log files are never rewritten (checkpoints only bound
-        replay), so a reverse scan over deltas is complete; cost is
-        O(versions since that app's last commit) metadata reads."""
-        for v in reversed(self._versions()):
-            meta = self._read_json(f"{v:020d}.json")
-            t = meta.get("txn")
-            if t and t.get("app") == app_id:
-                return int(t["batch"])
-        return None
+        The ``{app: batch}`` map is replayed like the file list: each
+        checkpoint records it and the deltas after the newest one
+        update it, so it survives :meth:`vacuum` dropping old deltas."""
+        snap = self._current()
+        return None if snap is None else snap.txns.get(app_id)
+
+    @staticmethod
+    def _landed(snap: Snapshot | None, txn: tuple[str, int] | None) -> bool:
+        """Whether ``txn``'s batch already landed in ``snap``: the one
+        replay check, made before a write stages any data file."""
+        return txn is not None and snap is not None and snap.txns.get(txn[0], -1) >= int(txn[1])
 
     def _commit(
         self,
@@ -331,6 +356,7 @@ class AcidTable:
             "schema": snap.schema_json,
             "parent": snap.parent,
             "renames": snap.renames,
+            "txns": snap.txns,
         }
         tmp = os.path.join(self._log, f".cptmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
@@ -461,8 +487,26 @@ class AcidTable:
         range-prune (e.g. the LSH band index, joined on hashed keys),
         the footer reads per append are pure cost. Reads treat a file
         with no stats entry as unprunable, so the trade is always
-        safe; MERGE on such files simply rewrites conservatively."""
-        snap = self.snapshot() if self.exists() else None
+        safe; MERGE on such files simply rewrites conservatively.
+
+        A ``txn`` batch that already landed is a no-op returning the
+        current snapshot (:meth:`last_txn_batch`)."""
+        if mode not in ("overwrite", "append"):
+            raise ValueError(f"mode must be overwrite|append, got {mode!r}")
+        return self._write_on(self._current(), df, mode, collect_stats, txn)
+
+    def _write_on(
+        self,
+        snap: Snapshot | None,
+        df: DataFrame,
+        mode: str,
+        collect_stats: bool = True,
+        txn: tuple[str, int] | None = None,
+    ) -> Snapshot:
+        """:meth:`write` on top of ``snap`` (``None``: the table's
+        first commit, which loses to any writer that created it)."""
+        if self._landed(snap, txn):
+            return snap
         base = None if snap is None else snap.version
         if snap is not None:
             # data files always carry PHYSICAL names
@@ -471,15 +515,12 @@ class AcidTable:
         new_files = self._write_data_files(df, hint)
         stats = self._stats_for(new_files, df.schema) if collect_stats else {}
         schema_json = df.schema.json()
+        files = list(new_files)
         if mode == "append" and snap is not None:
             old_schema = StructType.fromJson(json.loads(snap.schema_json))
             schema_json = self._evolved_schema(old_schema, df).json()
-            files = list(snap.files) + list(new_files)
+            files = list(snap.files) + files
             stats = {**snap.stats, **stats}
-        elif mode in ("overwrite", "append"):
-            files = list(new_files)
-        else:
-            raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         return self._commit(
             operation=f"WRITE {mode}",
             files=files,
@@ -652,6 +693,11 @@ class AcidTable:
         snapshot (optimistic concurrency, Delta-style), up to
         ``COMMIT_ATTEMPTS`` attempts in total.
 
+        On a path with no commits the updates are committed as
+        version 0 (dbt's first incremental run; DynamoDB ``PutItem``
+        on a new item). A ``txn`` batch that already landed is a no-op
+        returning the current snapshot.
+
         ``not_matched_by_source_delete`` adds Delta's ``WHEN NOT
         MATCHED BY SOURCE THEN DELETE`` clause: target rows whose key
         the source does NOT carry AND that satisfy the given condition
@@ -662,12 +708,16 @@ class AcidTable:
         not O(table).
         """
         keys = list(keys)
-        return self._with_rebase(
-            lambda: self._merge_once(
-                self.snapshot(), updates, keys, txn=txn,
-                nmbs_delete=not_matched_by_source_delete,
+
+        def attempt() -> Snapshot:
+            snap = self._current()
+            if snap is None:
+                return self._write_on(None, updates, "overwrite", txn=txn)
+            return self._merge_once(
+                snap, updates, keys, txn=txn, nmbs_delete=not_matched_by_source_delete
             )
-        )
+
+        return self._with_rebase(attempt)
 
     def _merge_once(
         self,
@@ -677,6 +727,8 @@ class AcidTable:
         txn: tuple[str, int] | None = None,
         nmbs_delete: str | None = None,
     ) -> Snapshot:
+        if self._landed(snap, txn):
+            return snap
         schema = StructType.fromJson(json.loads(snap.schema_json))
         # the incoming delta is written against logical names; every
         # file-level step below runs in physical names
@@ -850,16 +902,21 @@ class AcidTable:
 
         Mirrors Delta's guard: every incoming row must itself
         satisfy the predicate (a batch that leaks outside its
-        partition is rejected BEFORE any file is written)."""
-        snap = self.snapshot()
-        schema = StructType.fromJson(json.loads(snap.schema_json))
+        partition is rejected BEFORE any file is written). On a path
+        with no commits the batch, once guarded, is version 0. A
+        ``txn`` batch that already landed is a no-op returning the
+        current snapshot."""
+        snap = self._current()
+        if self._landed(snap, txn):
+            return snap
         cond = F.expr(predicate)  # LOGICAL column names
-
         if df.filter(~cond | cond.isNull()).limit(1).count() > 0:
             raise ValueError(
                 f"replace_where batch contains rows violating {predicate!r}"
             )
-
+        if snap is None:
+            return self._write_on(None, df, "overwrite", txn=txn)
+        schema = StructType.fromJson(json.loads(snap.schema_json))
         touched, rewritten = self._rewrite_matching(snap, cond)
         new_files = self._write_data_files(
             self._to_physical(df, snap.renames), snap.version + 1

@@ -1,4 +1,4 @@
-"""Read-only adapter for EXISTING Delta Lake tables (`_delta_log`).
+"""Reader for Delta Lake tables (`_delta_log`), written here or by other engines.
 
 The engine's own transactional layer (:mod:`.acid`) writes a bespoke
 manifest format; a user migrating from the reference stack may
@@ -12,6 +12,8 @@ adapter implements the PUBLIC Delta transaction-log protocol
 * the log is ``_delta_log/{version:020d}.json`` files of
   newline-delimited JSON *actions* (``metaData``, ``add``,
   ``remove``, ``protocol``, ``commitInfo``);
+* the newest listed ``{version:020d}.json`` is the current version;
+  no hint file (``_last_checkpoint``) is trusted to name it;
 * a snapshot at version V = replay of commits 0..V: ``add`` puts a
   data file in the live set keyed by path, ``remove`` deletes it;
 * ``metaData.schemaString`` is a Spark StructType JSON (Delta uses
@@ -26,10 +28,9 @@ for log replay, not a correctness requirement as long as the JSON
 deltas are still present; this reader replays JSON only and raises
 clearly when a ``_last_checkpoint`` horizon has pruned them.
 
-Read-only by design: writing Delta correctly requires the full
-protocol (checkpoints, invariants, deletion vectors) — committing
-through this adapter could corrupt a table other engines also write,
-so mutation stays the job of :class:`.acid.AcidTable`.
+Writes (create, append, overwrite) live in :mod:`.delta_writer`;
+row-level mutation (MERGE, DELETE) is the job of
+:class:`.acid.AcidTable`.
 
 Scale: replay cost is O(log entries) driver-side JSON parsing —
 metadata, never data; the data scan itself is a plain multi-file
@@ -93,7 +94,7 @@ class DeltaLogTable:
             raise ValueError(
                 f"_delta_log under {self.path} has no contiguous JSON history "
                 f"back to version 0 (found {vs}); parquet-checkpoint replay "
-                "is not supported by this read-only adapter"
+                "is not supported by this reader"
             )
         live: dict[str, dict[str, str | None]] = {}
         schema_json: str | None = None

@@ -22,7 +22,8 @@ Protocol surface written (PROTOCOL.md, reader/writer version 1/2):
   replace);
 * each version file is claimed through the put-if-absent commit of
   :mod:`.tablefiles`: readers never see a partial version, and of two
-  writers racing for a version the loser raises and can retry.
+  writers racing for a version the loser deletes the data files it
+  staged, raises and can retry.
 
 The data files are written by Spark's parquet sink into a staging
 directory and renamed into the table root by :func:`.tablefiles.stage`,
@@ -174,5 +175,10 @@ def write_delta_table(
         }
     )
     # 2. single atomic commit; a writer that lost the version raises
-    commit(log_dir, f"{version:020d}.json", "".join(json.dumps(a) + "\n" for a in actions))
+    commit(
+        log_dir,
+        f"{version:020d}.json",
+        "".join(json.dumps(a) + "\n" for a in actions),
+        staged=[os.path.join(path, f.path) for f in staged],
+    )
     return version

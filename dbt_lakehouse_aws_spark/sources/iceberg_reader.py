@@ -1,4 +1,4 @@
-"""Read-only adapter for EXISTING Apache Iceberg tables.
+"""Reader for Apache Iceberg tables, written here or by other engines.
 
 The reference materializes its lakehouse tables AS Iceberg
 (reference ``dbt_project.yml:38-51`` — ``table_type: iceberg``), so a
@@ -7,8 +7,9 @@ cannot install the iceberg-spark runtime jars, so this adapter walks
 the PUBLIC Iceberg table spec (https://iceberg.apache.org/spec/)
 directly, the same posture as :mod:`.delta_reader` for Delta:
 
-* ``metadata/version-hint.text`` (or the highest
-  ``v{N}.metadata.json``) names the current table metadata;
+* the newest listed ``metadata/v{N}.metadata.json`` is the current
+  table metadata; ``version-hint.text`` is advisory for other
+  engines and may lag a commit, so it is never read;
 * the metadata JSON carries schemas, snapshots, and
   ``current-snapshot-id``; each snapshot points at a MANIFEST LIST;
 * manifest lists and manifests are **Avro container files** — decoded
@@ -18,12 +19,10 @@ directly, the same posture as :mod:`.delta_reader` for Delta:
   with ``status != 2`` (2 = DELETED), read as plain parquet with the
   Iceberg schema mapped to Spark types.
 
-Read-only by design (same rationale as the Delta adapter): correct
-Iceberg WRITES need the full commit protocol (optimistic metadata
-swap, sequence numbers, delete files); mutating a table other
-engines also write through a partial implementation could corrupt
-it. Mutation belongs to the engine's own :class:`.acid.AcidTable`,
-whose design is the same metadata architecture.
+Writes (create and append) live in :mod:`.iceberg_writer`, which
+resolves the current version with the same rule; row-level mutation
+belongs to the engine's own :class:`.acid.AcidTable`, whose design
+is the same metadata architecture.
 
 Scale: snapshot resolution is driver-side metadata work proportional
 to manifest count, never data; the scan itself is a multi-file
@@ -112,6 +111,14 @@ def _spark_type(t) -> DataType:
     raise ValueError(f"unsupported Iceberg type: {t!r} (list/map columns not mapped)")
 
 
+def _latest_metadata_version(meta_dir: str) -> int:
+    """N of the newest listed ``vN.metadata.json`` under ``meta_dir``."""
+    versions = [int(m.group(1)) for f in os.listdir(meta_dir) if (m := _META_RE.match(f))]
+    if not versions:
+        raise FileNotFoundError(f"no v*.metadata.json under {meta_dir}")
+    return max(versions)
+
+
 def _local_path(file_path: str, table_root: str) -> str:
     """Manifest file paths are URIs or absolute paths; resolve to a
     local filesystem path, falling back to table-root-relative."""
@@ -150,20 +157,7 @@ class IcebergTable:
             raise FileNotFoundError(f"no metadata/ under {path}")
 
     def _current_metadata(self) -> dict:
-        hint = os.path.join(self._meta_dir, "version-hint.text")
-        if os.path.exists(hint):
-            with open(hint) as fh:
-                v = int(fh.read().strip())
-            name = f"v{v}.metadata.json"
-        else:
-            versions = sorted(
-                int(m.group(1))
-                for f in os.listdir(self._meta_dir)
-                if (m := _META_RE.match(f))
-            )
-            if not versions:
-                raise FileNotFoundError(f"no v*.metadata.json under {self._meta_dir}")
-            name = f"v{versions[-1]}.metadata.json"
+        name = f"v{_latest_metadata_version(self._meta_dir)}.metadata.json"
         with open(os.path.join(self._meta_dir, name)) as fh:
             return json.load(fh)
 

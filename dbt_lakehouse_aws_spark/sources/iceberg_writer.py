@@ -22,10 +22,13 @@ iceberg-spark runtime jars; this module emits the PUBLIC table spec
   resolve) from one builder, claimed through the put-if-absent commit
   of :mod:`.tablefiles` (the same commit as :class:`.acid.AcidTable`
   and the Delta writer): two writers racing for a version, exactly
-  one wins, and no reader sees a partial file;
+  one wins, the loser deletes the data files, manifest and manifest
+  list it wrote, and no reader sees a partial file;
 * an append builds on the newest LISTED ``vN.metadata.json`` — the
-  version it then claims N+1 over; ``version-hint.text`` is refreshed
-  via tmp+rename for readers only (advisory, it may lag).
+  version it then claims N+1 over, and the one
+  :class:`.iceberg_reader.IcebergTable` reads; ``version-hint.text``
+  is refreshed via tmp+rename for other engines only (advisory, it
+  may lag).
 
 Scope: unpartitioned append/create (the shapes the reference's CTAS
 models produce). Row-level deletes belong to the engine's own
@@ -67,7 +70,7 @@ from pyspark.sql.types import (
 )
 
 from dbt_lakehouse_aws_spark.sources.avro_io import read_container, write_container
-from dbt_lakehouse_aws_spark.sources.iceberg_reader import _META_RE, _local_path
+from dbt_lakehouse_aws_spark.sources.iceberg_reader import _latest_metadata_version, _local_path
 from dbt_lakehouse_aws_spark.sources.tablefiles import commit, stage
 
 _SPARK_TO_ICEBERG = {
@@ -188,9 +191,10 @@ def _write_snapshot(
     entries: list[dict],
     prior_manifests: list[dict],
     now_ms: int,
-) -> dict:
+) -> tuple[dict, str]:
     """Write a manifest of ``entries`` and a manifest list of
-    ``prior_manifests`` plus that manifest; return the snapshot."""
+    ``prior_manifests`` plus that manifest; return the snapshot and
+    the manifest's path."""
     manifest_path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m0.avro")
     manifest_bytes = write_container(_MANIFEST_ENTRY_SCHEMA, entries)
     with open(manifest_path, "wb") as fh:
@@ -228,7 +232,7 @@ def _write_snapshot(
         },
         "manifest-list": ml_path,
         "schema-id": 0,
-    }
+    }, manifest_path
 
 
 def _table_metadata(
@@ -301,7 +305,7 @@ def write_v2_table(
         for f in files
     ]
     seq = max((f.seq for f in files), default=0)
-    snapshot = _write_snapshot(meta_dir, snapshot_id, seq, entries, [], int(time.time() * 1000))
+    snapshot, _ = _write_snapshot(meta_dir, snapshot_id, seq, entries, [], int(time.time() * 1000))
     fields = [
         {"id": i + 1, "name": n, "required": False, "type": t}
         for i, (n, t) in enumerate(schema_fields)
@@ -350,7 +354,7 @@ def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int
     if exists:
         # the base is the version this commit follows: the newest one
         # listed, never the (advisory, possibly stale) version hint
-        version = max(int(m.group(1)) for f in names if (m := _META_RE.match(f))) + 1
+        version = _latest_metadata_version(meta_dir) + 1
         with open(os.path.join(meta_dir, f"v{version - 1}.metadata.json")) as fh:
             meta = json.load(fh)
         # schema compatibility: same names/types, by name
@@ -380,7 +384,7 @@ def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int
         _manifest_entry(snapshot_id, seq, os.path.join(path, f.path), f.rows, f.size)
         for f in staged
     ]
-    snapshot = _write_snapshot(meta_dir, snapshot_id, seq, entries, prior_manifests, now_ms)
+    snapshot, manifest = _write_snapshot(meta_dir, snapshot_id, seq, entries, prior_manifests, now_ms)
     if parent is not None:
         snapshot["parent-snapshot-id"] = parent
 
@@ -388,6 +392,7 @@ def write_iceberg_table(df: DataFrame, path: str, *, mode: str = "error") -> int
         meta_dir,
         f"v{version}.metadata.json",
         json.dumps(_table_metadata(meta, snapshot, path, fields)),
+        staged=[*(os.path.join(path, f.path) for f in staged), manifest, snapshot["manifest-list"]],
     )
     hint_tmp = os.path.join(meta_dir, f".hint-{uuid.uuid4().hex}")
     with open(hint_tmp, "w") as fh:

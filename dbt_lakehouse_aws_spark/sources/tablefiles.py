@@ -8,6 +8,8 @@ decisions, and each is made here once:
   writes the frame into a staging dir under the table root; each part
   file is renamed into place under the name its caller chooses, and
   its footer is read once, for the row count and for the bounds.
+  Partition values come back unescaped from Spark's hive directory
+  names.
 * :func:`footer_bounds` — per-column min, max and null count from that
   footer, never a data scan. Each format serializes them its own way.
 * :func:`commit` — put-if-absent on a version file. The payload is
@@ -15,7 +17,7 @@ decisions, and each is made here once:
   pattern matches, then hard-linked to the version name. A reader sees
   the previous version or the complete new one, never a partial file;
   of two writers racing for a version one link wins and the other gets
-  :class:`FileExistsError`.
+  :class:`FileExistsError`, after removing the files it staged.
 
 Tables are POSIX-local: the commit point is link(2).
 """
@@ -27,6 +29,7 @@ import shutil
 import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
@@ -62,8 +65,9 @@ def stage(
             rel_dir = os.path.relpath(dirpath, staging)
             pv: dict[str, str | None] = {}
             for comp in rel_dir.split(os.sep) if rel_dir != "." else ():
+                # Spark writes "x/y" as "k=x%2Fy" and "p%q" as "k=p%25q"
                 k, _, v = comp.partition("=")
-                pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+                pv[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
             for f in sorted(files):
                 if not f.endswith(".parquet"):
                     continue  # _SUCCESS, .crc
@@ -112,9 +116,11 @@ def footer_bounds(footer: pq.FileMetaData, cols: Sequence[str]) -> dict[str, tup
     return out
 
 
-def commit(log_dir: str, name: str, payload: str) -> None:
+def commit(log_dir: str, name: str, payload: str, staged: Sequence[str] = ()) -> None:
     """Create ``log_dir/name`` holding ``payload`` if no writer has
-    yet; raise :class:`FileExistsError` if one has."""
+    yet. If one has, delete the ``staged`` files (absolute paths) that
+    only this version would have referenced, and raise
+    :class:`FileExistsError`."""
     os.makedirs(log_dir, exist_ok=True)
     tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as fh:
@@ -123,5 +129,9 @@ def commit(log_dir: str, name: str, payload: str) -> None:
         os.fsync(fh.fileno())
     try:
         os.link(tmp, os.path.join(log_dir, name))
+    except FileExistsError:
+        for p in staged:
+            os.unlink(p)
+        raise
     finally:
         os.unlink(tmp)

@@ -10,12 +10,19 @@ that keeps only the winning ingest key per group.
 
 Scale notes: the file source tracks processed files in the
 checkpoint, so each run reads only new ingest dates — at 100 TB the
-per-run cost is O(new data), not O(table). The merge output is
-overwrite-partitioned parquet; on a real lake this would be a Delta
-``MERGE`` keyed the same way. Event-time watermarking appears in
-:func:`windowed_event_counts` — the stateful-aggregation shape a
-live events feed needs (no reference counterpart; provided as the
-engine's streaming surface).
+per-run cost is O(new data), not O(table). Event-time watermarking
+appears in :func:`windowed_event_counts` — the stateful-aggregation
+shape a live events feed needs (no reference counterpart; provided
+as the engine's streaming surface).
+
+The ACID sinks hand each micro-batch to one
+:class:`~dbt_lakehouse_aws_spark.sources.acid.AcidTable` call, and
+the table owns the landing protocol: it creates itself on the first
+batch, and the exactly-once sinks pass ``txn=(app, batch_id)`` (the
+app id derived from the checkpoint location, Spark's own identity
+for a restarted query), which the table records in the batch's
+commit and checks before landing a replay. No sink keeps its own
+existence or replay check.
 """
 
 from __future__ import annotations
@@ -58,34 +65,29 @@ def incremental_latest_snapshot(
     checkpoint_dir: str,
     key: str = "_ptkey",
 ):
-    """Maintain the S5 'latest snapshot' table incrementally.
+    """Maintain the S5 'latest snapshot' table incrementally, as an
+    ACID table at ``out_dir``.
 
-    Each micro-batch unions new rows with the current table and
-    keeps only rows carrying the max ingest key — so the
-    materialized table always equals what the batch
-    ``latest_snapshot`` operator would produce over the full
-    history, at O(new files) incremental cost.
+    Each micro-batch unions new rows with the current snapshot and
+    keeps only rows carrying the max ingest key — so the table always
+    equals what the batch ``latest_snapshot`` operator would produce
+    over the full history, at O(new files) incremental cost. The
+    result replaces the table in one overwrite commit; the batch
+    reads the current snapshot directly, since its data files are
+    immutable and outlive the commit that unreferences them.
     """
-    import os
-    import shutil
+    from dbt_lakehouse_aws_spark.sources.acid import AcidTable
 
-    spark = stream.sparkSession
+    app_id = f"latest_snapshot:{checkpoint_dir}"
 
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        if os.path.exists(out_dir):
-            current = spark.read.parquet(out_dir)
-            merged = batch.unionByName(current, allowMissingColumns=True)
-        else:
-            merged = batch
+    def merge(batch: DataFrame, batch_id: int) -> None:
+        table = AcidTable(batch.sparkSession, out_dir)
+        merged = batch
+        if table.exists():
+            merged = batch.unionByName(table.read(), allowMissingColumns=True)
         max_key = merged.agg(F.max(key).alias(key))
         latest = merged.join(F.broadcast(max_key), on=key, how="inner")
-        # write-then-swap: parquet can't overwrite a path it is also
-        # lazily reading (the union references out_dir). On a real
-        # lake this whole function is one Delta MERGE / REPLACE.
-        stage = f"{out_dir}__stage"
-        latest.write.mode("overwrite").parquet(stage)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        os.replace(stage, out_dir)
+        table.write(latest, mode="overwrite", txn=(app_id, batch_id))
 
     return (
         stream.writeStream.foreachBatch(merge)
@@ -340,50 +342,6 @@ def stream_static_enrich(
     return stream.join(F.broadcast(dim), on, how)
 
 
-def stream_merge_upsert(
-    stream: DataFrame,
-    *,
-    out_dir: str,
-    checkpoint_dir: str,
-    keys: list[str],
-):
-    """Streaming upsert sink: dbt-incremental MERGE semantics applied
-    continuously (foreachBatch + the batch ``merge_upsert`` operator).
-
-    Each micro-batch's rows replace same-key rows in the target
-    table; unmatched history passes through. Within one batch,
-    duplicate keys are collapsed arbitrarily (``dropDuplicates``) —
-    give rows a version column and pre-aggregate if last-write-wins
-    matters. Write-then-swap stands in for Delta/Iceberg MERGE
-    atomicity, exactly as in ``incremental_latest_snapshot``.
-    """
-    import os
-    import shutil
-
-    from dbt_lakehouse_aws_spark.operators.relational import merge_upsert
-
-    spark = stream.sparkSession
-
-    def merge(batch: DataFrame, _batch_id: int) -> None:
-        updates = batch.dropDuplicates(keys)
-        if os.path.exists(out_dir):
-            target = spark.read.parquet(out_dir)
-            merged = merge_upsert(target, updates, keys)
-        else:
-            merged = updates
-        stage = f"{out_dir}__stage"
-        merged.write.mode("overwrite").parquet(stage)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        os.replace(stage, out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_merge_into_acid(
     stream: DataFrame,
     *,
@@ -394,10 +352,9 @@ def stream_merge_into_acid(
 ):
     """Streaming incremental refresh into the ACID table layer
     (sources/acid.py): ``Trigger.AvailableNow`` + per-micro-batch
-    transactional ``MERGE INTO`` — the full lakehouse version of
-    :func:`stream_merge_upsert`, which rewrites the whole table per
-    batch. Here each batch is a copy-on-write commit touching only
-    the files that hold matched keys, concurrent readers keep their
+    transactional ``MERGE INTO``. Each batch is a copy-on-write
+    commit touching only the files that hold matched keys (the first
+    batch creates the table), concurrent readers keep their
     snapshot, and the table's manifest history doubles as the
     streaming audit log (one MERGE commit per batch).
 
@@ -407,10 +364,8 @@ def stream_merge_into_acid(
     Exactly-once, TWO layers: the merge is idempotent (replaying a
     batch re-replaces the same keys with the same rows), AND each
     batch's (app, batch_id) is recorded in the SAME atomic commit as
-    its data — the Delta idempotent-writer protocol — so a replayed
-    batch is detected via ``last_txn_batch`` and skipped without even
-    re-planning the merge. The app id is derived from the checkpoint
-    location, Spark's own identity for a restarted query.
+    its data — the Delta idempotent-writer protocol — so the table
+    skips a replayed batch before running any of the merge.
     """
     from pyspark.sql import Window
 
@@ -419,11 +374,6 @@ def stream_merge_into_acid(
     app_id = f"stream_merge:{checkpoint_dir}"
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        table = AcidTable(batch.sparkSession, table_path)
-        if table.exists():
-            seen = table.last_txn_batch(app_id)
-            if seen is not None and batch_id <= seen:
-                return  # replayed batch — already committed atomically
         updates = batch
         if order_col is not None:
             w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
@@ -434,10 +384,9 @@ def stream_merge_into_acid(
             )
         else:
             updates = updates.dropDuplicates(keys)
-        if table.exists():
-            table.merge(updates, keys, txn=(app_id, batch_id))
-        else:
-            table.write(updates, txn=(app_id, batch_id))
+        AcidTable(batch.sparkSession, table_path).merge(
+            updates, keys, txn=(app_id, batch_id)
+        )
 
     return (
         stream.writeStream.foreachBatch(merge)
@@ -457,26 +406,17 @@ def stream_append_into_acid(
     merge-idempotency arguments do NOT cover: replaying an append
     would duplicate rows. Each micro-batch commits its rows and its
     (app, batch_id) in ONE atomic manifest entry (sources/acid.py
-    txn protocol); on restart/replay, ``last_txn_batch`` identifies
-    batches that already landed and the writer returns before
-    touching data. Audit trail: one WRITE-append commit per batch in
-    the table history."""
+    txn protocol); on restart/replay the table recognises a batch
+    that already landed and returns before touching data. Audit
+    trail: one WRITE-append commit per batch in the table history."""
     from dbt_lakehouse_aws_spark.sources.acid import AcidTable
 
     app_id = f"stream_append:{checkpoint_dir}"
 
     def append(batch: DataFrame, batch_id: int) -> None:
-        table = AcidTable(batch.sparkSession, table_path)
-        if table.exists():
-            seen = table.last_txn_batch(app_id)
-            if seen is not None and batch_id <= seen:
-                return
-            table.write(
-                batch, mode="append", collect_stats=False,
-                txn=(app_id, batch_id),
-            )
-        else:
-            table.write(batch, collect_stats=False, txn=(app_id, batch_id))
+        AcidTable(batch.sparkSession, table_path).write(
+            batch, mode="append", collect_stats=False, txn=(app_id, batch_id)
+        )
 
     return (
         stream.writeStream.foreachBatch(append)
@@ -803,12 +743,7 @@ def stream_dedup_into_index(
             num_bands=num_bands,
         )
         result = idx.ingest_batch(batch.localCheckpoint(eager=True))
-        out = AcidTable(spark, survivors_path)
-        survivors = result.survivors
-        if out.exists():
-            out.merge(survivors, [id_col])
-        else:
-            out.write(survivors)
+        AcidTable(spark, survivors_path).merge(result.survivors, [id_col])
 
     return (
         stream.writeStream.foreachBatch(dedup_batch)
@@ -866,10 +801,9 @@ def stream_append_with_quarantine(
     checkpoint_dir: str,
     constraints: dict[str, str],
 ):
-    """Row-level dead-letter ingest — the third enforcement mode in
-    the family: batch ACID writes ABORT on violation (acid.py
-    `_enforce`), :func:`stream_with_checks` quarantines whole
-    micro-batches; this one splits EVERY batch row-by-row. Rows
+    """Row-level dead-letter ingest: where :func:`stream_with_checks`
+    quarantines whole micro-batches, this one splits EVERY batch
+    row-by-row. Rows
     where every constraint is not-FALSE (SQL three-valued CHECK:
     NULL passes) append to the main ACID table — which therefore
     satisfies its constraints by construction — and each failing
@@ -908,22 +842,8 @@ def stream_append_with_quarantine(
             "violated", F.array_join(F.sort_array(F.col("_viol")), ",")
         ).drop("_viol")
 
-        main = AcidTable(spark_b, table_path)
-        seen = main.last_txn_batch(app_main) if main.exists() else None
-        if not (seen is not None and batch_id <= seen):
-            main.write(
-                good,
-                mode="append" if main.exists() else "overwrite",
-                txn=(app_main, batch_id),
-            )
-        q = AcidTable(spark_b, quarantine_path)
-        seen_q = q.last_txn_batch(app_q) if q.exists() else None
-        if not (seen_q is not None and batch_id <= seen_q):
-            q.write(
-                bad,
-                mode="append" if q.exists() else "overwrite",
-                txn=(app_q, batch_id),
-            )
+        AcidTable(spark_b, table_path).write(good, mode="append", txn=(app_main, batch_id))
+        AcidTable(spark_b, quarantine_path).write(bad, mode="append", txn=(app_q, batch_id))
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -947,9 +867,10 @@ def stream_replace_where_into_acid(
     carries (``sources/acid.py::replace_where``, one commit per
     batch) instead of merging row-by-row — the shape daily-rollup
     pipelines want, where a batch re-delivers WHOLE days and
-    row-level reconciliation is wasted work. Replayed batches are
-    skipped via the same (app, batch_id) txn protocol as the
-    append/merge writers; and because replace-where is itself
+    row-level reconciliation is wasted work. The first batch creates
+    the table; replayed batches are skipped by the table's
+    (app, batch_id) txn check, as for the append/merge writers; and
+    because replace-where is itself
     idempotent for identical payloads, the two layers compose into
     exactly-once-by-construction.
 
@@ -967,11 +888,6 @@ def stream_replace_where_into_acid(
     app_id = f"stream_replace_where:{checkpoint_dir}"
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        table = AcidTable(batch.sparkSession, table_path)
-        if table.exists():
-            seen = table.last_txn_batch(app_id)
-            if seen is not None and batch_id <= seen:
-                return
         if transform is not None:
             # per-batch rollup: streaming aggregations without a
             # watermark can't ride the stream itself; a batch is a
@@ -985,10 +901,9 @@ def stream_replace_where_into_acid(
         else:
             quoted = ", ".join(str(p) for p in parts)
         predicate = f"{partition_col} IN ({quoted})"
-        if table.exists():
-            table.replace_where(batch, predicate, txn=(app_id, batch_id))
-        else:
-            table.write(batch, txn=(app_id, batch_id))
+        AcidTable(batch.sparkSession, table_path).replace_where(
+            batch, predicate, txn=(app_id, batch_id)
+        )
 
     return (
         stream.writeStream.foreachBatch(refresh)

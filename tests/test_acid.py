@@ -718,22 +718,27 @@ def test_time_travel_as_of_timestamp(spark, tmp_path):
 
 
 def test_txn_protocol_makes_append_replay_exactly_once(spark, tmp_path):
-    """The Delta-style (app, batch) txn commit: replaying an append
-    batch with an already-committed batch id must be detectable via
-    last_txn_batch; a fresh batch id moves the watermark."""
-    from dbt_lakehouse_aws_spark.sources.acid import AcidTable
-
+    """The Delta-style (app, batch) txn commit: a write, merge or
+    replace_where that replays an already-committed batch id is a
+    no-op (no new version, rows unchanged), also after vacuum has
+    dropped the deltas that recorded it; a fresh batch id moves the
+    watermark."""
     t = AcidTable(spark, str(tmp_path / "eo"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     t.write(df, txn=("appX", 0))
     assert t.last_txn_batch("appX") == 0
     assert t.last_txn_batch("other") is None
 
-    # simulate the sink's replay guard
-    if t.last_txn_batch("appX") is not None and 0 <= t.last_txn_batch("appX"):
-        pass  # skipped: no second write
-    else:
-        t.write(df, mode="append", txn=("appX", 0))
+    def replays_are_noops(batch):
+        version, rows = t.latest_version(), sorted(t.read().collect())
+        z = spark.createDataFrame([(1, "z"), (2, "z")], "id long, s string")
+        assert t.write(df, mode="append", txn=("appX", batch)).version == version
+        assert t.merge(z, ["id"], txn=("appX", batch)).version == version
+        assert t.replace_where(z, "s = 'z'", txn=("appX", batch)).version == version
+        assert t.latest_version() == version
+        assert sorted(t.read().collect()) == rows
+
+    replays_are_noops(0)
     assert t.read().count() == 2  # no duplicates
 
     t.write(df, mode="append", txn=("appX", 1))
@@ -743,6 +748,50 @@ def test_txn_protocol_makes_append_replay_exactly_once(spark, tmp_path):
     t.write(df, mode="append", txn=("appY", 7))
     assert t.last_txn_batch("appX") == 1
     assert t.last_txn_batch("appY") == 7
+
+    # only the appY delta survives; the checkpoint keeps appX's mark
+    t.vacuum(retain_last=1)
+    assert t.last_txn_batch("appX") == 1
+    replays_are_noops(0)
+    replays_are_noops(1)
+    assert t.read().count() == 6
+
+
+def test_txn_watermark_from_a_checkpoint_without_the_map(spark, tmp_path):
+    """Checkpoints written before they recorded the {app: batch} map
+    still yield the watermark, from the deltas they cover."""
+    import json as _json
+
+    t = AcidTable(spark, str(tmp_path / "t"))
+    snap = t.write(spark.createDataFrame([(1, "a")], "id long, s string"), txn=("app", 4))
+    for v in range(AcidTable.CHECKPOINT_EVERY):
+        t._commit(
+            operation="TEST", files=snap.files, schema_json=snap.schema_json,
+            stats=snap.stats, base_version=v,
+        )
+    cp = tmp_path / "t" / "_log" / f"{AcidTable.CHECKPOINT_EVERY:020d}.checkpoint.json"
+    meta = _json.loads(cp.read_text())
+    assert meta.pop("txns") == {"app": 4}
+    cp.write_text(_json.dumps(meta))
+    assert t.last_txn_batch("app") == 4
+
+
+def test_merge_and_replace_where_create_a_missing_table(spark, tmp_path):
+    """merge and replace_where on a path with no commits commit their
+    frame as version 0 (dbt's first incremental run); replace_where
+    applies its predicate guard first."""
+    df = spark.createDataFrame([(1, "a"), (2, "a")], "id long, s string")
+    m = AcidTable(spark, str(tmp_path / "m"))
+    assert m.merge(df, ["id"], txn=("app", 0)).version == 0
+    assert sorted(r["id"] for r in m.read().collect()) == [1, 2]
+    assert m.last_txn_batch("app") == 0
+
+    rw = AcidTable(spark, str(tmp_path / "rw"))
+    with pytest.raises(ValueError, match="violating"):
+        rw.replace_where(df, "id = 1")
+    assert not rw.exists()
+    assert rw.replace_where(df, "s = 'a'").version == 0
+    assert sorted(r["id"] for r in rw.read().collect()) == [1, 2]
 
 
 def test_stream_append_into_acid_exactly_once(spark, tmp_path):
@@ -767,13 +816,9 @@ def test_stream_append_into_acid_exactly_once(spark, tmp_path):
     t = AcidTable(spark, table_path)
     assert t.read().count() == 3
 
-    # crash-replay simulation: same app id (derived from ckpt), old batch id
-    app_id = f"stream_append:{ckpt}"
-    seen = t.last_txn_batch(app_id)
-    assert seen is not None
+    # crash-replay: same app id (derived from ckpt), old batch id
     batch = spark.read.parquet(str(src_dir))
-    if not (seen is not None and 0 <= seen):
-        t.write(batch, mode="append", txn=(app_id, 0))
+    t.write(batch, mode="append", txn=(f"stream_append:{ckpt}", 0))
     assert t.read().count() == 3  # replay added nothing
 
 

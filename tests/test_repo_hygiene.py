@@ -197,3 +197,22 @@ def test_write_decisions_live_only_in_the_kernel():
             if name in p.read_text()
         }
         assert sum(defs.values()) == 1, f"{name} schema defined in {defs}"
+
+
+def test_landing_decisions_live_only_in_their_modules():
+    """Whether a txn batch already landed is decided once, inside
+    ``sources/acid.py`` (callers hand the table a frame and a txn, and
+    never ask ``last_txn_batch`` themselves); a directory tree is
+    removed only by ``sources/tablefiles.py``, for its own staging dir
+    (no sink replaces a table by delete-then-rename). Static text
+    scan: no Spark session."""
+    owners = {"last_txn_batch(": "sources/acid.py", "shutil.rmtree(": "sources/tablefiles.py"}
+    offenders = {
+        token: sorted(
+            str(p.relative_to(PKG))
+            for p in PKG.rglob("*.py")
+            if token in p.read_text() and str(p.relative_to(PKG)) != owner
+        )
+        for token, owner in owners.items()
+    }
+    assert not any(offenders.values()), f"landing decisions outside their owners: {offenders}"

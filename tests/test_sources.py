@@ -480,9 +480,24 @@ def test_delta_writer_append_overwrite_time_travel(spark, tmp_path):
     assert ids(None) == [100, 101]
 
 
+def test_delta_partition_values_read_back_unescaped(spark, tmp_path):
+    """Spark escapes '/' and '%' in hive partition directory names; the
+    log records, and reads return, the original values."""
+    from dbt_lakehouse_aws_spark.sources.delta_reader import read_delta_table
+    from dbt_lakehouse_aws_spark.sources.delta_writer import write_delta_table
+
+    root = str(tmp_path / "t")
+    keys = ["a b", "x/y", "p%q"]
+    df = spark.createDataFrame(list(enumerate(keys)), "id long, k string")
+    write_delta_table(df, root, partition_by=["k"])
+    got = {r["id"]: r["k"] for r in read_delta_table(spark, root).collect()}
+    assert got == dict(enumerate(keys))
+
+
 def test_delta_writer_guards(spark, tmp_path):
     """mode='error' on an existing table, partition-layout mismatch,
-    and the O_EXCL commit race all fail loudly instead of corrupting."""
+    and the O_EXCL commit race all fail loudly instead of corrupting;
+    the race's loser leaves no unreferenced file behind."""
     import os as _os
 
     from dbt_lakehouse_aws_spark.sources.delta_writer import write_delta_table
@@ -503,15 +518,19 @@ def test_delta_writer_guards(spark, tmp_path):
     from dbt_lakehouse_aws_spark.sources.delta_reader import DeltaLogTable
 
     real_snapshot = DeltaLogTable.snapshot
+    rival = f"{root}/_delta_log/{1:020d}.json"
 
     def racing_snapshot(self, version=None):
         snap = real_snapshot(self, version)
-        _os.mknod(f"{root}/_delta_log/{snap.version + 1:020d}.json")
+        _os.mknod(rival)
         return snap
 
+    files = lambda: {_os.path.join(d, f) for d, _, fs in _os.walk(root) for f in fs}
+    before = files()
     with mock.patch.object(DeltaLogTable, "snapshot", racing_snapshot):
         with pytest.raises(FileExistsError):
             dw.write_delta_table(df, root, mode="append", partition_by=["y"])
+    assert files() == before | {rival}
 
 
 def test_delta_commit_is_never_seen_partial(spark, tmp_path, monkeypatch):
@@ -892,7 +911,8 @@ def test_iceberg_write_mode_and_schema_guards(spark, tmp_path):
 
 def test_iceberg_write_commit_is_put_if_absent(spark, tmp_path):
     """Two writers racing the same metadata version: the loser's
-    O_EXCL open must raise, never overwrite the winner's commit."""
+    O_EXCL open must raise, never overwrite the winner's commit, and
+    must delete the data files, manifest and manifest list it wrote."""
     import os as _os
 
     import pytest as _pytest
@@ -919,6 +939,8 @@ def test_iceberg_write_commit_is_put_if_absent(spark, tmp_path):
             fh.write(peer_payload)
         return out
 
+    files = lambda: {_os.path.join(d, f) for d, _, fs in _os.walk(root) for f in fs}
+    before = files()
     W.write_container = racing_stage
     try:
         with _pytest.raises(FileExistsError):
@@ -927,6 +949,7 @@ def test_iceberg_write_commit_is_put_if_absent(spark, tmp_path):
         W.write_container = orig_stage
     # the peer's commit is untouched (never overwritten)
     assert open(v2).read() == peer_payload
+    assert files() == before | {v2}
 
 
 def test_iceberg_append_from_stale_hint_keeps_every_snapshot(spark, tmp_path):
@@ -946,6 +969,8 @@ def test_iceberg_append_from_stale_hint_keeps_every_snapshot(spark, tmp_path):
     write_iceberg_table(mk(2), root, mode="append")
     with open(_os.path.join(root, "metadata", "version-hint.text"), "w") as fh:
         fh.write("1")
+    # the reader resolves the newest listed version, as the writer does
+    assert sorted(r["id"] for r in IcebergTable(spark, root).read().collect()) == [1, 2]
     assert write_iceberg_table(mk(3), root, mode="append") == 3
 
     with open(_os.path.join(root, "metadata", "v3.metadata.json")) as fh:

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dbt_lakehouse_aws_spark.sources.acid import AcidTable
 from dbt_lakehouse_aws_spark.streaming.ingest import (
     incremental_latest_snapshot,
     read_csv_stream,
@@ -35,7 +36,7 @@ def test_incremental_latest_snapshot(spark, tmp_path):
     stream = read_csv_stream(spark, str(ingest), SCHEMA)
     q = incremental_latest_snapshot(stream, out_dir=out, checkpoint_dir=ckpt)
     q.awaitTermination(120)
-    got = {(r["id"], r["val"]) for r in spark.read.parquet(out).select("id", "val").collect()}
+    got = {(r["id"], r["val"]) for r in AcidTable(spark, out).read().select("id", "val").collect()}
     assert got == {("1", "a1"), ("2", "a2")}
 
     # a newer ingest date arrives → only its rows survive, and the
@@ -44,7 +45,7 @@ def test_incremental_latest_snapshot(spark, tmp_path):
     stream = read_csv_stream(spark, str(ingest), SCHEMA)
     q = incremental_latest_snapshot(stream, out_dir=out, checkpoint_dir=ckpt)
     q.awaitTermination(120)
-    got = {(r["id"], r["val"]) for r in spark.read.parquet(out).select("id", "val").collect()}
+    got = {(r["id"], r["val"]) for r in AcidTable(spark, out).read().select("id", "val").collect()}
     assert got == {("1", "b1"), ("3", "b3")}
 
 
@@ -313,35 +314,6 @@ def test_stream_static_enrich(spark, tmp_path):
     q.awaitTermination(120)
     got = {(r["id"], r["label"]) for r in spark.sql("SELECT * FROM enriched").collect()}
     assert got == {("1", "Alpha"), ("2", "Beta"), ("3", None)}
-
-
-def test_stream_merge_upsert(spark, tmp_path):
-    """Continuous MERGE: batch-2 same-key rows replace batch-1 rows,
-    unmatched history survives, checkpoint skips re-reading batch 1."""
-    from dbt_lakehouse_aws_spark.streaming.ingest import stream_merge_upsert
-
-    src = tmp_path / "in"
-    src.mkdir()
-    out = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType([
-        T.StructField("k", T.StringType()),
-        T.StructField("v", T.StringType()),
-    ])
-
-    (src / "b1.csv").write_text("k,v\n1,a1\n2,a2\n")
-    stream = spark.readStream.schema(schema).option("header", "true").csv(str(src))
-    q = stream_merge_upsert(stream, out_dir=out, checkpoint_dir=ckpt, keys=["k"])
-    q.awaitTermination(120)
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(out).collect()}
-    assert got == {("1", "a1"), ("2", "a2")}
-
-    (src / "b2.csv").write_text("k,v\n2,b2\n3,b3\n")
-    stream = spark.readStream.schema(schema).option("header", "true").csv(str(src))
-    q = stream_merge_upsert(stream, out_dir=out, checkpoint_dir=ckpt, keys=["k"])
-    q.awaitTermination(120)
-    got = {(r["k"], r["v"]) for r in spark.read.parquet(out).collect()}
-    assert got == {("1", "a1"), ("2", "b2"), ("3", "b3")}
 
 
 def test_running_user_totals_transform_with_state(spark, tmp_path):
@@ -752,12 +724,11 @@ def test_stream_quarantine_row_split_and_replay(spark, tmp_path):
     got = {r["id"]: r["violated"] for r in quar.read().collect()}
     assert got == {2: "kind_ok", 3: "v_ok", 4: "kind_ok,v_ok"}
 
-    # replay batch 0 through the writers' own guards: no-ops
+    # replay batch 0 through each table: no-ops
     for app, t in (
         (f"quarantine_main:{tmp_path / 'ckpt'}", main),
         (f"quarantine_bad:{tmp_path / 'ckpt'}", quar),
     ):
-        seen = t.last_txn_batch(app)
-        assert seen is not None and seen >= 0
+        t.write(t.read(), mode="append", txn=(app, 0))
     n1, n2 = main.read().count(), quar.read().count()
     assert (n1, n2) == (1, 3)
