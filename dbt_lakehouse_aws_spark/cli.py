@@ -4,8 +4,8 @@
         --raw-dir /lake/raw --out-dir /lake/marts --league oc
 
 reads the raw CSV/TSV ingest tree (the reference's S3 layout:
-``<table>/year=YYYY/month=M/day=D/<file>``), applies each source's
-snapshot semantics, runs the full SGP DAG under its one lineage
+``<table>/year=YYYY/month=M/day=D/<file>``), reading only the files
+each source's snapshot semantics keep (``sources/reader.py``), runs the full SGP DAG under its one lineage
 policy (shared models localCheckpointed, the rest lazy; see
 ``plans/graph.py``), and writes the marts as parquet — the
 equivalent of the reference's ``dbt build`` (SURVEY §3.1).
@@ -24,7 +24,8 @@ import sys
 
 from pyspark.sql import SparkSession
 
-#: raw-tree subdirectories → pipeline source names (FIXTURES.md layout)
+#: pipeline source name → (raw-tree subdirectory, format, reader mode);
+#: FIXTURES.md layout, modes as in ``sources.reader.MODES``
 RAW_TABLES = {
     "standings": ("nfbc_standings", "csv", "history"),
     "players": ("nfbc_players", "csv", "latest"),
@@ -42,22 +43,14 @@ MART_OUTPUTS = ("overall_rankings", "factors_wide", "sgp_percentiles")
 
 
 def load_raw_sources(spark: SparkSession, raw_dir: str):
-    from dbt_lakehouse_aws_spark.sources.reader import read_csv_source
-    from dbt_lakehouse_aws_spark.sources.snapshots import latest_per_group, latest_snapshot
+    from dbt_lakehouse_aws_spark.sources import reader
 
-    sources = {}
-    for name, (subdir, fmt, mode) in RAW_TABLES.items():
-        sep = "\t" if fmt == "tsv" else ","
-        df = read_csv_source(
-            spark, f"{raw_dir}/{subdir}", sep=sep,
-            add_path_metadata=(mode != "plain"),
+    return {
+        name: reader.read_csv_source(
+            spark, f"{raw_dir}/{subdir}", sep="\t" if fmt == "tsv" else ",", mode=mode
         )
-        if mode == "latest":
-            df = latest_snapshot(df)
-        elif mode == "latest_per_file":
-            df = latest_per_group(df, ("_filename",))
-        sources[name] = df
-    return sources
+        for name, (subdir, fmt, mode) in RAW_TABLES.items()
+    }
 
 
 def cmd_run(args) -> int:

@@ -1,6 +1,5 @@
 from dbt_lakehouse_aws_spark.sources.reader import (
     read_csv_source,
-    read_parquet_table,
     with_path_metadata,
 )
 from dbt_lakehouse_aws_spark.sources.snapshots import latest_per_group, latest_snapshot
@@ -8,7 +7,6 @@ from dbt_lakehouse_aws_spark.sources.catalog import TableCatalog, load_star_sche
 
 __all__ = [
     "read_csv_source",
-    "read_parquet_table",
     "with_path_metadata",
     "latest_snapshot",
     "latest_per_group",

@@ -1,30 +1,56 @@
 """Source readers: schema-on-read CSV/TSV with path-derived metadata.
 
 Reproduces the reference's source layer semantics (SURVEY.md §2.1
-S1-S4; reference ``models/source/fangraphs/
-src_fangraphs_projections_preseason_hitting.sql:7-16``):
+S1-S6; reference ``models/source/fangraphs/
+src_fangraphs_projections_preseason_hitting.sql:7-21``):
 
 * every raw column read as **string** (reference ``README.md:32-34``),
 * ``year``/``month``/``day`` parsed from the Hive-style ingest path
   (``.../year=YYYY/month=M/day=D/file.csv``),
-* ``_ptkey`` = ``concat(year, month, day)`` ingest ordering key,
+* ``_ptkey`` = ``concat(year, month, day)``, kept as the reference's
+  label; it is NOT the ingest order (``"2025930"`` > ``"2025101"``),
 * ``_filename`` = basename of the source file (load-bearing
   downstream: it carries projection-system / league identity),
 * ``_loaddatetime`` = load audit timestamp.
 
-Scale notes: ``F.col("_metadata.file_path")`` is evaluated at the
-scan (per input split, no shuffle); the regexes are codegen'd JVM
-expressions. On a 100 TB ingest directory the read parallelism comes
-from file splits — nothing here adds a shuffle or a Python round trip.
+:func:`read_csv_source` decides what a source holds from ONE
+driver-side listing of its tree, before Spark reads anything: each
+CSV/TSV file's path, header and whether it has a data row. The
+reference's "only the most current data" filters (S5 max ``_ptkey``,
+S6 newest file per ``_filename``) become a choice of files, made in
+the padded date order :func:`ingest_date` (its Spark form,
+:func:`ingest_date_col`, serves frame-level callers). The chosen
+files are grouped by header; each group is read with an explicit
+all-string schema named from that header, so no Spark job infers a
+schema, and the groups are unioned BY NAME: a column added or moved
+between ingest dates lands in its own column, files predating it
+carry NULLs, and the column order is first-seen (the catalog order
+the reference's ``star()`` resolves).
+
+Scale notes: the listing opens each file for its first lines only.
+``F.col("_metadata.file_path")`` is evaluated at the scan (per input
+split, no shuffle); the regexes are codegen'd JVM expressions.
 """
 
 from __future__ import annotations
 
+import csv
+import os
+import re
+from functools import reduce
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: metadata columns added by :func:`with_path_metadata`
 PATH_META_COLS = ("year", "month", "day", "_ptkey", "_filename", "_loaddatetime")
+
+#: what :func:`read_csv_source` keeps of a source's ingest history
+MODES = ("history", "latest", "latest_per_file", "plain")
+
+_DATE_PATTERNS = (r"year=(\d{4})", r"month=(\d{1,2})", r"day=(\d{1,2})")
 
 
 def _file_path_col() -> Column:
@@ -47,9 +73,7 @@ def with_path_metadata(df: DataFrame, *, path_col: Column | None = None) -> Data
     # logic matches on literal filenames ('NFBC OC 2025 … .csv') — decode.
     raw = path_col if path_col is not None else _file_path_col()
     p = F.url_decode(raw)
-    year = F.regexp_extract(p, r"year=(\d{4})", 1)
-    month = F.regexp_extract(p, r"month=(\d{1,2})", 1)
-    day = F.regexp_extract(p, r"day=(\d{1,2})", 1)
+    year, month, day = (F.regexp_extract(p, pat, 1) for pat in _DATE_PATTERNS)
     return (
         df.withColumn("year", year)
         .withColumn("month", month)
@@ -60,134 +84,106 @@ def with_path_metadata(df: DataFrame, *, path_col: Column | None = None) -> Data
     )
 
 
+def ingest_date(path: str) -> tuple[int, int, int]:
+    """The ingest order of a file: its path's ``(year, month, day)`` as
+    ints, 0 for a part the path lacks, so an undated file sorts first."""
+    return tuple(int(m.group(1)) if (m := re.search(p, path)) else 0 for p in _DATE_PATTERNS)
+
+
+def ingest_date_col() -> Column:
+    """:func:`ingest_date` over :func:`with_path_metadata`'s columns:
+    the zero-padded ``yyyymmdd`` string, ``"00000000"`` when undated."""
+    return F.concat(F.lpad("year", 4, "0"), F.lpad("month", 2, "0"), F.lpad("day", 2, "0"))
+
+
+class _File(NamedTuple):
+    path: str
+    names: tuple[str, ...]
+    has_rows: bool
+
+
+def _visible(name: str) -> bool:
+    # Spark's file index skips these too (_SUCCESS, .crc, _temporary)
+    return not name.startswith(".") and not (name.startswith("_") and "=" not in name)
+
+
+def _column_names(header: str, sep: str) -> tuple[str, ...]:
+    """Spark's CSV header rule: a blank name becomes ``_c<i>``, a name
+    repeated (case-insensitively) gets its index appended."""
+    names = next(csv.reader([header], delimiter=sep), [])
+    lower = [n.lower() for n in names]
+    return tuple(
+        f"_c{i}" if not n else f"{n}{i}" if lower.count(n.lower()) > 1 else n
+        for i, n in enumerate(names)
+    )
+
+
+def _list_files(root: str, sep: str) -> list[_File]:
+    """Every CSV/TSV file under ``root`` with its columns, path-sorted."""
+    files = []
+    for dirpath, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if _visible(d)]
+        for name in names:
+            if not (_visible(name) and name.endswith((".csv", ".tsv"))):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
+                # utf-8-sig: Spark drops a leading byte-order mark too
+                header = fh.readline().decode("utf-8-sig", errors="replace").rstrip("\r\n")
+                has_rows = any(line.strip() for line in fh)
+            if header:
+                files.append(_File(path, _column_names(header, sep), has_rows))
+    if not files:
+        raise FileNotFoundError(f"no CSV/TSV files under {root}")
+    return sorted(files)
+
+
+def _newest(files: list[_File]) -> list[_File]:
+    """The files of the newest ingest date that has a data row (a
+    header-only file never makes its date the newest)."""
+    _, date = max((f.has_rows, ingest_date(f.path)) for f in files)
+    return [f for f in files if ingest_date(f.path) == date]
+
+
+def _choose(files: list[_File], mode: str) -> list[_File]:
+    if mode == "latest":  # S5: the table's newest date
+        return _newest(files)
+    if mode == "latest_per_file":  # S6: each basename's newest date
+        by_name: dict[str, list[_File]] = {}
+        for f in files:
+            by_name.setdefault(os.path.basename(f.path), []).append(f)
+        return sorted(f for group in by_name.values() for f in _newest(group))
+    return files
+
+
 def read_csv_source(
-    spark: SparkSession,
-    path: str,
-    *,
-    sep: str = ",",
-    header: bool = True,
-    add_path_metadata: bool = True,
-    recursive: bool = True,
+    spark: SparkSession, path: str, *, sep: str = ",", mode: str = "history"
 ) -> DataFrame:
-    """Read a raw CSV/TSV ingest prefix, all columns as strings.
+    """Read a raw CSV/TSV ingest tree, all columns as strings.
 
-    ``inferSchema`` stays off on purpose: the reference types
-    everything as varchar at the source layer and casts downstream
-    (``README.md:34``). ``recursiveFileLookup`` lets one logical
-    table span the ``year=/month=/day=`` tree while we still derive
-    the partition values ourselves from the path (the reference's
-    partitions are logical-by-path, not catalog-declared).
+    ``mode`` (one of :data:`MODES`) picks the files from the listing:
+    ``history`` and ``plain`` read every file (``plain`` without path
+    metadata), ``latest`` the files of the newest ingest date (S5),
+    ``latest_per_file`` each basename's newest file (S6). Raises
+    ``FileNotFoundError`` when the tree holds no CSV/TSV file.
     """
-    reader = (
-        spark.read.option("header", str(header).lower())
-        .option("sep", sep)
-        .option("inferSchema", "false")
-        .option("recursiveFileLookup", str(recursive).lower())
-    )
-    df = reader.csv(path)
-    # Select _metadata at scan time so it survives later transforms.
-    df = df.select("*", "_metadata")
-    if add_path_metadata:
-        df = with_path_metadata(df)
-    return df.drop("_metadata")
-
-
-def read_csv_evolving(
-    spark: SparkSession,
-    path: str,
-    *,
-    sep: str = ",",
-    add_path_metadata: bool = True,
-) -> DataFrame:
-    """CSV ingest with **union-by-name schema drift** across partitions.
-
-    The reference's ``dbt_utils.star()`` resolves the column set from
-    the catalog at compile time (SURVEY §1.3), which silently absorbs
-    a column added mid-year; a plain multi-file ``spark.read.csv``
-    does NOT — with one inferred header, files whose headers differ
-    are matched **positionally**, so ``year=2024/month=06`` adding a
-    column in the middle shifts every later column's values into the
-    wrong field. This reader defines the drift semantics explicitly:
-
-    1. **Header discovery** — one distributed job reads the FIRST
-       LINE of every file (open/readline/close per task: O(files)
-       metadata-sized I/O, no full scan).
-    2. **Group scan** — files are grouped by identical header; each
-       group gets its own all-string scan with its own column set.
-       The number of groups is the number of schema *versions*, not
-       files — bounded and small.
-    3. **Union by name** — groups combine with
-       ``unionByName(allowMissingColumns=True)``: columns align by
-       NAME, files predating a column carry typed NULLs, and the
-       output column order is first-seen order across groups (the
-       catalog-resolution order ``star()`` would produce).
-
-    Path metadata (year/month/day/_ptkey/_filename) is derived per
-    group scan, so latest-snapshot filters keep working unchanged.
-    """
-    import os
-
-    # pathGlobFilter: one stray non-CSV in the tree (_SUCCESS, a
-    # parquet part, .DS_Store) must be ignored, not header-grouped —
-    # decoding its first "line" yields garbage or a UnicodeDecodeError
-    paths_df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.{csv,tsv}")
-        .load(path)
-        .select("path")
-    )
-
-    def first_lines(batches):
-        from urllib.parse import unquote, urlparse
-
-        import pandas as pd
-
-        for pdf in batches:
-            headers = []
-            for p in pdf["path"]:
-                # binaryFile reports URIs — percent-decode so paths
-                # with spaces ('NFBC OC 2025 ... .csv') open correctly
-                local = unquote(urlparse(p).path)
-                with open(local, "rb") as fh:
-                    headers.append(
-                        fh.readline()
-                        .decode("utf-8", errors="replace")
-                        .rstrip("\r\n")
-                    )
-            yield pd.DataFrame({"path": pdf["path"], "header": headers})
-
-    # binaryFile would read whole payloads if we took `content`; we only
-    # take `path` (column pruning keeps it a listing) and read the first
-    # line ourselves inside the executors.
-    by_header: dict[str, list[str]] = {}
-    for r in paths_df.mapInPandas(first_lines, "path string, header string").collect():
-        by_header.setdefault(r["header"], []).append(r["path"])
-
-    out: DataFrame | None = None
-    data_cols: list[str] = []  # first-seen order across groups
-    for header in sorted(by_header, key=lambda h: min(by_header[h])):
-        # spark.read.csv accepts the URI form directly (it decodes
-        # internally) — pass paths through untouched
-        files = list(by_header[header])
-        part = spark.read.option("header", "true").option("sep", sep).option(
-            "inferSchema", "false"
-        ).csv(files)
-        data_cols += [c for c in part.columns if c not in data_cols]
-        part = part.select("*", "_metadata")
-        if add_path_metadata:
-            part = with_path_metadata(part)
-        part = part.drop("_metadata")
-        out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-    if out is None:
-        raise FileNotFoundError(f"no CSV files under {os.fspath(path)}")
-    meta = [c for c in PATH_META_COLS if c in out.columns]
-    return out.select(*data_cols, *meta)
-
-
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the driver's star-schema parquet tables."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if mode not in MODES:
+        raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for f in _choose(_list_files(path, sep), mode):
+        # escape glob metacharacters: each listed path names one file
+        groups.setdefault(f.names, []).append(re.sub(r"([\\{}\[\]*?])", r"\\\1", f.path))
+    parts = []
+    for names, files in groups.items():
+        schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+        part = spark.read.schema(schema).option("header", "true").option("sep", sep).csv(files)
+        if mode != "plain":
+            # select _metadata at scan time so it survives the union
+            part = with_path_metadata(part.select("*", "_metadata")).drop("_metadata")
+        parts.append(part)
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    meta = [c for c in out.columns if c in PATH_META_COLS]
+    return out.select(*[c for c in out.columns if c not in meta], *meta)
 
 
 def read_jsonl_source(

@@ -10,6 +10,14 @@ filtering on the ingest key:
   _filename order by _ptkey desc) = 1`` (reference
   ``models/source/nfbc/src_nfbc_adp.sql:15-24``).
 
+The SGP build does not call these: ``sources.reader.read_csv_source``
+chooses a raw source's newest files from its listing, before the scan.
+These frame operators serve callers whose input is already a frame:
+the registered ``s5_latest_snapshot`` / ``s6_latest_per_group``
+queries, and the streaming sink ``incremental_latest_snapshot``, which
+orders its ingest dates by ``reader.ingest_date_col()`` (the padded
+date; the unpadded ``_ptkey`` puts 2025-9-30 above 2025-10-1).
+
 Scale notes:
 
 * ``latest_snapshot`` is implemented as agg → broadcast semi-join,
@@ -44,8 +52,6 @@ def latest_per_group(
     df: DataFrame,
     group_cols: Sequence[str] = ("_filename",),
     order_col: str = "_ptkey",
-    *,
-    rank_fn=F.rank,
 ) -> DataFrame:
     """Keep the latest snapshot within each group (S6).
 
@@ -54,7 +60,7 @@ def latest_per_group(
     """
     w = Window.partitionBy(*group_cols).orderBy(F.desc(order_col))
     return (
-        df.withColumn("_rnk", rank_fn().over(w))
+        df.withColumn("_rnk", F.rank().over(w))
         .filter(F.col("_rnk") == 1)
         .drop("_rnk")
     )

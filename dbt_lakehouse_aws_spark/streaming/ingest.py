@@ -6,7 +6,7 @@ is the latest-snapshot-wins refresh (S5/S6), re-read in full every
 incrementally: a file-source stream over the ``year=/month=/day=``
 ingest tree, ``Trigger.AvailableNow`` (process everything new, then
 stop — the scheduled-batch pattern), and a ``foreachBatch`` merge
-that keeps only the winning ingest key per group.
+that keeps only the rows of the newest ingest date.
 
 Scale notes: the file source tracks processed files in the
 checkpoint, so each run reads only new ingest dates — at 100 TB the
@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dbt_lakehouse_aws_spark.sources.reader import with_path_metadata
+from dbt_lakehouse_aws_spark.sources.reader import ingest_date_col, with_path_metadata
+from dbt_lakehouse_aws_spark.sources.snapshots import latest_snapshot
 
 
 def read_csv_stream(
@@ -63,15 +64,16 @@ def incremental_latest_snapshot(
     *,
     out_dir: str,
     checkpoint_dir: str,
-    key: str = "_ptkey",
 ):
     """Maintain the S5 'latest snapshot' table incrementally, as an
     ACID table at ``out_dir``.
 
     Each micro-batch unions new rows with the current snapshot and
-    keeps only rows carrying the max ingest key — so the table always
-    equals what the batch ``latest_snapshot`` operator would produce
-    over the full history, at O(new files) incremental cost. The
+    keeps, through the batch ``latest_snapshot`` operator, only the
+    rows of the newest ingest date — ordered by the padded date
+    (``reader.ingest_date_col``), the order the batch reader's
+    ``mode="latest"`` uses, so the table always equals that read of
+    the full history, at O(new files) incremental cost. The
     result replaces the table in one overwrite commit; the batch
     reads the current snapshot directly, since its data files are
     immutable and outlive the commit that unreferences them.
@@ -85,8 +87,8 @@ def incremental_latest_snapshot(
         merged = batch
         if table.exists():
             merged = batch.unionByName(table.read(), allowMissingColumns=True)
-        max_key = merged.agg(F.max(key).alias(key))
-        latest = merged.join(F.broadcast(max_key), on=key, how="inner")
+        dated = merged.withColumn("_ingest_date", ingest_date_col())
+        latest = latest_snapshot(dated, "_ingest_date").drop("_ingest_date")
         table.write(latest, mode="overwrite", txn=(app_id, batch_id))
 
     return (

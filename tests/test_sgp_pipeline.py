@@ -12,10 +12,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from dbt_lakehouse_aws_spark.cli import load_raw_sources
 from dbt_lakehouse_aws_spark.sgp.config import OC
 from dbt_lakehouse_aws_spark.sgp.pipeline import run_pipeline
-from dbt_lakehouse_aws_spark.sources.reader import read_csv_source
-from dbt_lakehouse_aws_spark.sources.snapshots import latest_per_group, latest_snapshot
 
 from tests import sgp_fixtures, sgp_oracle
 
@@ -29,30 +28,15 @@ def fixture_root(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def results(spark, fixture_root):
-    r = str(fixture_root)
-    sources = {
-        "standings": read_csv_source(spark, f"{r}/nfbc_standings"),  # full history (S7)
-        "players": latest_snapshot(read_csv_source(spark, f"{r}/nfbc_players")),
-        "id_map": read_csv_source(spark, f"{r}/player_id_map", add_path_metadata=False),
-        "fg_hitting": latest_snapshot(
-            read_csv_source(spark, f"{r}/fangraphs_projections_preseason_hitting")
-        ),
-        "fg_pitching": latest_snapshot(
-            read_csv_source(spark, f"{r}/fangraphs_projections_preseason_pitching")
-        ),
-        "razzball_hitting": latest_snapshot(
-            read_csv_source(spark, f"{r}/razzball_projections_preseason_hitting")
-        ),
-        "razzball_pitching": latest_snapshot(
-            read_csv_source(spark, f"{r}/razzball_projections_preseason_pitching")
-        ),
-        "adp": latest_per_group(
-            read_csv_source(spark, f"{r}/nfbc_adp", sep="\t"), ("_filename",)
-        ),
-        "rosters": latest_snapshot(read_csv_source(spark, f"{r}/fangraphs_rosters")),
-    }
+    sources = load_raw_sources(spark, str(fixture_root))
     # default (checkpoint) materialization — the 50s test covers "cache"
     return run_pipeline(OC, sources)
+
+
+def test_latest_sources_read_only_the_newest_files(spark, fixture_root):
+    players = load_raw_sources(spark, str(fixture_root))["players"]
+    files = [f.split("/nfbc_players/", 1)[1] for f in players.inputFiles()]
+    assert files == ["year=2025/month=3/day=10/players.csv"]
 
 
 @pytest.fixture(scope="module")
@@ -150,28 +134,7 @@ def test_fifties_league_parameterization(spark, fixture_root, expected):
     model pair collapsed into parameters (SURVEY §7.1)."""
     from dbt_lakehouse_aws_spark.sgp.config import FIFTIES
 
-    r = str(fixture_root)
-    sources = {
-        "standings": read_csv_source(spark, f"{r}/nfbc_standings"),
-        "players": latest_snapshot(read_csv_source(spark, f"{r}/nfbc_players")),
-        "id_map": read_csv_source(spark, f"{r}/player_id_map", add_path_metadata=False),
-        "fg_hitting": latest_snapshot(
-            read_csv_source(spark, f"{r}/fangraphs_projections_preseason_hitting")
-        ),
-        "fg_pitching": latest_snapshot(
-            read_csv_source(spark, f"{r}/fangraphs_projections_preseason_pitching")
-        ),
-        "razzball_hitting": latest_snapshot(
-            read_csv_source(spark, f"{r}/razzball_projections_preseason_hitting")
-        ),
-        "razzball_pitching": latest_snapshot(
-            read_csv_source(spark, f"{r}/razzball_projections_preseason_pitching")
-        ),
-        "adp": latest_per_group(
-            read_csv_source(spark, f"{r}/nfbc_adp", sep="\t"), ("_filename",)
-        ),
-        "rosters": latest_snapshot(read_csv_source(spark, f"{r}/fangraphs_rosters")),
-    }
+    sources = load_raw_sources(spark, str(fixture_root))
     out = run_pipeline(FIFTIES, sources)
     mart = out["overall_rankings"].toPandas()
 

@@ -57,8 +57,9 @@ def test_path_metadata_values(spark, ingest_dir):
 
 def test_latest_snapshot_table_wide(spark, ingest_dir):
     df = read_csv_source(spark, ingest_dir)
-    # NOTE: string _ptkey ordering — "202535" > "2025228" lexically,
-    # matching the reference's varchar max() semantics.
+    # NOTE: the frame operator keeps the reference's varchar max() over
+    # the unpadded _ptkey ("202535" > "2025228" happens to agree with
+    # the dates here); the reader's mode="latest" orders padded dates.
     out = latest_snapshot(df)
     got = {(r["id"], r["val"]) for r in out.select("id", "val").collect()}
     assert got == {("1", "new-a"), ("3", "new-a3")}
@@ -69,6 +70,69 @@ def test_latest_per_group_keeps_stale_files(spark, ingest_dir):
     out = latest_per_group(df, ("_filename",))
     got = {(r["_filename"], r["id"]) for r in out.select("_filename", "id").collect()}
     assert got == {("alpha.csv", "1"), ("alpha.csv", "3"), ("beta.csv", "9")}
+
+
+def _write_tree(root, layout):
+    for (y, m, d, fname), body in layout.items():
+        p = root / f"year={y}" / f"month={m}" / f"day={d}"
+        p.mkdir(parents=True, exist_ok=True)
+        (p / fname).write_text(body)
+    return str(root)
+
+
+def test_reader_latest_orders_padded_dates(spark, tmp_path):
+    """2025-10-1 is newer than 2025-9-30, although its unpadded _ptkey
+    "2025101" sorts below "2025930"; the _ptkey values stay as they are."""
+    root = _write_tree(tmp_path, {
+        ("2025", "9", "30", "a.csv"): "id,val\n1,sept\n",
+        ("2025", "10", "1", "a.csv"): "id,val\n1,oct\n",
+        ("2025", "9", "30", "b.csv"): "id,val\n2,sept-only\n",
+    })
+    got = read_csv_source(spark, root, mode="latest").select("val", "_ptkey").collect()
+    assert [tuple(r) for r in got] == [("oct", "2025101")]
+
+    per_file = read_csv_source(spark, root, mode="latest_per_file")
+    got = {(r["_filename"], r["val"]) for r in per_file.collect()}
+    assert got == {("a.csv", "oct"), ("b.csv", "sept-only")}
+    assert len(per_file.inputFiles()) == 2
+
+
+def test_reader_header_only_newest_file_keeps_previous_date(spark, tmp_path):
+    root = _write_tree(tmp_path, {
+        ("2025", "3", "1", "a.csv"): "id,val\n1,march\n",
+        ("2025", "4", "1", "a.csv"): "id,val\n\n",
+    })
+    got = read_csv_source(spark, root, mode="latest").select("id", "val").collect()
+    assert [tuple(r) for r in got] == [("1", "march")]
+
+
+def test_reader_aligns_columns_by_name(spark, tmp_path):
+    """The same file name under two ingest dates, with a column added in
+    the middle: each file's values land under its own header's names."""
+    root = _write_tree(tmp_path, {
+        ("2025", "1", "1", "a.csv"): "id,name\n1,alice\n",
+        ("2025", "6", "1", "a.csv"): "id,score,name\n2,9.5,bob\n",
+    })
+    rows = {r["id"]: r.asDict() for r in read_csv_source(spark, root).collect()}
+    assert (rows["1"]["name"], rows["1"]["score"]) == ("alice", None)
+    assert (rows["2"]["name"], rows["2"]["score"]) == ("bob", "9.5")
+
+
+def test_reader_lists_and_names_files_as_spark_does(spark, tmp_path):
+    """The driver-side listing keeps what Spark's own file index and
+    header rule gave: a byte-order mark is dropped, blank and repeated
+    names get their index, glob characters in a file name are literal,
+    and ``_temporary`` / dot entries are skipped."""
+    root = _write_tree(tmp_path, {
+        ("2025", "1", "1", "odd [1] {x}*.csv"): "\ufeffid,ID,,name\n1,x,y,alice\n",
+    })
+    hidden = tmp_path / "_temporary"
+    hidden.mkdir()
+    (hidden / "part.csv").write_text("id\nleftover\n")
+    (tmp_path / ".a.csv").write_text("id\nhidden\n")
+    df = read_csv_source(spark, root, mode="plain")
+    assert df.columns == ["id0", "ID1", "_c2", "name"]
+    assert [tuple(r) for r in df.collect()] == [("1", "x", "y", "alice")]
 
 
 def test_latest_per_group_rank_ties_survive(spark):
@@ -255,8 +319,6 @@ def test_schema_drift_across_partitions(spark, tmp_path):
     partitions (column added mid-year, columns reordered) must align
     BY NAME, with pre-drift files carrying NULLs for new columns —
     the semantics the reference gets from catalog-resolved star()."""
-    from dbt_lakehouse_aws_spark.sources.reader import read_csv_evolving
-
     jan = tmp_path / "t" / "year=2024" / "month=1"
     jun = tmp_path / "t" / "year=2024" / "month=6"
     dec = tmp_path / "t" / "year=2024" / "month=12"
@@ -269,7 +331,7 @@ def test_schema_drift_across_partitions(spark, tmp_path):
     # December reorders columns entirely
     (dec / "c.csv").write_text("name,id,score\ndan,4,7.0\n")
 
-    df = read_csv_evolving(spark, str(tmp_path / "t"))
+    df = read_csv_source(spark, str(tmp_path / "t"))
     assert set(("id", "name", "score")) <= set(df.columns)
     rows = {r["id"]: r for r in df.collect()}
     assert rows["1"]["name"] == "alice" and rows["1"]["score"] is None
@@ -285,12 +347,10 @@ def test_schema_drift_across_partitions(spark, tmp_path):
 def test_schema_drift_handles_spaced_filenames(spark, tmp_path):
     """URI-encoded paths (spaces in filenames, the reference's
     'NFBC OC 2025 ... .csv' pattern) must survive header discovery."""
-    from dbt_lakehouse_aws_spark.sources.reader import read_csv_evolving
-
     d = tmp_path / "t" / "year=2025" / "month=3"
     d.mkdir(parents=True)
     (d / "NFBC OC 2025 Standings.csv").write_text("id,name\n1,alice\n")
-    df = read_csv_evolving(spark, str(tmp_path / "t"))
+    df = read_csv_source(spark, str(tmp_path / "t"))
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["name"] == "alice"
     assert rows[0]["_filename"] == "NFBC OC 2025 Standings.csv"
@@ -300,8 +360,6 @@ def test_schema_drift_ignores_stray_non_csv_files(spark, tmp_path):
     """One _SUCCESS marker or binary sidecar in the tree must not
     poison header discovery (UnicodeDecodeError / garbage header
     group) — only *.csv / *.tsv files participate."""
-    from dbt_lakehouse_aws_spark.sources.reader import read_csv_evolving
-
     d = tmp_path / "t" / "year=2024" / "month=1"
     d.mkdir(parents=True)
     (d / "a.csv").write_text("id,name\n1,alice\n")
@@ -309,7 +367,7 @@ def test_schema_drift_ignores_stray_non_csv_files(spark, tmp_path):
     (d / "part-0000.parquet").write_bytes(b"PAR1\x80\x81\xfe\xffPAR1")
     (d / ".DS_Store").write_bytes(bytes(range(256)))
 
-    df = read_csv_evolving(spark, str(tmp_path / "t"))
+    df = read_csv_source(spark, str(tmp_path / "t"))
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["name"] == "alice"
     assert df.columns[:2] == ["id", "name"]

@@ -48,6 +48,16 @@ def test_incremental_latest_snapshot(spark, tmp_path):
     got = {(r["id"], r["val"]) for r in AcidTable(spark, out).read().select("id", "val").collect()}
     assert got == {("1", "b1"), ("3", "b3")}
 
+    # 2025-10-2 is newer than 2025-1-5 although its unpadded _ptkey
+    # "2025102" sorts below "202515": ingest dates order padded
+    _write_date(ingest, ("2025", "10", "2"), "id,val\n4,c4\n")
+    stream = read_csv_stream(spark, str(ingest), SCHEMA)
+    q = incremental_latest_snapshot(stream, out_dir=out, checkpoint_dir=ckpt)
+    q.awaitTermination(120)
+    table = AcidTable(spark, out).read()
+    assert {(r["id"], r["val"]) for r in table.select("id", "val").collect()} == {("4", "c4")}
+    assert "_ingest_date" not in table.columns
+
 
 def test_windowed_event_counts(spark, tmp_path):
     # rate-free deterministic micro-stream via file source
