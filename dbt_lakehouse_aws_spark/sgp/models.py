@@ -14,7 +14,10 @@ Scale design decisions (vs the reference's literal SQL):
   (order by sgp desc)``) run as ``orderBy().limit(n)`` —
   TakeOrderedAndProject, a per-partition heap + driver merge, not a
   shuffle-everything-to-one-task window.
-* the final global rank uses the scalable two-pass
+* the final rank is one unpartitioned ``row_number()`` window: the
+  mart holds one row per projected player the league's id map knows
+  (about 1k rows), a bound set by the player pool, not by ingest
+  history, so one task ranks it. Unbounded inputs keep the two-pass
   :func:`~dbt_lakehouse_aws_spark.operators.windows.global_row_number`.
 * deterministic tie-breaks (player id) are added to every ranking the
   reference leaves order-ambiguous; on tie-free data results are
@@ -33,7 +36,6 @@ from dbt_lakehouse_aws_spark.operators.aggregates import (
     regression_slope,
 )
 from dbt_lakehouse_aws_spark.operators.relational import null_padded_union, when_chain
-from dbt_lakehouse_aws_spark.operators.windows import global_row_number
 from dbt_lakehouse_aws_spark.sgp.config import LeagueConfig
 
 #: the ten roto categories in reference order (stg_nfbc_ranked_standings.sql:32-41)
@@ -573,8 +575,14 @@ def mart_overall_rankings(
     """Final auction board (mart_preseason_overall_rankings_{50s,oc}
     .sql): NULL-padded hitters ∪ pitchers (U4), ADP left join with
     the literal-filename predicate pushed into the build side (J7),
-    roster status via a pre-joined inner subframe (J8), scalable
-    global rank + rank_diff (W4/W5)."""
+    roster status via a pre-joined inner subframe (J8), global rank
+    + rank_diff (W4/W5).
+
+    The rank is a single-partition ``row_number()`` window because the
+    mart is bounded: one row per projected player that ``ids`` maps,
+    about 1k rows, however long the ingest history grows. The two-pass
+    ``global_row_number`` would persist the whole valuation chain and
+    range-partition it twice to rank those rows."""
     pitch = pitch_values.withColumn("pos_group", F.lit("P"))
     base = null_padded_union([hit_values, pitch], _MART_SCHEMA)
 
@@ -596,7 +604,9 @@ def mart_overall_rankings(
         .select(F.col("id").alias("_rid"), "projected_opening_day_status")
     )
 
-    ranked = global_row_number(base, [F.desc("value"), F.asc("id")], name="rank")
+    ranked = base.withColumn(
+        "rank", F.row_number().over(Window.orderBy(F.desc("value"), F.asc("id"))).cast("long")
+    )
     out = (
         ranked.join(F.broadcast(adp_side), ranked["id"] == adp_side["playerid"], "left")
         .drop("playerid")

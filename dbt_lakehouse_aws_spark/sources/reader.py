@@ -186,49 +186,6 @@ def read_csv_source(
     return out.select(*[c for c in out.columns if c not in meta], *meta)
 
 
-def read_jsonl_source(
-    spark: SparkSession,
-    path: str,
-    schema,
-    *,
-    corrupt_col: str = "_corrupt_record",
-    add_path_metadata: bool = False,
-    recursive: bool = True,
-) -> DataFrame:
-    """Read a JSON-Lines corpus (the LLM-training-data interchange
-    format: one document object per line).
-
-    Scale rules baked in:
-
-    * **schema is required** — inference would scan the whole corpus
-      a second time before the first real job; at 100 TB that is a
-      full extra pass. Pass a ``StructType`` or DDL string.
-    * **PERMISSIVE + quarantine column**: malformed lines land in
-      ``corrupt_col`` instead of failing the job (one bad shard must
-      not kill a corpus build). Filter ``col(corrupt_col).isNotNull()``
-      into a quarantine sink, drop it from the clean path.
-    * optional path metadata (same ``year=/month=/day=`` derivation
-      as CSV ingest) so snapshot semantics work for JSONL drops too.
-    """
-    from pyspark.sql import types as T
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    if corrupt_col not in schema.fieldNames():
-        schema = schema.add(T.StructField(corrupt_col, T.StringType()))
-    df = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .option("recursiveFileLookup", str(recursive).lower())
-        .json(path)
-    )
-    if add_path_metadata:
-        df = df.select("*", "_metadata")
-        df = with_path_metadata(df).drop("_metadata")
-    return df
-
-
 def read_fixed_width(
     spark: SparkSession,
     path: str,

@@ -43,14 +43,20 @@ def read_csv_stream(
     schema: T.StructType,
     *,
     sep: str = ",",
-    header: bool = True,
 ) -> DataFrame:
     """Streaming analogue of ``read_csv_source``: all-string schema
     must be supplied (streams can't infer), path metadata derived
-    the same way as batch (S2-S4)."""
+    the same way as batch (S2-S4).
+
+    Every file has a header row, and each header must name the
+    schema's columns in the schema's order: a file whose header
+    differs fails the query instead of being read by position into
+    the wrong columns. A stream cannot union header groups by name as
+    the batch reader does, because it fixes one schema up front."""
     df = (
         spark.readStream.schema(schema)
-        .option("header", str(header).lower())
+        .option("header", "true")
+        .option("enforceSchema", "false")
         .option("sep", sep)
         .option("recursiveFileLookup", "true")
         .csv(path)

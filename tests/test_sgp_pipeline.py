@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from dbt_lakehouse_aws_spark.cli import load_raw_sources
+from dbt_lakehouse_aws_spark.cli import MART_OUTPUTS, load_raw_sources
 from dbt_lakehouse_aws_spark.sgp.config import OC
 from dbt_lakehouse_aws_spark.sgp.pipeline import run_pipeline
 
@@ -117,6 +117,28 @@ def test_mart_rank_is_dense_and_value_ordered(results):
     got = results["overall_rankings"].toPandas().sort_values("rank")
     assert list(got["rank"]) == list(range(1, len(got) + 1))
     assert (got["value"].diff().dropna() <= 1e-12).all()
+
+
+def test_mart_caches_nothing_and_needs_no_range_exchange(results):
+    """The ~1k-row mart ranks in one window: nothing is persisted
+    behind it and the final ``orderBy`` reuses the window's order."""
+    qe = results["overall_rankings"]._jdf.queryExecution()
+    assert "InMemoryRelation" not in qe.withCachedData().toString()
+    assert "rangepartitioning" not in qe.executedPlan().toString()
+
+
+def test_repeated_build_reuses_generated_code(spark, fixture_root, results):
+    """A second oc build finds its generated classes in the codegen
+    cache: one build's working set (~290 classes) fits in it."""
+    source = spark._jvm.org.apache.spark.metrics.source
+    metrics = getattr(getattr(source, "CodegenMetrics$"), "MODULE$")
+    for mart in MART_OUTPUTS:
+        results[mart].collect()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    marts = run_pipeline(OC, load_raw_sources(spark, str(fixture_root)))
+    for mart in MART_OUTPUTS:
+        marts[mart].collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before < 50
 
 
 def test_percentiles_sign_flip(results, fixture_root):

@@ -156,27 +156,6 @@ def test_with_path_metadata_custom_col(spark):
     assert out["_filename"] == "data.tsv"
 
 
-def test_read_jsonl_source_with_quarantine(spark, tmp_path):
-    """JSONL corpus ingest: clean rows parse to the schema, malformed
-    lines land whole in the corrupt column instead of failing."""
-    from dbt_lakehouse_aws_spark.sources.reader import read_jsonl_source
-
-    p = tmp_path / "docs"
-    p.mkdir()
-    (p / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en"}\n'
-        '{"doc_id": 2, "text": "bonjour", "lang": "fr"}\n'
-        "{not json at all\n"
-    )
-    df = read_jsonl_source(spark, str(p), "doc_id LONG, text STRING, lang STRING")
-    df = df.cache()  # corrupt-column filters require materialized parse
-    clean = df.filter(F.col("_corrupt_record").isNull())
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    assert {r["doc_id"] for r in clean.collect()} == {1, 2}
-    assert bad.count() == 1 and "not json" in bad.collect()[0]["_corrupt_record"]
-    df.unpersist()
-
-
 def test_sorted_write_tightens_rowgroup_stats(spark, tmp_path):
     """sort_by clustering: after a sorted write, a point predicate on
     the sort key matches the stored min/max ordering (smoke-proof via

@@ -59,6 +59,30 @@ def test_incremental_latest_snapshot(spark, tmp_path):
     assert "_ingest_date" not in table.columns
 
 
+def test_stream_fails_on_a_header_out_of_schema_order(spark, tmp_path):
+    """A file whose header names the columns in another order fails
+    the query; read by position, bob's row would land as id='bob'."""
+    from pyspark.errors import StreamingQueryException
+
+    ingest = tmp_path / "ingest"
+    _write_date(ingest, ("2025", "1", "1"), "id,name\n1,alice\n")
+    _write_date(ingest, ("2025", "6", "1"), "name,id\nbob,2\n")
+    schema = T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("name", T.StringType())]
+    )
+    rows = []
+    q = (
+        read_csv_stream(spark, str(ingest), schema)
+        .writeStream.foreachBatch(lambda df, _: rows.extend(df.select("id", "name").collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert ("bob", "2") not in {(r["id"], r["name"]) for r in rows}
+
+
 def test_windowed_event_counts(spark, tmp_path):
     # rate-free deterministic micro-stream via file source
     src = tmp_path / "events"
