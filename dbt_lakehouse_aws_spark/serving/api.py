@@ -258,7 +258,8 @@ class DurableDraftBoard:
     def delete(self, player_id: str) -> None:
         if not self.table.exists():
             return
-        quoted = player_id.replace("'", "''")
+        # a Spark SQL string literal escapes with a backslash too
+        quoted = player_id.replace("\\", "\\\\").replace("'", "''")
         self.table.delete(f"player_id = '{quoted}'")
 
     def scan(self) -> list[dict]:

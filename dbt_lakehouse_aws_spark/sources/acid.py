@@ -33,15 +33,18 @@ first principles:
   staging a file. ``merge`` and ``replace_where`` on a path with no
   commits create the table, so a caller hands over a frame and
   nothing else.
-* **Copy-on-write MERGE / DELETE with file-level pruning.** MERGE
-  rewrites *only* the files that actually contain matched keys:
-  manifest min/max stats prune the candidate set without touching
-  data, then an exact ``input_file_name`` semi-join pins the files
-  to rewrite. At 100 TB with date- or key-clustered files, a daily
-  delta touches a sliver of the table — the whole point of the
-  format. Untouched files carry into the new manifest by reference.
-  DELETE and ``replace_where`` rewrite the files holding matching
-  rows the same way; there is no merge-on-read delete.
+* **One copy-on-write path.** MERGE, DELETE and ``replace_where``
+  are one kernel (``_copy_on_write``) with a different row flag
+  each: a scan of the candidate files pins the files holding a
+  dropped row (only file names reach the driver), their kept rows
+  plus the incoming rows are rewritten, and untouched files carry
+  into the new manifest by reference. MERGE first prunes the
+  candidates by the manifest min/max bounds of its delta's key
+  range (``_prune``, also behind ``read(prune=)``). At 100 TB with
+  date- or key-clustered files, a daily delta touches a sliver of
+  the table — the whole point of the format. Every data-changing
+  operation rebases on a lost commit race; there is no
+  merge-on-read delete.
 
 Data files enter the table through :func:`.tablefiles.stage`, and the
 statistics come from the footers it reads (:func:`.tablefiles.footer_bounds`,
@@ -632,39 +635,93 @@ class AcidTable:
                 raise ValueError("pass either version or as_of, not both")
             version = self.version_at(as_of)
         snap = self.snapshot(version)
-        schema = StructType.fromJson(json.loads(snap.schema_json))
         files = list(snap.files)
-        # prune keys arrive in LOGICAL names; stats are physical
-        inv = {log: phys for phys, log in snap.renames.items()}
-        prune = {inv.get(c, c): b for c, b in (prune or {}).items()}
         for col, (lo, hi) in (prune or {}).items():
-            kept = []
-            for f in files:
-                bounds = snap.stats.get(f, {}).get(col)
-                if bounds is None:
-                    kept.append(f)  # no stats → cannot prune safely
-                    continue
-                if (hi is not None and bounds[0] > hi) or (
-                    lo is not None and bounds[1] < lo
-                ):
-                    continue
-                kept.append(f)
-            files = kept
-        return self._to_logical(
-            self._scan_physical(snap, files, schema), snap.renames
-        )
+            files = self._prune(snap, files, col, lo, hi)
+        return self._to_logical(self._scan_physical(snap, files), snap.renames)
 
-    def _prune_files(self, snap: Snapshot, key: str, lo, hi) -> list[str]:
-        """Files whose [min,max] for ``key`` can overlap [lo, hi]."""
+    @staticmethod
+    def _prune(snap: Snapshot, files: Sequence[str], col: str, lo, hi) -> list[str]:
+        """The entries of ``files`` whose manifest [min, max] on the
+        LOGICAL column ``col`` can meet [lo, hi] (``None``: an open
+        end). A file with no bounds for the column stays: it cannot be
+        pruned safely."""
+        phys = {log: p for p, log in snap.renames.items()}.get(col, col)
         out = []
-        for f in snap.files:
-            bounds = snap.stats.get(f, {}).get(key)
-            if bounds is None or lo is None:
-                out.append(f)  # no stats → can't prune safely
-                continue
-            if not (bounds[1] < lo or bounds[0] > hi):
+        for f in files:
+            b = snap.stats.get(f, {}).get(phys)
+            if b is None or not ((hi is not None and b[0] > hi) or (lo is not None and b[1] < lo)):
                 out.append(f)
         return out
+
+    def _copy_on_write(
+        self,
+        snap: Snapshot,
+        flag: Callable[[DataFrame], DataFrame],
+        *,
+        operation: str,
+        files: Sequence[str] | None = None,
+        add: DataFrame | None = None,
+        schema: StructType | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> Snapshot:
+        """The one copy-on-write commit behind ``merge``, ``delete`` and
+        ``replace_where``. ``flag`` maps a logical-name scan to the
+        same rows plus a boolean ``_drop``; a NULL ``_drop`` keeps the
+        row (SQL predicate semantics).
+
+        1. *Pin*: scan ``files`` (default: all of ``snap``; callers
+           pass a stats-pruned subset) and collect the distinct names
+           of the files holding a dropped row — only file names travel
+           to the driver.
+        2. *Rewrite*: ``add`` (logical names) ∪ the kept rows of the
+           pinned files, projected onto ``schema`` (physical names;
+           default the snapshot's), coalesced to about one output file
+           per pinned file. A rewrite with no rows adds no file.
+        3. *Commit*: untouched files carry over by reference; one
+           commit on top of ``snap`` records ``"<operation>
+           touched=a/b"``."""
+        if schema is None:
+            schema = StructType.fromJson(json.loads(snap.schema_json))
+        files = list(snap.files if files is None else files)
+
+        def flagged(fs: list[str], **kw) -> DataFrame:
+            return flag(self._to_logical(self._scan_physical(snap, fs, **kw), snap.renames))
+
+        touched: list[str] = []
+        if files:
+            pinned = flagged(files, keep_file_col="_file").filter("_drop")
+            rows = pinned.select("_file").distinct().collect()
+            # map scanned basenames back to MANIFEST entries (clones
+            # hold absolute entries whose basename != the entry itself)
+            by_base = {os.path.basename(self._resolve(f)): f for f in files}
+            touched = [by_base[r["_file"]] for r in rows]
+        parts = [] if add is None else [add]
+        if touched:
+            parts.append(flagged(touched).filter(~F.coalesce(F.col("_drop"), F.lit(False))))
+        new_files: dict[str, StagedFile] = {}
+        if parts:
+            out = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [self._to_physical(p, snap.renames) for p in parts],
+            )
+            # ~one output file per rewritten input file: without the
+            # coalesce the rewrite inherits spark.sql.shuffle.partitions
+            # and every commit bloats the manifest with tiny files
+            out = out.select(*[f.name for f in schema.fields]).coalesce(max(1, len(touched)))
+            new_files = self._write_nonempty(out, snap.version + 1)
+        gone = set(touched)
+        untouched = [f for f in snap.files if f not in gone]
+        stats = {f: snap.stats[f] for f in untouched if f in snap.stats}
+        stats.update(self._stats_for(new_files, schema))
+        return self._commit(
+            operation=f"{operation} touched={len(touched)}/{len(snap.files)}",
+            files=untouched + list(new_files),
+            schema_json=schema.json(),
+            stats=stats,
+            base_version=snap.version,
+            txn=txn,
+        )
 
     def merge(
         self,
@@ -675,212 +732,108 @@ class AcidTable:
         not_matched_by_source_delete: str | None = None,
     ) -> Snapshot:
         """``MERGE INTO`` (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED
-        INSERT *): copy-on-write on exactly the files holding matched
-        keys.
+        INSERT *) through the one copy-on-write path
+        (:meth:`_copy_on_write`): a target row is dropped when its key
+        is among the updates, and the updates are added, so only the
+        files holding matched keys are rewritten.
 
-        Three-phase file targeting, none of which scans untouched data:
-
-        1. *Stats prune*: manifest min/max bounds on ``keys[0]`` vs the
-           delta's key range drop files that cannot contain a match.
-        2. *Exact pin*: scan only the pruned candidates with
-           ``input_file_name()``, semi-join on the full key, collect the
-           distinct file names that truly hold matches (bounded by file
-           count, not row count).
-        3. *Rewrite*: (touched-file rows ⟕̸ update keys) ∪ updates → new
-           files; untouched files carry over by reference.
-
-        On :class:`CommitConflict` the whole merge rebases on the new
-        snapshot (optimistic concurrency, Delta-style), up to
-        ``COMMIT_ATTEMPTS`` attempts in total.
+        The updates must carry every target column (UPDATE SET *) and
+        hold each key once; both are checked before anything else
+        runs, the first one without a Spark job. The job for the
+        duplicate-key check also yields the delta's ``keys[0]`` range,
+        and the manifest min/max bounds prune the files that cannot
+        hold a match before any data is read.
 
         On a path with no commits the updates are committed as
         version 0 (dbt's first incremental run; DynamoDB ``PutItem``
         on a new item). A ``txn`` batch that already landed is a no-op
-        returning the current snapshot.
+        returning the current snapshot. On :class:`CommitConflict` the
+        whole merge rebases on the new snapshot, up to
+        ``COMMIT_ATTEMPTS`` attempts in total.
 
         ``not_matched_by_source_delete`` adds Delta's ``WHEN NOT
         MATCHED BY SOURCE THEN DELETE`` clause: target rows whose key
         the source does NOT carry AND that satisfy the given condition
         (a logical-name SQL expression; ``"true"`` for all) are
         deleted in the same atomic commit — the full-table-sync /
-        retention-sweep shape. Files holding such rows join the
-        touched set, so the clause prices O(files with deletions),
-        not O(table).
+        retention-sweep shape. No stats pruning is sound for an
+        arbitrary condition, so the pin scans every file, but only
+        the files holding dropped rows are rewritten.
         """
         keys = list(keys)
+        nmbs = not_matched_by_source_delete
 
         def attempt() -> Snapshot:
             snap = self._current()
             if snap is None:
                 return self._write_on(None, updates, "overwrite", txn=txn)
-            return self._merge_once(
-                snap, updates, keys, txn=txn, nmbs_delete=not_matched_by_source_delete
+            if self._landed(snap, txn):
+                return snap
+            schema = StructType.fromJson(json.loads(snap.schema_json))
+            # the incoming delta is written against logical names; the
+            # schema and the commit label run in physical names
+            physical = self._to_physical(updates, snap.renames)
+            lacking = [f.name for f in schema.fields if f.name not in physical.columns]
+            if lacking:
+                # UPDATE SET * semantics (Delta's rule): the delta must
+                # carry every existing target column — silently NULLing
+                # matched rows' columns would be data loss, not evolution
+                raise ValueError(f"merge updates missing target columns: {lacking}")
+            bounds = updates.agg(
+                F.min(keys[0]).alias("lo"),
+                F.max(keys[0]).alias("hi"),
+                F.count(F.lit(1)).alias("n"),
+                # struct() so NULL-bearing key tuples still count (bare
+                # count_distinct drops any row with a NULL key column,
+                # which would false-positive this guard)
+                F.count_distinct(F.struct(*keys)).alias("nk"),
+            ).first()
+            if bounds["n"] != bounds["nk"]:
+                # Delta/Iceberg MERGE raises when multiple source rows
+                # match one target row; silently unioning both deltas
+                # in would duplicate the key. Callers wanting last-wins
+                # semantics must dedupe first (stream_merge_into_acid does).
+                raise ValueError(
+                    f"merge updates contain duplicate keys on {keys} "
+                    f"({bounds['n']} rows, {bounds['nk']} distinct keys); "
+                    "dedupe the source (e.g. latest-per-key) before merging"
+                )
+            hits = updates.select(*keys).distinct().withColumn("_hit", F.lit(True))
+
+            def flag(df: DataFrame) -> DataFrame:
+                drop = F.col("_hit").isNotNull()
+                if nmbs:
+                    drop = drop | F.expr(nmbs)
+                return df.join(hits, keys, "left").withColumn("_drop", drop).drop("_hit")
+
+            inv = {log: phys for phys, log in snap.renames.items()}
+            return self._copy_on_write(
+                snap,
+                flag,
+                operation=f"MERGE keys={[inv.get(k, k) for k in keys]}"
+                + (" +nmbs_delete" if nmbs else ""),
+                # no stats pruning is sound for an arbitrary NMBS condition
+                files=None
+                if nmbs
+                else self._prune(snap, snap.files, keys[0], bounds["lo"], bounds["hi"]),
+                add=updates,
+                schema=self._evolved_schema(schema, physical),
+                txn=txn,
             )
 
         return self._with_rebase(attempt)
 
-    def _merge_once(
-        self,
-        snap: Snapshot,
-        updates: DataFrame,
-        keys: list[str],
-        txn: tuple[str, int] | None = None,
-        nmbs_delete: str | None = None,
-    ) -> Snapshot:
-        if self._landed(snap, txn):
-            return snap
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        # the incoming delta is written against logical names; every
-        # file-level step below runs in physical names
-        updates = self._to_physical(updates, snap.renames)
-        inv = {log: phys for phys, log in snap.renames.items()}
-        keys_log = list(keys)
-        keys = [inv.get(k, k) for k in keys]
-        evolved = self._evolved_schema(schema, updates)
-        bounds = updates.agg(
-            F.min(keys[0]).alias("lo"),
-            F.max(keys[0]).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            # struct() so NULL-bearing key tuples still count (bare
-            # count_distinct drops any row with a NULL key column,
-            # which would false-positive this guard)
-            F.count_distinct(F.struct(*keys)).alias("nk"),
-        ).first()
-        if bounds["n"] != bounds["nk"]:
-            # Delta/Iceberg MERGE raises when multiple source rows match
-            # one target row; silently unioning both deltas in would
-            # duplicate the key. Callers wanting last-wins semantics
-            # must dedupe first (stream_merge_into_acid does).
-            raise ValueError(
-                f"merge updates contain duplicate keys on {keys} "
-                f"({bounds['n']} rows, {bounds['nk']} distinct keys); "
-                "dedupe the source (e.g. latest-per-key) before merging"
-            )
-        candidates = self._prune_files(snap, keys[0], bounds["lo"], bounds["hi"])
-        touched: list[str] = []
-        if candidates:
-            cand_df = self._scan_physical(snap, candidates, keep_file_col="_file")
-            touched_paths = (
-                cand_df.join(updates.select(*keys).distinct(), keys, "left_semi")
-                .select("_file")
-                .distinct()
-                .collect()
-            )
-            # map scanned basenames back to MANIFEST entries (clones
-            # hold absolute entries whose basename != the entry itself)
-            by_base = {os.path.basename(self._resolve(f)): f for f in candidates}
-            touched = [by_base[r["_file"]] for r in touched_paths]
-        nmbs_cond = F.expr(nmbs_delete) if nmbs_delete else None
-        if nmbs_cond is not None and snap.files:
-            # files holding deletable rows (condition-satisfying rows
-            # whose key the source does not carry) join the touched
-            # set — no stats pruning is sound for an arbitrary
-            # condition, but only FILE NAMES travel to the driver
-            all_log = self._to_logical(
-                self._scan_physical(snap, keep_file_col="_file"), snap.renames
-            )
-            upd_keys_log = self._to_logical(
-                updates.select(*keys).distinct(), snap.renames
-            )
-            del_paths = (
-                all_log.filter(nmbs_cond)
-                .join(upd_keys_log, keys_log, "left_anti")
-                .select("_file")
-                .distinct()
-                .collect()
-            )
-            by_base_all = {
-                os.path.basename(self._resolve(f)): f for f in snap.files
-            }
-            seen = set(touched)
-            touched += [
-                by_base_all[r["_file"]]
-                for r in del_paths
-                if by_base_all[r["_file"]] not in seen
-            ]
-        lacking = [f.name for f in schema.fields if f.name not in updates.columns]
-        if lacking:
-            # UPDATE SET * semantics (Delta's rule): the delta must
-            # carry every existing target column — silently NULLing
-            # matched rows' columns would be data loss, not evolution
-            raise ValueError(f"merge updates missing target columns: {lacking}")
-        up = updates.select(*[f.name for f in evolved.fields])
-        if touched:
-            touched_df = self._scan_physical(snap, touched)
-            survivors = touched_df.join(updates.select(*keys).distinct(), keys, "left_anti")
-            if nmbs_cond is not None:
-                # WHEN NOT MATCHED BY SOURCE THEN DELETE: unmatched
-                # target rows meeting the condition do not survive
-                surv_log = self._to_logical(survivors, snap.renames)
-                survivors = self._to_physical(
-                    surv_log.filter(~nmbs_cond | nmbs_cond.isNull()),
-                    snap.renames,
-                )
-            # pre-evolution survivor rows take NULLs for new columns
-            rewritten = up.unionByName(survivors, allowMissingColumns=True)
-        else:
-            rewritten = up
-        rewritten = rewritten.select(*[f.name for f in evolved.fields])
-        # ~one output file per rewritten input file: without this the
-        # rewrite inherits spark.sql.shuffle.partitions (200 by
-        # default) and every merge bloats the manifest with hundreds
-        # of tiny files — the file count must stay proportional to
-        # the touched set, not the session config.
-        rewritten = rewritten.coalesce(max(1, len(touched)))
-        new_files = self._write_data_files(rewritten, snap.version + 1)
-        untouched = [f for f in snap.files if f not in set(touched)]
-        stats = {f: s for f, s in snap.stats.items() if f in set(untouched)}
-        stats.update(self._stats_for(new_files, evolved))
-        return self._commit(
-            operation=f"MERGE keys={keys} touched={len(touched)}/{len(snap.files)}"
-            + (" +nmbs_delete" if nmbs_delete else ""),
-            files=untouched + list(new_files),
-            schema_json=evolved.json(),
-            stats=stats,
-            base_version=snap.version,
-            txn=txn,
-        )
-
-    def _rewrite_matching(
-        self, snap: Snapshot, cond
-    ) -> tuple[list[str], dict[str, StagedFile]]:
-        """Copy-on-write removal of the rows matching ``cond`` (a
-        logical-name Column): returns (touched, rewritten) — the
-        manifest entries holding matching rows and the new files
-        holding their surviving remainder. Rows whose predicate is
-        NULL survive (SQL semantics)."""
-        touched: list[str] = []
-        if snap.files:
-            all_df = self._to_logical(
-                self._scan_physical(snap, keep_file_col="_file"), snap.renames
-            )
-            rows = all_df.filter(cond).select("_file").distinct().collect()
-            by_base = {os.path.basename(self._resolve(f)): f for f in snap.files}
-            touched = [by_base[r["_file"]] for r in rows]
-        if not touched:
-            return [], {}
-        touched_df = self._to_logical(self._scan_physical(snap, touched), snap.renames)
-        keep = self._to_physical(
-            touched_df.filter(~cond | cond.isNull()), snap.renames
-        ).coalesce(max(1, len(touched)))
-        return touched, self._write_nonempty(keep, snap.version + 1)
-
     def delete(self, predicate: str) -> Snapshot:
-        """``DELETE WHERE predicate`` (copy-on-write): rewrite only
-        files that contain matching rows; files with no matches carry
-        over untouched. ``predicate`` is SQL over logical names."""
-        snap = self.snapshot()
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        touched, new_files = self._rewrite_matching(snap, F.expr(predicate))
-        untouched = [f for f in snap.files if f not in set(touched)]
-        stats = {f: s for f, s in snap.stats.items() if f in set(untouched)}
-        stats.update(self._stats_for(new_files, schema))
-        return self._commit(
-            operation=f"DELETE touched={len(touched)}/{len(snap.files)}",
-            files=untouched + list(new_files),
-            schema_json=snap.schema_json,
-            stats=stats,
-            base_version=snap.version,
+        """``DELETE WHERE predicate`` through the one copy-on-write
+        path (:meth:`_copy_on_write`): only the files holding matching
+        rows are rewritten; rows whose predicate is NULL stay.
+        ``predicate`` is SQL over logical names. A lost commit race
+        rebases like ``merge``."""
+        cond = F.expr(predicate)
+        return self._with_rebase(
+            lambda: self._copy_on_write(
+                self.snapshot(), lambda df: df.withColumn("_drop", cond), operation="DELETE"
+            )
         )
 
     def replace_where(
@@ -892,13 +845,13 @@ class AcidTable:
     ) -> Snapshot:
         """Predicate-scoped INSERT OVERWRITE (public Delta Lake
         ``replaceWhere`` semantics; dbt's ``insert_overwrite``
-        incremental strategy): ONE atomic commit that (a) rewrites
-        only the current files containing predicate-matching rows,
-        keeping their non-matching remainder, and (b) adds the
-        incoming batch. Readers see either the old partition or the
-        new one, never a mix and never a gap — the delete and the
-        insert share a commit, which is the property an incremental
-        model needs for idempotent backfills.
+        incremental strategy) through the one copy-on-write path
+        (:meth:`_copy_on_write`): ONE atomic commit drops the rows
+        matching ``predicate`` from the files that hold them and adds
+        the incoming batch. Readers see either the old partition or
+        the new one, never a mix and never a gap — the property an
+        incremental model needs for idempotent backfills. A lost
+        commit race rebases like ``merge``.
 
         Mirrors Delta's guard: every incoming row must itself
         satisfy the predicate (a batch that leaks outside its
@@ -906,35 +859,27 @@ class AcidTable:
         with no commits the batch, once guarded, is version 0. A
         ``txn`` batch that already landed is a no-op returning the
         current snapshot."""
-        snap = self._current()
-        if self._landed(snap, txn):
-            return snap
         cond = F.expr(predicate)  # LOGICAL column names
-        if df.filter(~cond | cond.isNull()).limit(1).count() > 0:
-            raise ValueError(
-                f"replace_where batch contains rows violating {predicate!r}"
+
+        def attempt() -> Snapshot:
+            snap = self._current()
+            if self._landed(snap, txn):
+                return snap
+            if df.filter(~cond | cond.isNull()).limit(1).count() > 0:
+                raise ValueError(
+                    f"replace_where batch contains rows violating {predicate!r}"
+                )
+            if snap is None:
+                return self._write_on(None, df, "overwrite", txn=txn)
+            return self._copy_on_write(
+                snap,
+                lambda d: d.withColumn("_drop", cond),
+                operation=f"REPLACE WHERE {predicate}",
+                add=df,
+                txn=txn,
             )
-        if snap is None:
-            return self._write_on(None, df, "overwrite", txn=txn)
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        touched, rewritten = self._rewrite_matching(snap, cond)
-        new_files = self._write_data_files(
-            self._to_physical(df, snap.renames), snap.version + 1
-        )
-        untouched = [f for f in snap.files if f not in set(touched)]
-        stats = {f: s for f, s in snap.stats.items() if f in set(untouched)}
-        stats.update(self._stats_for({**rewritten, **new_files}, schema))
-        return self._commit(
-            operation=(
-                f"REPLACE WHERE {predicate} "
-                f"touched={len(touched)}/{len(snap.files)}"
-            ),
-            files=untouched + list(rewritten) + list(new_files),
-            schema_json=snap.schema_json,
-            stats=stats,
-            base_version=snap.version,
-            txn=txn,
-        )
+
+        return self._with_rebase(attempt)
 
     def clone(self, dest_path: str, *, version: int | None = None) -> "AcidTable":
         """Zero-copy SHALLOW CLONE (Delta Lake's ``CREATE TABLE ...
@@ -1020,8 +965,8 @@ class AcidTable:
         rewrite the current snapshot at ~``target_file_bytes`` per
         file — optionally z-ordered so every listed column's manifest
         bounds tighten — and commit the swap atomically. Readers of
-        the old snapshot are untouched; streaming writers that lose
-        the version race simply rebase (their merge retries).
+        the old snapshot are untouched; writers that lose the version
+        race simply rebase (every data-changing operation retries).
 
         If OPTIMIZE itself loses the race (a merge committed between
         its snapshot read and its commit), committing the stale

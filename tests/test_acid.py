@@ -80,17 +80,15 @@ def test_commit_conflict_put_if_absent(spark, tmp_path, base_rows):
         t._commit(**kwargs)  # second writer must conflict, not clobber
 
 
-def test_merge_retries_past_conflict(spark, tmp_path, base_rows):
-    """merge() rebases on CommitConflict instead of surfacing it."""
-    t = AcidTable(spark, str(tmp_path / "t"))
-    t.write(_mkdf(spark, base_rows))
+def _sneak_in_first(t):
+    """Make ``t._commit`` lose its first race: another writer commits
+    version base+1 just before it. Returns the number of races lost."""
     real_commit = t._commit
     fails = {"n": 0}
 
     def flaky_commit(**kwargs):
         if fails["n"] == 0:
             fails["n"] += 1
-            # another writer sneaks in version base+1 first
             real_commit(
                 operation="SNEAK",
                 files=kwargs["files"],
@@ -101,15 +99,45 @@ def test_merge_retries_past_conflict(spark, tmp_path, base_rows):
         return real_commit(**kwargs)
 
     t._commit = flaky_commit
+    return fails
+
+
+def test_merge_retries_past_conflict(spark, tmp_path, base_rows):
+    """merge() rebases on CommitConflict instead of surfacing it."""
+    t = AcidTable(spark, str(tmp_path / "t"))
+    t.write(_mkdf(spark, base_rows))
+    fails = _sneak_in_first(t)
     snap = t.merge(_mkdf(spark, [(3, "odd", 33.0)]), ["id"])
     assert fails["n"] == 1 and snap.version == 2
     assert t.read().filter("id = 3").first()["value"] == 33.0
 
 
+def test_delete_and_replace_where_retry_past_conflict(spark, tmp_path, base_rows):
+    """delete() and replace_where() rebase on a lost race like merge():
+    the retry commits on top of the sneaked-in version with the right
+    rows."""
+    t = AcidTable(spark, str(tmp_path / "d"))
+    t.write(_mkdf(spark, base_rows))
+    fails = _sneak_in_first(t)
+    snap = t.delete("id >= 90")
+    assert fails["n"] == 1 and snap.version == 2
+    assert t.read().count() == 90
+
+    r = AcidTable(spark, str(tmp_path / "r"))
+    r.write(_mkdf(spark, base_rows))
+    fails = _sneak_in_first(r)
+    snap = r.replace_where(_mkdf(spark, [(1, "odd", -1.0)]), "grp = 'odd'")
+    assert fails["n"] == 1 and snap.version == 2
+    got = {row["id"]: row["value"] for row in r.read().filter("grp = 'odd'").collect()}
+    assert got == {1: -1.0}
+    assert r.read().filter("grp = 'even'").count() == 50
+
+
 def test_commit_race_losers_make_three_attempts(spark, tmp_path, base_rows, monkeypatch):
-    """merge() and optimize() share one retry policy: an operation
-    that keeps losing the commit race rebases COMMIT_ATTEMPTS - 1
-    times and then raises — 3 attempts in all."""
+    """merge(), delete(), replace_where() and optimize() share one
+    retry policy: an operation that keeps losing the commit race
+    rebases COMMIT_ATTEMPTS - 1 times and then raises — 3 attempts in
+    all."""
     t = AcidTable(spark, str(tmp_path / "t"))
     t.write(_mkdf(spark, base_rows))
     calls = []
@@ -118,14 +146,18 @@ def test_commit_race_losers_make_three_attempts(spark, tmp_path, base_rows, monk
         calls.append(1)
         raise CommitConflict("lost the race")
 
-    monkeypatch.setattr(t, "_merge_once", always_conflict)
-    with pytest.raises(CommitConflict):
-        t.merge(_mkdf(spark, [(3, "odd", 33.0)]), ["id"])
-    assert len(calls) == 3
+    monkeypatch.setattr(t, "_copy_on_write", always_conflict)
     monkeypatch.setattr(t, "_optimize_once", always_conflict)
-    with pytest.raises(CommitConflict):
-        t.optimize()
-    assert len(calls) == 6
+    for op in (
+        lambda: t.merge(_mkdf(spark, [(3, "odd", 33.0)]), ["id"]),
+        lambda: t.delete("id >= 90"),
+        lambda: t.replace_where(_mkdf(spark, [(1, "odd", 1.0)]), "grp = 'odd'"),
+        t.optimize,
+    ):
+        calls.clear()
+        with pytest.raises(CommitConflict):
+            op()
+        assert len(calls) == 3
     assert t.latest_version() == 0
 
 
@@ -304,9 +336,17 @@ def test_schema_evolution_append_and_merge(spark, tmp_path):
     bad = spark.createDataFrame([(9, "g", 1.0, 5)], "id bigint, grp string, value double, lang int")
     with pytest.raises(ValueError, match="cannot change 'lang'"):
         t.write(bad, mode="append")
-    # merge lacking an existing column is a hard error (no silent NULLing)
-    with pytest.raises(ValueError, match="missing target columns"):
-        t.merge(spark.createDataFrame([(1, "g")], "id bigint, grp string"), ["id"])
+    # merge lacking an existing column is a hard error (no silent
+    # NULLing), refused before any Spark job runs
+    lacking = spark.createDataFrame([(1, "g")], "id bigint, grp string")
+    sc = spark.sparkContext
+    sc.setJobGroup("merge_lacking", "merge_lacking")
+    try:
+        with pytest.raises(ValueError, match="missing target columns"):
+            t.merge(lacking, ["id"])
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("merge_lacking")) == 0
 
 
 def test_row_changes_between_snapshots(spark, tmp_path):

@@ -216,3 +216,17 @@ def test_landing_decisions_live_only_in_their_modules():
         for token, owner in owners.items()
     }
     assert not any(offenders.values()), f"landing decisions outside their owners: {offenders}"
+
+
+def test_only_the_copy_on_write_kernel_pins_files():
+    """Which files a MERGE, DELETE or replace_where rewrites is decided
+    in one place: the copy-on-write kernel in ``sources/acid.py`` is
+    the only scan that keeps each row's data-file name. Static text
+    scan: no Spark session."""
+    token = 'keep_file_col="_file"'
+    hits = {
+        str(p.relative_to(PKG)): p.read_text().count(token)
+        for p in PKG.rglob("*.py")
+        if token in p.read_text()
+    }
+    assert hits == {"sources/acid.py": 1}, f"file pinning outside the kernel: {hits}"

@@ -161,6 +161,22 @@ def test_durable_draft_board_survives_restart(spark, board_df, tmp_path):
     assert len(b3.scan()) == 1
 
 
+def test_durable_board_delete_quotes_ids(spark, tmp_path):
+    """delete() quotes an id into a Spark SQL string literal, where
+    both a quote and a backslash are special: each such id deletes
+    exactly its own item."""
+    from dbt_lakehouse_aws_spark.serving.api import DurableDraftBoard
+
+    board = DurableDraftBoard(spark, str(tmp_path / "draft_board"))
+    ids = ["o'neil", "a\\b", "c\\", "ab"]
+    for pid in ids:
+        board.put(pid, pid)
+    for pid in ids[:3]:
+        board.delete(pid)
+        ids.remove(pid)
+        assert sorted(i["player_id"] for i in board.scan()) == sorted(ids)
+
+
 def test_durable_board_item_frame_is_a_local_relation(spark, tmp_path):
     """A put's one-row MERGE source is an Arrow LocalRelation, not a
     pickled-row LogicalRDD that re-runs a Python worker per action."""
