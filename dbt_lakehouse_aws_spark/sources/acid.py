@@ -416,7 +416,7 @@ class AcidTable:
         with the snapshot's explicit schema — the ONE routine every
         read-side and copy-on-write path goes through.
         ``keep_file_col`` adds each row's data-file basename, which
-        the rewrite paths map back to manifest entries."""
+        the copy-on-write kernel maps back to manifest entries."""
         if schema is None:
             schema = StructType.fromJson(json.loads(snap.schema_json))
         files = list(snap.files if files is None else files)
