@@ -43,8 +43,13 @@ MART_OUTPUTS = ("overall_rankings", "factors_wide", "sgp_percentiles")
 
 
 def load_raw_sources(spark: SparkSession, raw_dir: str):
+    """The build's source frames, read through the bounded session of
+    ``spark`` (``session.bounded_session``): every model and mart
+    write built from them plans and runs under its conf."""
+    from dbt_lakehouse_aws_spark.session import bounded_session
     from dbt_lakehouse_aws_spark.sources import reader
 
+    spark = bounded_session(spark)
     return {
         name: reader.read_csv_source(
             spark, f"{raw_dir}/{subdir}", sep="\t" if fmt == "tsv" else ",", mode=mode

@@ -16,7 +16,12 @@ logical plans flat, so analysis time does not grow with DAG depth.
 One warm oc build of the 20-model SGP DAG (load, DAG, mart writes;
 4 vCPU) took 9.9 s with the cut, against 33.6 s fully lazy, 33.1 s
 with ``persist()`` per shared node (lineage kept) and 15.6 s writing
-every model to parquet, all with identical marts.
+every model to parquet, all with identical marts. Those timings
+were taken under AQE, where building a cut's RDD runs every upstream
+query stage at once (20 Spark jobs a build). The SGP build now runs
+in the bounded session (``session.bounded_session``): there a cut
+runs no job of its own, and its blocks are filled by the first mart
+write that reads them.
 
 Caveat: localCheckpoint blocks live only in executor storage and
 cannot be recomputed. The marts are readable only while the

@@ -8,8 +8,11 @@ sgp.config.LeagueConfig` parameters.
 
 Scale design decisions (vs the reference's literal SQL):
 
-* 1-row constant frames (SGP factors, dollars-per-SGP) broadcast —
-  the cross joins never shuffle the big side.
+* no join hints: the build runs in the bounded session
+  (:func:`~dbt_lakehouse_aws_spark.session.bounded_session`), where
+  every side of every join fits one partition and a broadcast would
+  only add a Spark job per join; the planner picks each join from
+  the session's conf.
 * "top N overall" pools (UT/P tiers, reference ``row_number() over
   (order by sgp desc)``) run as ``orderBy().limit(n)`` —
   TakeOrderedAndProject, a per-partition heap + driver merge, not a
@@ -65,9 +68,7 @@ def stg_player_id_map(players: DataFrame, id_map: DataFrame) -> DataFrame:
     joined = (
         players.select("id", name.alias("name"), "team", "pos")
         .join(
-            F.broadcast(
-                id_map.select("nfbcid", "mlbid", "idfangraphs", "underdog", "razzballid", "bpid")
-            ),
+            id_map.select("nfbcid", "mlbid", "idfangraphs", "underdog", "razzballid", "bpid"),
             players["id"] == id_map["nfbcid"],
             "left",
         )
@@ -202,7 +203,7 @@ def _per_rate(
 ) -> DataFrame:
     """Shared shape of the four per-PA / per-IP stage models
     (stg_fg_proj_preseason_hitting_per_pa.sql:7-28 and siblings):
-    broadcast-join to the id map, divide counting stats by playing
+    join to the id map, divide counting stats by playing
     time, pass rate stats through."""
     rename = rename or {}
     denom = F.col(rate_denom).cast("double")
@@ -219,9 +220,7 @@ def _per_rate(
             cols.append(derived[c].alias(c))
         else:
             cols.append(F.col(c).cast("double").alias(c))
-    return proj.join(
-        F.broadcast(ids), proj[join_left] == ids[join_right], "inner"
-    ).select(*cols)
+    return proj.join(ids, proj[join_left] == ids[join_right], "inner").select(*cols)
 
 
 def stg_fg_hitting_per_pa(proj: DataFrame, ids: DataFrame) -> DataFrame:
@@ -341,7 +340,7 @@ def stg_hitting_sgp(agg: DataFrame, ids: DataFrame, factors: DataFrame, cfg: Lea
     """Score hitters against the league's SGP factors
     (stg_proj_preseason_hitting_sgp_{oc,50s}.sql:7-72).
 
-    The factor row is a 1-row broadcast cross join (J5); the
+    The factor row is a 1-row cross join (J5); the
     marginal-AVG formula uses the league's replacement-team
     constants. Multi-position +0.25 / UT-only −0.25 (:69-71,
     UT branch checked first)."""
@@ -353,7 +352,7 @@ def stg_hitting_sgp(agg: DataFrame, ids: DataFrame, factors: DataFrame, cfg: Lea
     consts = factors.filter(F.col("_filename") == cfg.standings_filename).select(
         "sgp_r", "sgp_hr", "sgp_rbi", "sgp_sb", "sgp_avg"
     )
-    scored = base.crossJoin(F.broadcast(consts))
+    scored = base.crossJoin(consts)
     position = when_chain(
         [(F.col("pos").like(p), v) for p, v in _POSITION_BUCKETS], default="UT"
     )
@@ -397,7 +396,7 @@ def stg_pitching_sgp(agg: DataFrame, ids: DataFrame, factors: DataFrame, cfg: Le
     consts = factors.filter(F.col("_filename") == cfg.standings_filename).select(
         "sgp_k", "sgp_w", "sgp_s", "sgp_era", "sgp_whip"
     )
-    scored = base.crossJoin(F.broadcast(consts))
+    scored = base.crossJoin(consts)
     era_sgp = (
         ((cfg.era_er_base + F.col("er")) * 9) / (cfg.era_ip_base + F.col("ip"))
         - cfg.era_rate_base
@@ -424,12 +423,12 @@ def stg_pitching_sgp(agg: DataFrame, ids: DataFrame, factors: DataFrame, cfg: Le
 
 def _global_top_flag(df: DataFrame, n: int) -> DataFrame:
     """Top-n overall by sgp (deterministic id tiebreak) as a
-    TakeOrderedAndProject + broadcast semi-join — replaces the
+    TakeOrderedAndProject + semi-join — replaces the
     reference's unpartitioned ``row_number()`` window
     (…rep_lvl_oc.sql:27) which would funnel all rows through one
     task at scale."""
     top = df.orderBy(F.desc("sgp"), F.asc("id")).limit(n).select("id")
-    return df.join(F.broadcast(top), "id", "left_semi")
+    return df.join(top, "id", "left_semi")
 
 
 def stg_hitting_rep_lvl(sgp: DataFrame, cfg: LeagueConfig) -> DataFrame:
@@ -508,16 +507,16 @@ def stg_pitching_rep_lvl(sgp: DataFrame, cfg: LeagueConfig) -> DataFrame:
 
 def _values(sgp: DataFrame, rep_lvl: DataFrame, *, budget_total: float) -> DataFrame:
     """Shared valuation shape (…values_{oc,50s}.sql): sgpar = sgp −
-    replvl; $/SGP = budget / Σ positive sgpar (1-row broadcast);
+    replvl; $/SGP = budget / Σ positive sgpar (a 1-row cross join);
     value = sgpar·rate + 1."""
-    base = sgp.join(F.broadcast(rep_lvl), "position", "left").withColumn(
+    base = sgp.join(rep_lvl, "position", "left").withColumn(
         "sgpar", F.col("sgp") - F.col("replvl")
     )
     dollars = base.filter(F.col("sgpar") > 0).agg(
         (F.lit(budget_total) / F.sum("sgpar")).alias("dollars_per_sgp")
     )
     return (
-        base.crossJoin(F.broadcast(dollars))
+        base.crossJoin(dollars)
         .withColumn("value", F.col("sgpar") * F.col("dollars_per_sgp") + 1)
         .drop("dollars_per_sgp")
     )
@@ -599,8 +598,7 @@ def mart_overall_rankings(
         rosters.filter(
             ~F.concat(F.col("playerid"), F.col("pos")).isin(list(cfg.excluded_roster_keys))
         )
-        .join(F.broadcast(ids.select("id", "idfangraphs")),
-              rosters["playerid"] == ids["idfangraphs"], "inner")
+        .join(ids.select("id", "idfangraphs"), rosters["playerid"] == ids["idfangraphs"], "inner")
         .select(F.col("id").alias("_rid"), "projected_opening_day_status")
     )
 
@@ -608,9 +606,9 @@ def mart_overall_rankings(
         "rank", F.row_number().over(Window.orderBy(F.desc("value"), F.asc("id"))).cast("long")
     )
     out = (
-        ranked.join(F.broadcast(adp_side), ranked["id"] == adp_side["playerid"], "left")
+        ranked.join(adp_side, ranked["id"] == adp_side["playerid"], "left")
         .drop("playerid")
-        .join(F.broadcast(roster_side), ranked["id"] == roster_side["_rid"], "left")
+        .join(roster_side, ranked["id"] == roster_side["_rid"], "left")
         .drop("_rid")
         .withColumn("rank_diff", F.col("adp") - F.col("rank"))
     )

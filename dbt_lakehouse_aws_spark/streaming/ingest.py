@@ -890,7 +890,8 @@ def stream_replace_where_into_acid(
     The batch's distinct partition values are collected to build the
     predicate — bounded by the number of partitions a batch touches
     (days per batch), never by row count. String partition values
-    are escaped as SQL literals; integers pass through."""
+    are escaped as SQL literals (backslash and quote); integers pass
+    through; a NULL partition is the ``IS NULL`` slice."""
     from dbt_lakehouse_aws_spark.sources.acid import AcidTable
 
     app_id = f"stream_replace_where:{checkpoint_dir}"
@@ -904,11 +905,19 @@ def stream_replace_where_into_acid(
         parts = [r[0] for r in batch.select(partition_col).distinct().collect()]
         if not parts:
             return
-        if isinstance(parts[0], str):
-            quoted = ", ".join("'" + p.replace("'", "''") + "'" for p in parts)
-        else:
-            quoted = ", ".join(str(p) for p in parts)
-        predicate = f"{partition_col} IN ({quoted})"
+        values = [p for p in parts if p is not None]
+        slices = []
+        if values:
+            if isinstance(values[0], str):
+                quoted = ", ".join(
+                    "'" + p.replace("\\", "\\\\").replace("'", "''") + "'" for p in values
+                )
+            else:
+                quoted = ", ".join(str(p) for p in values)
+            slices.append(f"{partition_col} IN ({quoted})")
+        if len(values) < len(parts):
+            slices.append(f"{partition_col} IS NULL")
+        predicate = " OR ".join(slices)
         AcidTable(batch.sparkSession, table_path).replace_where(
             batch, predicate, txn=(app_id, batch_id)
         )

@@ -230,3 +230,40 @@ def test_only_the_copy_on_write_kernel_pins_files():
         if token in p.read_text()
     }
     assert hits == {"sources/acid.py": 1}, f"file pinning outside the kernel: {hits}"
+
+
+
+def test_execution_profiles_live_only_in_session():
+    """Sessions are made, and their execution profile (the keys of
+    ``session.BOUNDED_CONF``) is set, only in ``session.py``: a key
+    elsewhere in the package is only read (``conf.get``). Static:
+    no Spark session."""
+    from dbt_lakehouse_aws_spark.session import BOUNDED_CONF
+
+    offenders = {}
+    for p in sorted(PKG.rglob("*.py")):
+        if p == PKG / "session.py":
+            continue
+        text = p.read_text()
+        tree = ast.parse(text, filename=str(p))
+        reads = {
+            id(node.args[0])
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "get"
+            and node.args
+        }
+        found = sorted(
+            {
+                node.value
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Constant)
+                and node.value in BOUNDED_CONF
+                and id(node) not in reads
+            }
+        )
+        found += ["newSession("] if "newSession(" in text else []
+        if found:
+            offenders[str(p.relative_to(PKG))] = found
+    assert not offenders, f"execution profile set outside session.py: {offenders}"

@@ -128,8 +128,10 @@ def test_mart_caches_nothing_and_needs_no_range_exchange(results):
 
 
 def test_repeated_build_reuses_generated_code(spark, fixture_root, results):
-    """A second oc build finds its generated classes in the codegen
-    cache: one build's working set (~290 classes) fits in it."""
+    """A second oc build compiles few classes: the build runs
+    interpreted in the bounded session (a warm build compiles none,
+    see the next test), and a build with whole-stage code would find
+    its ~290 classes in the codegen cache."""
     source = spark._jvm.org.apache.spark.metrics.source
     metrics = getattr(getattr(source, "CodegenMetrics$"), "MODULE$")
     for mart in MART_OUTPUTS:
@@ -139,6 +141,72 @@ def test_repeated_build_reuses_generated_code(spark, fixture_root, results):
     for mart in MART_OUTPUTS:
         marts[mart].collect()
     assert metrics.METRIC_COMPILATION_TIME().getCount() - before < 50
+
+
+def _node_names(plan) -> list[str]:
+    """Names of every node of a physical plan, inner plans included."""
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        for kids in (node.children(), node.innerChildren()):
+            todo += [kids.apply(i) for i in range(kids.size())]
+    return names
+
+
+def test_build_runs_interpreted_in_three_jobs(spark, fixture_root, tmp_path):
+    """A warm oc build and its three mart writes run three Spark jobs
+    (one a mart write; the lineage cuts fill inside them), compile no class,
+    and plan with no whole-stage code, broadcast or adaptive node —
+    the bounded session's profile (``session.BOUNDED_CONF``)."""
+    sc = spark.sparkContext
+    metrics = getattr(
+        getattr(spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$"), "MODULE$"
+    )
+
+    def build(out):
+        marts = run_pipeline(OC, load_raw_sources(spark, str(fixture_root)))
+        for mart in MART_OUTPUTS:
+            marts[mart].write.parquet(str(out / mart))
+        return marts
+
+    build(tmp_path / "cold")
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    sc.setJobGroup("sgp_warm_build", "sgp_warm_build")
+    try:
+        marts = build(tmp_path / "warm")
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("sgp_warm_build")) == 3
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
+    for mart in MART_OUTPUTS:
+        names = _node_names(marts[mart]._jdf.queryExecution().executedPlan())
+        bad = [n for n in names if n.startswith(
+            ("WholeStageCodegen", "BroadcastExchange", "AdaptiveSparkPlan"))]
+        assert not bad, (mart, bad)
+
+
+def test_bounded_session_leaves_the_root_alone(spark, fixture_root):
+    """The build's conf lives in a child session: the root keeps its
+    own AQE, partitioning and codegen settings and still plans
+    adaptively."""
+    from pyspark.sql import functions as F
+
+    from dbt_lakehouse_aws_spark.session import BOUNDED_CONF, bounded_session
+
+    before = {k: spark.conf.get(k, None) for k in BOUNDED_CONF}
+    players = load_raw_sources(spark, str(fixture_root))["players"]
+    child = bounded_session(spark)
+    assert child is bounded_session(spark)
+    assert players.sparkSession is child
+    assert {k: child.conf.get(k) for k in BOUNDED_CONF} == BOUNDED_CONF
+    assert {k: spark.conf.get(k, None) for k in BOUNDED_CONF} == before
+    assert before["spark.sql.adaptive.enabled"] == "true"
+    assert before["spark.sql.codegen.factoryMode"] != "NO_CODEGEN"
+    assert before["spark.sql.shuffle.partitions"] != "1"
+    grouped = spark.range(100).groupBy(F.col("id") % 3).count()
+    assert grouped._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan"
 
 
 def test_percentiles_sign_flip(results, fixture_root):

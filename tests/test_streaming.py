@@ -766,3 +766,43 @@ def test_stream_quarantine_row_split_and_replay(spark, tmp_path):
         t.write(t.read(), mode="append", txn=(app, 0))
     n1, n2 = main.read().count(), quar.read().count()
     assert (n1, n2) == (1, 3)
+
+
+def test_stream_replace_where_replaces_each_batch_slice(spark, tmp_path):
+    """Each micro-batch replaces exactly the partitions it carries,
+    whatever the value: a quote, a backslash inside or at the end of
+    the value, or NULL. The ``z`` partition is never re-delivered."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbt_lakehouse_aws_spark.streaming.ingest import stream_replace_where_into_acid
+
+    src = tmp_path / "src"
+    src.mkdir()
+    parts = ["o'neil", "a\\b", "c\\", None]
+    batches = [[(p, 0) for p in [*parts, "z"]]] + [[(p, 1), (p, 2)] for p in parts]
+    for i, rows in enumerate(batches):
+        f = src / f"b{i}.parquet"
+        cols = {"d": pa.array([r[0] for r in rows], pa.string()), "v": [r[1] for r in rows]}
+        pq.write_table(pa.table(cols), f)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    stream = (
+        spark.readStream.schema("d string, v long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = stream_replace_where_into_acid(
+        stream,
+        table_path=str(tmp_path / "tbl"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        partition_col="d",
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    table = AcidTable(spark, str(tmp_path / "tbl"))
+    got = sorted((r["d"] or "", r["v"]) for r in table.read().collect())
+    want = sorted([(p or "", v) for p in parts for v in (1, 2)] + [("z", 0)])
+    assert got == want
+    assert len(table.history()) == len(batches)
